@@ -100,11 +100,15 @@ def get_spark(app_name: str = "env_event_stream_spark") -> SparkSession:
     # libhadoop, every permission-carrying file create in a streaming
     # checkpoint FORKS /bin/chmod (hundreds of fork+exec per
     # availableNow run, measured). Registering the scheme is inert by
-    # itself; only the streaming helpers' per-query ephemeral
-    # checkpoint dirs opt in (env-fenced there via
-    # SPARK_GRAFT_CKPT_FS), and only when this jar is on the
-    # classpath. Durable deployments never see it: no restorable path
-    # uses the scheme and fs.defaultFS is untouched.
+    # itself; only the catalog stream runner's per-query ephemeral
+    # checkpoint AND sink dirs opt in (streaming_queries._ckpt_path),
+    # and only when this jar is on the classpath — without it they
+    # fall back to plain local paths. Durable deployments never see
+    # it: no restorable path uses the scheme and fs.defaultFS is
+    # untouched. Only spark.driver.extraClassPath carries the jar:
+    # the master is always local[...], so executors run inside the
+    # driver JVM; a cluster master would also need it on
+    # spark.executor.extraClassPath.
     _nochmod_jar = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "jars",

@@ -10,6 +10,7 @@ execution path — not just its batch twin."""
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 from contextlib import contextmanager
 
@@ -67,7 +68,7 @@ def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # streaming result here is keyed state, independent of partition
 # count; on a real cluster this is the per-job knob you'd size to
 # state volume, not a semantics change.
-_STREAM_PARTS = os.environ.get("SPARK_GRAFT_STREAM_PARTS", "8")
+_STREAM_PARTS = "8"
 
 
 # Checkpoint-file checksums (Spark 4.1 default ON) for the
@@ -83,10 +84,8 @@ _STREAM_PARTS = os.environ.get("SPARK_GRAFT_STREAM_PARTS", "8")
 # stream-stream interval join: min-of-3 5.06 s -> 3.71 s with
 # checksums off, worst observed pass 15.1 -> 7.0 s (guide §1.2: the
 # per-commit barrier scales with stateful-operator x partition x
-# micro-batch count, at ANY scale). A production deployment with
-# long-lived, restorable checkpoints should keep the default:
-# SPARK_GRAFT_CKPT_CHECKSUM=true restores it.
-_CKPT_CHECKSUM = os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM", "false")
+# micro-batch count, at ANY scale).
+_CKPT_CHECKSUM = "false"
 
 # Checkpoint file-manager for the same ephemeral tmpdir checkpoints.
 # The default FileContextBasedCheckpointFileManager resolves every
@@ -101,42 +100,33 @@ _CKPT_CHECKSUM = os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM", "false")
 # (min-of-3 2.96 -> 1.92 s). The FileContext manager's advantage is
 # ATOMIC rename for checkpoints that must survive concurrent writers
 # and restarts; these checkpoints are per-query, single-writer and
-# never restored, so rename atomicity buys nothing here. Durable
-# production checkpoints should restore the default via
-# SPARK_GRAFT_CKPT_FM= (empty = Spark's default manager).
-_CKPT_FM = os.environ.get(
-    "SPARK_GRAFT_CKPT_FM",
+# never restored, so rename atomicity buys nothing here.
+_CKPT_FM = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
-    "FileSystemBasedCheckpointFileManager",
+    "FileSystemBasedCheckpointFileManager"
 )
 
-# Hadoop filesystem SCHEME for the same ephemeral checkpoint dirs
-# (r17, VERDICT r16 item 5 — the fork tail). Default `nochmod`: a
+# Hadoop filesystem SCHEME for the runner's ephemeral checkpoint AND
+# sink dirs (r17, VERDICT r16 item 5 — the fork tail): a
 # RawLocalFileSystem subclass (jvm/src, registered in session.py)
 # whose setPermission is a no-op — without libhadoop every
-# permission-carrying checkpoint file create forks /bin/chmod
-# (measured 661 forks per interval-join run; the subclass drops the
-# fork AND the LocalFileSystem .crc companion writes). Per-query,
-# single-writer, never-restored checkpoint dirs only — the sink
-# parquet output keeps the default filesystem. SPARK_GRAFT_CKPT_FS=
-# (empty) or `file` restores plain local paths for deployments that
-# want posix-faithful checkpoint permissions. If the scheme cannot
-# be loaded (plain/driversim sessions without the jar), the probe
-# below falls back to plain paths — never fails a query over it.
-_CKPT_FS = os.environ.get("SPARK_GRAFT_CKPT_FS", "nochmod")
+# permission-carrying file create forks /bin/chmod (measured 661
+# forks per interval-join run; the subclass drops the fork AND the
+# LocalFileSystem .crc companion writes). Both dirs are per-query,
+# single-writer tmpdirs written and read back only through Spark
+# jobs and never restored, so posix-faithful permissions and CRC
+# checks buy nothing there. If the scheme cannot be loaded
+# (plain/driversim sessions without the jar), the probe below falls
+# back to plain paths — never fails a query over it.
+_CKPT_FS = "nochmod"
 _ckpt_fs_ok: bool | None = None
 
 
 def _ckpt_path(spark: SparkSession, local_dir: str) -> str:
     """Return the path string for an ephemeral local checkpoint or
-    sink tmpdir: `<scheme>://<dir>` when the configured scheme
-    resolves in this session (probed once per process), else the
-    plain path. Sink dirs qualify for the same treatment as the
-    checkpoints: per-query tmpdirs written and read back exclusively
-    through these helpers' Spark jobs, never restored across runs."""
+    sink tmpdir: `<scheme>://<dir>` when the scheme resolves in this
+    session (probed once per process), else the plain path."""
     global _ckpt_fs_ok
-    if _CKPT_FS in ("", "file", "default"):
-        return local_dir
     if _ckpt_fs_ok is None:
         try:
             jvm = spark._jvm
@@ -147,15 +137,18 @@ def _ckpt_path(spark: SparkSession, local_dir: str) -> str:
             _ckpt_fs_ok = fs.getScheme() == _CKPT_FS
         except Exception:  # class not on classpath / scheme unmapped
             _ckpt_fs_ok = False
+    # unescaped on purpose: Hadoop's Path quotes space/%/# itself, so
+    # escaping here would encode them twice (tests/test_nochmod_fs.py)
     return f"{_CKPT_FS}://{local_dir}" if _ckpt_fs_ok else local_dir
 
 
 @contextmanager
 def _stream_shuffle_parts(spark: SparkSession):
-    """Scope spark.sql.shuffle.partitions to _STREAM_PARTS (and the
-    ephemeral-checkpoint checksum default, see _CKPT_CHECKSUM) for one
-    availableNow run (the confs are read at stream start; restored
-    after termination so batch queries keep the session defaults).
+    """Scope spark.sql.shuffle.partitions to _STREAM_PARTS, the
+    checkpoint checksum switch to _CKPT_CHECKSUM and the checkpoint
+    file manager to _CKPT_FM for one availableNow run (the confs are
+    read at stream start; restored after termination so batch queries
+    keep the session defaults).
 
     SERIAL-EXECUTION ASSUMPTION: this mutates session-global conf for
     the duration of the run — a batch query executed CONCURRENTLY on
@@ -177,19 +170,17 @@ def _stream_shuffle_parts(spark: SparkSession):
     spark.conf.set(key, _STREAM_PARTS)
     if old_ck is not None:
         spark.conf.set(ck, _CKPT_CHECKSUM)
-    if _CKPT_FM:
-        spark.conf.set(fm, _CKPT_FM)
+    spark.conf.set(fm, _CKPT_FM)
     try:
         yield
     finally:
         spark.conf.set(key, old)
         if old_ck is not None:
             spark.conf.set(ck, old_ck)
-        if _CKPT_FM:
-            if old_fm is None:
-                spark.conf.unset(fm)
-            else:
-                spark.conf.set(fm, old_fm)
+        if old_fm is None:
+            spark.conf.unset(fm)
+        else:
+            spark.conf.set(fm, old_fm)
 
 
 # prefix -> state-operator metrics from the LAST micro-batch of the
@@ -229,39 +220,84 @@ def _capture_state_progress(prefix: str, q) -> None:
         pass
 
 
-def _run_update_to_latest(out: DataFrame, prefix: str) -> str:
-    """Run an update-mode stateful stream to completion (availableNow),
-    appending each micro-batch's rows + epoch to a parquet sink — the
-    executors write, nothing reaches the driver. Returns the sink dir;
-    the caller recovers final state as the latest-epoch row per key
-    (_latest_epoch_rows)."""
-    ckpt = _ckpt_path(
-        out.sparkSession, tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")
-    )
-    sink_dir = _ckpt_path(
-        out.sparkSession, tempfile.mkdtemp(prefix=f"{prefix}_sink_")
-    )
+# output mode -> sink attached to a DataStreamWriter for a sink dir.
+_SINKS = {
+    # each micro-batch's rows plus their epoch are APPENDED by the
+    # executors — nothing reaches the driver; the caller recovers
+    # final state as the latest-epoch row per key (_latest_epoch_rows)
+    "update": lambda w, sink_dir: w.foreachBatch(
+        lambda df, epoch: df.withColumn("_epoch", F.lit(epoch))
+        .write.mode("append")
+        .parquet(sink_dir)
+    ),
+    # each epoch OVERWRITES the matview; the final epoch is the full
+    # answer. Complete-mode matviews are grid/register-sized BY DESIGN
+    # (O(types×days) counts, O(64) registers — the family's whole
+    # state argument), so the refresh writes one file instead of one
+    # per shuffle partition: fewer write tasks, and the finalize's
+    # read-back scans one footer (r16, guide §6 "small files hurt
+    # twice"; measured ~0.4 s/query at sf0.1). The update/append
+    # sinks keep natural partitioning — their output scales with
+    # keys/stream.
+    "complete": lambda w, sink_dir: w.foreachBatch(
+        lambda df, _epoch: df.coalesce(1)
+        .write.mode("overwrite")
+        .parquet(sink_dir)
+    ),
+    # the parquet file sink (joins, projections): its _spark_metadata
+    # log is what keeps the read-back to committed files
+    "append": lambda w, sink_dir: w.format("parquet").option("path", sink_dir),
+}
 
-    def sink(df: DataFrame, epoch: int) -> None:
-        df.withColumn("_epoch", F.lit(epoch)).write.mode("append").parquet(
-            sink_dir
-        )
 
-    with _stream_shuffle_parts(out.sparkSession):
-        q = (
-            out.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
+def _run_available_now(
+    mode: str, *streams: tuple[DataFrame, str]
+) -> list[str]:
+    """Run each (stream, prefix) to completion under an availableNow
+    trigger in output `mode` ("update", "complete" or "append", see
+    _SINKS) and return the parquet sink dirs in input order.
+
+    All streams start inside ONE _stream_shuffle_parts scope (the
+    confs are read at stream start) and are then awaited together:
+    start() is non-blocking, so independent streams overlap on the
+    scheduler and pay one stream-run wall instead of one each (guide
+    §2.6 "overlap independent jobs"). A stream still running after
+    300 s raises TimeoutError.
+
+    Tmpdir lifetime: each stream's checkpoint dir is removed once the
+    streams terminate, stop or time out. The sink dirs are NOT: the
+    callers read them lazily after this returns, and _GRID_SINKS
+    keeps one across queries."""
+    spark = streams[0][0].sparkSession
+    ckpts: list[str] = []
+    sinks: list[str] = []
+    running = []  # started, not yet seen to terminate: stopped below
+    try:
+        with _stream_shuffle_parts(spark):
+            for df, prefix in streams:
+                ckpts.append(tempfile.mkdtemp(prefix=f"{prefix}_ckpt_"))
+                sink_dir = tempfile.mkdtemp(prefix=f"{prefix}_sink_")
+                sinks.append(_ckpt_path(spark, sink_dir))
+                running.append(
+                    _SINKS[mode](df.writeStream, sinks[-1])
+                    .outputMode(mode)
+                    .option("checkpointLocation", _ckpt_path(spark, ckpts[-1]))
+                    .trigger(availableNow=True)
+                    .start()
+                )
+            for q, (_, prefix) in zip(list(running), streams):
+                if not q.awaitTermination(300):
+                    raise TimeoutError(
+                        f"{prefix}: availableNow stream did not finish in 300s"
+                    )
+                running.remove(q)
+                _capture_state_progress(prefix, q)
+    finally:
+        for q in running:
             q.stop()
-            raise TimeoutError(
-                f"{prefix}: availableNow stream did not finish in 300s"
-            )
-        _capture_state_progress(prefix, q)
-    return sink_dir
+        for d in ckpts:
+            shutil.rmtree(d, ignore_errors=True)
+    return sinks
 
 
 def _latest_epoch_rows(spark: SparkSession, sink_dir: str, key_col: str) -> DataFrame:
@@ -273,67 +309,6 @@ def _latest_epoch_rows(spark: SparkSession, sink_dir: str, key_col: str) -> Data
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
     )
-
-
-def _run_complete_overwrite(agg: DataFrame, prefix: str) -> str:
-    """Run a complete-mode streaming aggregation to completion
-    (availableNow), overwriting a parquet matview each epoch; the
-    final epoch is the full answer. Returns the sink dir."""
-    return _run_complete_overwrite_many([(agg, prefix)])[0]
-
-
-def _run_complete_overwrite_many(
-    aggs: list[tuple[DataFrame, str]],
-) -> list[str]:
-    """Run several INDEPENDENT complete-mode streams to completion,
-    started together and awaited together (guide §2.6 "overlap
-    independent jobs": actions are only sequential because the driver
-    calls them sequentially — two availableNow matview refreshes that
-    never exchange data pay one stream-run wall instead of two when
-    their micro-batches interleave on the scheduler). start() is
-    non-blocking, so no driver threads are needed; all streams begin
-    inside ONE _stream_shuffle_parts scope (the confs are read at
-    stream start). Returns sink dirs in input order."""
-    started: list[tuple[object, str, str]] = []
-
-    def make_sink(sink_dir: str):
-        def sink(df: DataFrame, _epoch: int) -> None:
-            # complete-mode matviews are grid/register-sized BY DESIGN
-            # (O(types×days) counts, O(64) registers — the family's
-            # whole state argument), so the refresh writes one file
-            # instead of one per shuffle partition: fewer write tasks,
-            # and the finalize's read-back scans one footer (r16,
-            # guide §6 "small files hurt twice"; measured ~0.4 s/query
-            # at sf0.1). The update/append sinks keep natural
-            # partitioning — their output scales with keys/stream.
-            df.coalesce(1).write.mode("overwrite").parquet(sink_dir)
-
-        return sink
-
-    with _stream_shuffle_parts(aggs[0][0].sparkSession):
-        for agg, prefix in aggs:
-            sink_dir = _ckpt_path(
-                agg.sparkSession, tempfile.mkdtemp(prefix=f"{prefix}_sink_")
-            )
-            ckpt = _ckpt_path(
-                agg.sparkSession, tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")
-            )
-            q = (
-                agg.writeStream.foreachBatch(make_sink(sink_dir))
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            started.append((q, prefix, sink_dir))
-        for q, prefix, _ in started:
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    f"{prefix}: availableNow stream did not finish in 300s"
-                )
-            _capture_state_progress(prefix, q)
-    return [sink_dir for _, _, sink_dir in started]
 
 
 @query("evt_live_fold_stream", _FOLD_ORACLE)
@@ -364,7 +339,7 @@ def evt_live_fold_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scale path: each micro-batch's state updates are APPENDED to a
     # parquet table by the executors — nothing is collected to the
     # driver; final per-key state = latest-epoch row per key.
-    sink_dir = _run_update_to_latest(out, "fold")
+    sink_dir = _run_available_now("update", (out, "fold"))[0]
     res = _latest_epoch_rows(spark, sink_dir, "user_id")
     return res.select(
         "user_id", "version", F.round("balance", 4).alias("balance")
@@ -409,7 +384,9 @@ def evt_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return spark.read.parquet(_run_complete_overwrite(agg, "tumble"))
+    return spark.read.parquet(
+        _run_available_now("complete", (agg, "tumble"))[0]
+    )
 
 
 @query("evt_fold_incremental", _FOLD_ORACLE)
@@ -542,7 +519,7 @@ def evt_stream_funnel_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiebreak_col="event_id",
     )
 
-    sink_dir = _run_update_to_latest(out, "funnel")
+    sink_dir = _run_available_now("update", (out, "funnel"))[0]
     res = _latest_epoch_rows(spark, sink_dir, "user_id")
     return res.select(
         "user_id",
@@ -625,7 +602,7 @@ def evt_stream_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         tiebreak_col="event_id",
     )
-    sink_dir = _run_update_to_latest(out, "funnelconv")
+    sink_dir = _run_available_now("update", (out, "funnelconv"))[0]
     u = _latest_epoch_rows(spark, sink_dir, "user_id")
     a = u.agg(
         F.count("*").cast("bigint").alias("n0"),
@@ -678,7 +655,7 @@ def evt_stream_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day")
         .agg(F.count("*").cast("bigint").alias("dau"))
     )
-    return spark.read.parquet(_run_complete_overwrite(agg, "dau"))
+    return spark.read.parquet(_run_available_now("complete", (agg, "dau"))[0])
 
 
 # ---------------------------------------------------------------------------
@@ -752,7 +729,7 @@ def evt_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator."""
     ev = _read_events_stream(spark, sf_dir).select("user_id", "ts", "value")
     return spark.read.parquet(
-        _run_complete_overwrite(session_stream_agg(ev), "sessw")
+        _run_available_now("complete", (session_stream_agg(ev), "sessw"))[0]
     )
 
 
@@ -863,7 +840,7 @@ def doc_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(tokens(F.col("text"))).alias("term")
     )
     out = stream_mg_candidates(st, n_buckets=8, capacity=phi_inverse)
-    sink_dir = _run_update_to_latest(out, "mg")
+    sink_dir = _run_available_now("update", (out, "mg"))[0]
 
     sink = spark.read.parquet(sink_dir)
     mx = sink.groupBy("bucket").agg(F.max("_epoch").alias("_epoch"))
@@ -991,7 +968,7 @@ def evt_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         + ", ".join(f"{f} bigint" for f in _ATTR_FIELDS),
         tiebreak_col="event_id",
     )
-    sink_dir = _run_update_to_latest(out, "attr")
+    sink_dir = _run_available_now("update", (out, "attr"))[0]
     res = _latest_epoch_rows(spark, sink_dir, "user_id")
 
     stack_args = ", ".join(
@@ -1087,7 +1064,7 @@ def evt_stream_scd2_current(spark: SparkSession, sf_dir: str) -> DataFrame:
         "valid_from timestamp, n_changes bigint",
         tiebreak_col="event_id",
     )
-    sink_dir = _run_update_to_latest(out, "scd2")
+    sink_dir = _run_available_now("update", (out, "scd2"))[0]
     res = _latest_epoch_rows(spark, sink_dir, "user_id")
     return res.select("user_id", "status", "valid_from", "n_changes")
 
@@ -1274,7 +1251,7 @@ def evt_stream_error_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cross-batch run continuation is pinned by a forced multi-batch
     pytest."""
     out = stream_error_burst(_read_events_stream(spark, sf_dir))
-    sink_dir = _run_update_to_latest(out, "errburst")
+    sink_dir = _run_available_now("update", (out, "errburst"))[0]
     res = _latest_epoch_rows(spark, sink_dir, "ukey")
     sp = F.split(F.col("ukey"), "\\|")
     return res.where(F.col("max_run_len") >= 2).select(
@@ -1498,7 +1475,7 @@ def evt_stream_cep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold == batch pointer automaton is fuzz-pinned, and cross-batch
     attempt continuation is pinned by a forced multi-batch pytest."""
     out = stream_cep_funnel(_read_events_stream(spark, sf_dir))
-    sink_dir = _run_update_to_latest(out, "cepfunnel")
+    sink_dir = _run_available_now("update", (out, "cepfunnel"))[0]
     res = _latest_epoch_rows(spark, sink_dir, "ukey")
     sp = F.split(F.col("ukey"), "\\|")
     return res.where(F.col("n_matches") >= 1).select(
@@ -1546,9 +1523,9 @@ def _hw_grid_sink(spark: SparkSession, sf_dir: str) -> str:
     which drives its own stream."""
     if sf_dir not in _GRID_SINKS:
         ev = _read_events_stream(spark, sf_dir)
-        _GRID_SINKS[sf_dir] = _run_complete_overwrite(
-            hw_grid_stream_agg(ev), "hwgrid"
-        )
+        _GRID_SINKS[sf_dir] = _run_available_now(
+            "complete", (hw_grid_stream_agg(ev), "hwgrid")
+        )[0]
     return _GRID_SINKS[sf_dir]
 
 
@@ -1705,7 +1682,9 @@ def evt_stream_slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _read_events_stream(spark, sf_dir)
     agg = slo_grid_agg(ev)
-    grid = spark.read.parquet(_run_complete_overwrite(agg, "slogrid"))
+    grid = spark.read.parquet(
+        _run_available_now("complete", (agg, "slogrid"))[0]
+    )
     return slo_finalize_hourly(grid)
 
 
@@ -1744,7 +1723,9 @@ def evt_stream_seq_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _read_events_stream(spark, sf_dir)
     agg = seq_grid_agg(ev)
-    grid = spark.read.parquet(_run_complete_overwrite(agg, "seqgrid"))
+    grid = spark.read.parquet(
+        _run_available_now("complete", (agg, "seqgrid"))[0]
+    )
     return seq_pair_finalize(grid)
 
 
@@ -1780,7 +1761,7 @@ def evt_stream_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _read_events_stream(spark, sf_dir)
     seg = spark.read.parquet(
-        _run_complete_overwrite(seg_manifest_agg(ev), "segman")
+        _run_available_now("complete", (seg_manifest_agg(ev), "segman"))[0]
     )
     return compaction_finalize(seg)
 
@@ -1932,7 +1913,7 @@ def evt_stream_hist_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev = _read_events_stream(spark, sf_dir).select("event_type", "value")
     agg = hist_bin_stream_agg(ev, mm)
-    h = spark.read.parquet(_run_complete_overwrite(agg, "histp95"))
+    h = spark.read.parquet(_run_available_now("complete", (agg, "histp95"))[0])
     return hist_p95_finalize(h, mm)
 
 
@@ -1972,7 +1953,7 @@ def evt_stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     regs = hll_registers(
         hll_project(ev, F.col("user_id"), ["event_type"]), ["event_type"]
     )
-    live = spark.read.parquet(_run_complete_overwrite(regs, "hll"))
+    live = spark.read.parquet(_run_available_now("complete", (regs, "hll"))[0])
     est = hll_estimate(live, ["event_type"])
     ex = (
         load_table(spark, sf_dir, "events")
@@ -2136,7 +2117,7 @@ def evt_stream_cms_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 'streaming equals batch' cannot drift at the source level.
     ev = _read_events_stream(spark, sf_dir).select("user_id")
     agg = cms_cells(ev, F.col("user_id"))
-    cells = spark.read.parquet(_run_complete_overwrite(agg, "cms"))
+    cells = spark.read.parquet(_run_available_now("complete", (agg, "cms"))[0])
     ex = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -2150,34 +2131,6 @@ def evt_stream_cms_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (13th genuinely-streaming entry): the one streaming feature that
 # was previously verified only by pytest.
 # ---------------------------------------------------------------------------
-
-
-def _run_append(out: DataFrame, prefix: str) -> str:
-    """Run an append-mode stream (joins, projections) to completion
-    (availableNow) into a parquet sink; executors write, nothing
-    reaches the driver."""
-    ckpt = _ckpt_path(
-        out.sparkSession, tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")
-    )
-    sink_dir = _ckpt_path(
-        out.sparkSession, tempfile.mkdtemp(prefix=f"{prefix}_sink_")
-    )
-    with _stream_shuffle_parts(out.sparkSession):
-        q = (
-            out.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", sink_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                f"{prefix}: availableNow stream did not finish in 300s"
-            )
-        _capture_state_progress(prefix, q)
-    return sink_dir
 
 
 @query(
@@ -2230,7 +2183,9 @@ def evt_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("l.user_id").alias("user_id"), "pts", "pid", "vts"
     )
-    pairs = spark.read.parquet(_run_append(joined, "ivj"))
+    pairs = spark.read.parquet(
+        _run_available_now("append", (joined, "ivj"))[0]
+    )
     return pairs.groupBy(
         F.col("pts").cast("date").cast("string").alias("day")
     ).agg(
@@ -2279,7 +2234,9 @@ def evt_stream_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     regs = hll_registers(
         hll_project(ev, F.col("user_id"), ["day"]), ["day"]
     )
-    dregs = spark.read.parquet(_run_complete_overwrite(regs, "wau"))
+    dregs = spark.read.parquet(
+        _run_available_now("complete", (regs, "wau"))[0]
+    )
 
     from env_event_stream_spark.advanced_queries import _rolling_wau_readout
 
@@ -2394,7 +2351,7 @@ def evt_stream_kmv_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keyed = ev.select("event_type", kmv_hash(key).alias("h"))
     out = kmv_stream_state(keyed)
-    sink_dir = _run_update_to_latest(out, "kmv")
+    sink_dir = _run_available_now("update", (out, "kmv"))[0]
     live = _latest_epoch_rows(spark, sink_dir, "event_type").select(
         "event_type", "sk_n", "h_k"
     )
@@ -2461,23 +2418,20 @@ def join_stream_size_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the two sides are independent matviews that never exchange data
     # while streaming — start both availableNow runs together and pay
     # one stream-run wall, not two (guide §2.6; r16)
-    sink_a, sink_b = _run_complete_overwrite_many(
-        [
-            (
-                cms_cells(
-                    ev.where(F.col("event_type") == "purchase"),
-                    F.col("user_id"),
-                ),
-                "cmsa",
+    sink_a, sink_b = _run_available_now(
+        "complete",
+        (
+            cms_cells(
+                ev.where(F.col("event_type") == "purchase"), F.col("user_id")
             ),
-            (
-                cms_cells(
-                    ev.where(F.col("event_type") == "view"),
-                    F.col("user_id"),
-                ),
-                "cmsb",
+            "cmsa",
+        ),
+        (
+            cms_cells(
+                ev.where(F.col("event_type") == "view"), F.col("user_id")
             ),
-        ]
+            "cmsb",
+        ),
     )
     ca = spark.read.parquet(sink_a).withColumnRenamed("cnt", "ca")
     cb = spark.read.parquet(sink_b).withColumnRenamed("cnt", "cb")
@@ -2610,7 +2564,7 @@ def evt_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     out = stream_transitions(_read_events_stream(spark, sf_dir))
-    sink_dir = _run_update_to_latest(out, "transitions")
+    sink_dir = _run_available_now("update", (out, "transitions"))[0]
     res = _latest_epoch_rows(spark, sink_dir, "bkey")
     sp = F.split(F.col("pair"), "\\|")
     counts = (
@@ -2765,7 +2719,7 @@ def evt_stream_priority_sample(
     from env_event_stream_spark.operators.relational import top_k
 
     out = stream_priority_sample(_read_events_stream(spark, sf_dir))
-    sink_dir = _run_update_to_latest(out, "priosample")
+    sink_dir = _run_available_now("update", (out, "priosample"))[0]
     raw = spark.read.parquet(sink_dir)
     latest = raw.groupBy("bucket").agg(F.max("_epoch").alias("_epoch"))
     cand = raw.join(latest, ["bucket", "_epoch"])

@@ -57,12 +57,43 @@ def test_nochmod_parquet_roundtrip_is_byte_faithful(spark):
     assert not [n for n in names if n.endswith(".crc")], names
 
 
-def test_ckpt_path_resolves_or_falls_back(spark):
+def test_ckpt_path_resolves_or_falls_back(spark, monkeypatch):
     d = tempfile.mkdtemp(prefix="nochmod_cp_")
     got = SQ._ckpt_path(spark, d)
-    if SQ._CKPT_FS in ("", "file", "default") or not _scheme_available(
-        spark
-    ):
-        assert got == d  # plain path: the query must still run
+    if _scheme_available(spark):
+        assert got == f"nochmod://{d}"
     else:
-        assert got == f"{SQ._CKPT_FS}://{d}"
+        assert got == d  # plain path: the query must still run
+    # a scheme the session cannot load (the jar-absent case) falls
+    # back to the plain path instead of failing the query
+    monkeypatch.setattr(SQ, "_CKPT_FS", "nosuchfs")
+    monkeypatch.setattr(SQ, "_ckpt_fs_ok", None)
+    assert SQ._ckpt_path(spark, d) == d
+
+
+def test_runner_under_tmpdir_with_uri_special_chars(
+    spark, tmp_path, monkeypatch
+):
+    """The `<scheme>://<dir>` concat is left unescaped: Hadoop's Path
+    quotes a space, `%` and `#` itself, so the URI resolves back to
+    the exact local dir. A TMPDIR holding all three must run a stream
+    through the runner and write its sink at that very path."""
+    weird = tmp_path / "tmp a b%41#x"
+    weird.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(weird))
+    src = str(tmp_path / "src")
+    spark.range(30).selectExpr("id", "id % 3 AS k").write.parquet(src)
+    ev = spark.readStream.schema("id bigint, k bigint").parquet(src)
+
+    (sink,) = SQ._run_available_now("append", (ev, "weird"))
+
+    (local,) = [str(p) for p in weird.glob("weird_sink_*")]
+    if _scheme_available(spark):
+        assert sink == f"nochmod://{local}"
+    else:
+        assert sink == local
+    assert "_spark_metadata" in os.listdir(local)
+    assert sorted(map(tuple, spark.read.parquet(sink).collect())) == [
+        (i, i % 3) for i in range(30)
+    ]
+    assert list(weird.glob("weird_ckpt_*")) == []

@@ -376,7 +376,7 @@ def test_session_window_merges_across_micro_batches(spark, sf_dir, tmp_path):
     the streaming complete-mode result to equal the batch
     session_window answer row-for-row."""
     from env_event_stream_spark.streaming_queries import (
-        _run_complete_overwrite,
+        _run_available_now,
         session_stream_agg,
     )
     from env_event_stream_spark.tables import load_table
@@ -392,9 +392,10 @@ def test_session_window_merges_across_micro_batches(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    got = spark.read.parquet(
-        _run_complete_overwrite(session_stream_agg(stream), "sessw_mb")
+    (sink,) = _run_available_now(
+        "complete", (session_stream_agg(stream), "sessw_mb")
     )
+    got = spark.read.parquet(sink)
 
     batch = (
         ev.groupBy(F.session_window("ts", "30 minutes"), "user_id")
@@ -427,7 +428,7 @@ def test_stream_mg_superset_across_micro_batches(spark, sf_dir, tmp_path):
     full-groupBy answer row-for-row."""
     from env_event_stream_spark.functions.text import tokens
     from env_event_stream_spark.streaming_queries import (
-        _run_update_to_latest,
+        _run_available_now,
         stream_mg_candidates,
     )
     from env_event_stream_spark.tables import load_table
@@ -444,7 +445,8 @@ def test_stream_mg_superset_across_micro_batches(spark, sf_dir, tmp_path):
     )
     toks = stream.select(F.explode(tokens(F.col("text"))).alias("term"))
     out = stream_mg_candidates(toks, n_buckets=8, capacity=phi_inverse)
-    sink = spark.read.parquet(_run_update_to_latest(out, "mg_mb"))
+    (sink_dir,) = _run_available_now("update", (out, "mg_mb"))
+    sink = spark.read.parquet(sink_dir)
     mx = sink.groupBy("bucket").agg(F.max("_epoch").alias("_epoch"))
     cand = set(
         r.term
@@ -552,7 +554,7 @@ def test_stream_hist_counts_merge_across_micro_batches(spark, sf_dir, tmp_path):
     histogram bit-for-bit, and the finalized p95 to match the batch
     finalization of the batch histogram."""
     from env_event_stream_spark.streaming_queries import (
-        _run_complete_overwrite,
+        _run_available_now,
         hist_bin_stream_agg,
         hist_p95_finalize,
     )
@@ -572,8 +574,8 @@ def test_stream_hist_counts_merge_across_micro_batches(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sink = _run_complete_overwrite(
-        hist_bin_stream_agg(stream, mm), "histp95_mb"
+    (sink,) = _run_available_now(
+        "complete", (hist_bin_stream_agg(stream, mm), "histp95_mb")
     )
     got_hist = sorted(map(tuple, spark.read.parquet(sink).collect()))
     batch_hist_df = hist_bin_stream_agg(ev, mm)
@@ -597,7 +599,7 @@ def test_stream_hll_registers_match_batch_across_micro_batches(
         hll_project,
         hll_registers,
     )
-    from env_event_stream_spark.streaming_queries import _run_complete_overwrite
+    from env_event_stream_spark.streaming_queries import _run_available_now
     from env_event_stream_spark.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
@@ -609,12 +611,15 @@ def test_stream_hll_registers_match_batch_across_micro_batches(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sink = _run_complete_overwrite(
-        hll_registers(
-            hll_project(stream, F.col("user_id"), ["event_type"]),
-            ["event_type"],
+    (sink,) = _run_available_now(
+        "complete",
+        (
+            hll_registers(
+                hll_project(stream, F.col("user_id"), ["event_type"]),
+                ["event_type"],
+            ),
+            "hll_mb",
         ),
-        "hll_mb",
     )
     got = sorted(map(tuple, spark.read.parquet(sink).collect()))
     want = sorted(
@@ -637,7 +642,7 @@ def test_stream_cms_cells_match_batch_across_micro_batches(
     the batch sketch (sum is arrival-order and batch-boundary
     independent)."""
     from env_event_stream_spark.operators.sketches import cms_cells
-    from env_event_stream_spark.streaming_queries import _run_complete_overwrite
+    from env_event_stream_spark.streaming_queries import _run_available_now
     from env_event_stream_spark.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select("user_id")
@@ -649,8 +654,8 @@ def test_stream_cms_cells_match_batch_across_micro_batches(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sink = _run_complete_overwrite(
-        cms_cells(stream, F.col("user_id")), "cms_mb"
+    (sink,) = _run_available_now(
+        "complete", (cms_cells(stream, F.col("user_id")), "cms_mb")
     )
     got = sorted(map(tuple, spark.read.parquet(sink).collect()))
     want = sorted(map(tuple, cms_cells(ev, F.col("user_id")).collect()))
@@ -668,7 +673,7 @@ def test_stream_interval_join_matches_batch_across_micro_batches(
     query keeps watermarks, which a single availableNow batch never
     triggers."""
     from env_event_stream_spark.streaming.joins import interval_join
-    from env_event_stream_spark.streaming_queries import _run_append
+    from env_event_stream_spark.streaming_queries import _run_available_now
     from env_event_stream_spark.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -693,9 +698,8 @@ def test_stream_interval_join_matches_batch_across_micro_batches(
             p, v, keys=["user_id"], left_ts="pts", right_ts="vts"
         ).select(F.col("l.user_id").alias("user_id"), "pts", "pid", "vts")
 
-    got = sorted(
-        map(tuple, spark.read.parquet(_run_append(shape(stream), "ivj_mb")).collect())
-    )
+    (sink,) = _run_available_now("append", (shape(stream), "ivj_mb"))
+    got = sorted(map(tuple, spark.read.parquet(sink).collect()))
     want = sorted(map(tuple, shape(ev).collect()))
     assert got == want and len(got) > 0
 
@@ -711,7 +715,7 @@ def test_stream_daily_hll_registers_match_batch_across_micro_batches(
         hll_project,
         hll_registers,
     )
-    from env_event_stream_spark.streaming_queries import _run_complete_overwrite
+    from env_event_stream_spark.streaming_queries import _run_available_now
     from env_event_stream_spark.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").selectExpr(
@@ -724,9 +728,14 @@ def test_stream_daily_hll_registers_match_batch_across_micro_batches(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sink = _run_complete_overwrite(
-        hll_registers(hll_project(stream, F.col("user_id"), ["day"]), ["day"]),
-        "wau_mb",
+    (sink,) = _run_available_now(
+        "complete",
+        (
+            hll_registers(
+                hll_project(stream, F.col("user_id"), ["day"]), ["day"]
+            ),
+            "wau_mb",
+        ),
     )
     got = sorted(map(tuple, spark.read.parquet(sink).collect()))
     want = sorted(
@@ -753,7 +762,7 @@ def test_stream_kmv_state_matches_batch_across_micro_batches(
     from env_event_stream_spark.operators.sketches import KMV_K, kmv_hash
     from env_event_stream_spark.streaming_queries import (
         _latest_epoch_rows,
-        _run_update_to_latest,
+        _run_available_now,
         kmv_stream_state,
     )
     from env_event_stream_spark.tables import load_table
@@ -773,7 +782,9 @@ def test_stream_kmv_state_matches_batch_across_micro_batches(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sink = _run_update_to_latest(kmv_stream_state(stream), "kmv_mb")
+    (sink,) = _run_available_now(
+        "update", (kmv_stream_state(stream), "kmv_mb")
+    )
     live = {
         r.event_type: (r.sk_n, r.h_k)
         for r in _latest_epoch_rows(spark, sink, "event_type")

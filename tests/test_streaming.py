@@ -3,6 +3,10 @@ checkpointed resume, watermarked windows."""
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -228,14 +232,18 @@ def test_topic_scan_prunes_partitions(pbroker):
 
 
 def test_stream_shuffle_parts_scoped_and_restored(spark, sf_dir):
-    """The availableNow runners scope shuffle partitions to the
-    streaming-state size and MUST restore the session default after
-    — a leaked override would silently shrink every later batch
-    query's parallelism."""
+    """The availableNow runner scopes shuffle partitions, checkpoint
+    checksums and the checkpoint file manager for its run and MUST
+    restore the session values after — a leaked override would
+    silently shrink every later batch query's parallelism (or change
+    how a later durable stream checkpoints). An unset file manager
+    must be unset again, not pinned to the default class."""
     from env_event_stream_spark import streaming_queries as SQ
 
     key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
+    ck = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    fm = "spark.sql.streaming.checkpointFileManagerClass"
+    before = {k: spark.conf.get(k, None) for k in (key, ck, fm)}
     seen = {}
 
     from contextlib import contextmanager
@@ -245,7 +253,7 @@ def test_stream_shuffle_parts_scoped_and_restored(spark, sf_dir):
     @contextmanager
     def spy(s):
         with orig(s):
-            seen["during"] = s.conf.get(key)
+            seen.update({k: s.conf.get(k, None) for k in (key, ck, fm)})
             yield
 
     SQ._stream_shuffle_parts = spy
@@ -253,5 +261,58 @@ def test_stream_shuffle_parts_scoped_and_restored(spark, sf_dir):
         SQ.evt_stream_tumbling_counts(spark, sf_dir).count()
     finally:
         SQ._stream_shuffle_parts = orig
-    assert seen["during"] == SQ._STREAM_PARTS
-    assert spark.conf.get(key) == before
+    assert seen == {
+        key: SQ._STREAM_PARTS,
+        ck: SQ._CKPT_CHECKSUM,
+        fm: SQ._CKPT_FM,
+    }
+    assert {k: spark.conf.get(k, None) for k in (key, ck, fm)} == before
+
+
+def _small_stream(spark, tmp_path):
+    src = str(tmp_path / "src")
+    spark.range(40).selectExpr("id % 4 AS k", "id").write.parquet(src)
+    return spark.readStream.schema("k bigint, id bigint").parquet(src)
+
+
+def _ckpt_dirs(prefix):
+    return glob.glob(os.path.join(tempfile.gettempdir(), f"{prefix}_ckpt_*"))
+
+
+def test_available_now_runner_removes_checkpoint_dirs(spark, tmp_path):
+    """The runner deletes each stream's checkpoint tmpdir once the run
+    ends and keeps the sink dirs, which callers read after it
+    returns."""
+    from env_event_stream_spark.streaming_queries import _run_available_now
+
+    ev = _small_stream(spark, tmp_path)
+    sinks = _run_available_now(
+        "complete",
+        (ev.groupBy("k").count(), "leakprobe_a"),
+        (ev.groupBy("k").agg(F.sum("id").alias("s")), "leakprobe_b"),
+    )
+    assert _ckpt_dirs("leakprobe_a") + _ckpt_dirs("leakprobe_b") == []
+    assert sorted(map(tuple, spark.read.parquet(sinks[0]).collect())) == [
+        (k, 10) for k in range(4)
+    ]
+    assert spark.read.parquet(sinks[1]).count() == 4
+
+
+def test_available_now_runner_timeout_stops_and_cleans(
+    spark, tmp_path, monkeypatch
+):
+    """Fault injection: a stream that does not finish in time raises
+    TimeoutError, is stopped, and its checkpoint dir is removed."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from env_event_stream_spark.streaming_queries import _run_available_now
+
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+    )
+    ev = _small_stream(spark, tmp_path)
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError, match="leakprobe_t"):
+        _run_available_now("update", (ev, "leakprobe_t"))
+    assert _ckpt_dirs("leakprobe_t") == []
+    assert {q.id for q in spark.streams.active} == active
