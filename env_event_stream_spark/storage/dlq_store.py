@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from env_event_stream_spark.storage.event_store import EVENT_SCHEMA
+from env_event_stream_spark.storage.parquet_append import append_rows
 
 DLQ_SCHEMA = T.StructType(
     [
@@ -167,7 +168,9 @@ class ParquetDeadLetterQueue:
     compacted by a MERGE-style rewrite keyed on ``event.id`` — we keep
     the latest attempt per id (the upsert of the Postgres backend,
     reference src/deadletter.ts:320-327) by versioning rows and taking
-    max(attempts) per id at read time, with an explicit ``compact()``."""
+    max(attempts) per id at read time, with an explicit ``compact()``.
+    Appends (``add_event(s)``, a failed ``retry_event``) are written by
+    the driver, one file per call, no Spark job."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -182,8 +185,8 @@ class ParquetDeadLetterQueue:
         return False
 
     def _append(self, rows: list[tuple]) -> None:
-        df = self.spark.createDataFrame(rows, schema=DLQ_SCHEMA)
-        df.write.mode("append").parquet(self.path)
+        """Driver-side append of one file, no Spark job (append_rows)."""
+        append_rows(self.spark, DLQ_SCHEMA, rows, self.path)
 
     def add_event(self, event: Row, error: str, subscription: str) -> None:
         self.add_events([(event, error, subscription)])

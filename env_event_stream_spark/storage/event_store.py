@@ -2,9 +2,13 @@
 
 Reference parity (SURVEY.md §2.1):
 - ``save_event``/``save_events`` = InMemory/File/Postgres ``saveEvent``
-  (reference src/persistence.ts:14-23, :141-145, :299-322) — here a
-  columnar append, vectorized, one commit for a whole batch (the
-  reference loops one event at a time).
+  (reference src/persistence.ts:14-23, :141-145, :299-322). Two
+  writers: rows already in driver memory (a publish, a
+  ``publish_many`` batch) are appended by the driver itself, one
+  parquet file per topic per call and no Spark job
+  (storage/parquet_append.py); a DataFrame (a bulk load) goes through
+  Spark's partitioned writer. The reference appends one event at a
+  time; a batch here is one file per topic.
 - ``get_events``            = ``getEvents``  (src/persistence.ts:28-69)
 - ``delete_events``         = ``deleteEvents`` retention
   (src/persistence.ts:74-93) — implemented as partition-pruned rewrite
@@ -36,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from env_event_stream_spark.operators.event_queries import get_events as _get_events_df
+from env_event_stream_spark.storage.parquet_append import append_rows, partition_dir
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -167,7 +172,11 @@ class InMemoryEventStore:
 class ParquetEventStore:
     """System-of-record backend: parquet partitioned by topic.
 
-    Append = vectorized columnar write; scan = pruned parquet read;
+    Append has two writers. Rows held by the driver (``save_event``,
+    a list to ``save_events``) are written by the driver: one file per
+    topic per call, no Spark job (``append_rows``). A DataFrame goes
+    through Spark's partitioned writer. Both give the same layout,
+    values and ``.crc`` sidecars. Scan = pruned parquet read;
     retention delete = partition-local rewrite keeping ``ts >= cutoff``
     (the parquet analog of the Postgres ``DELETE WHERE topic=$1 AND
     timestamp<$2``, reference src/persistence.ts:407-425)."""
@@ -177,12 +186,14 @@ class ParquetEventStore:
         self.path = path
 
     def initialize(self) -> None:
-        """DDL bootstrap (reference src/persistence.ts:260-294): write
-        an empty partitioned table if absent. Indexes have no parquet
-        analog — partitioning + min/max stats play that role."""
-        if not os.path.exists(self.path):
-            empty = self.spark.createDataFrame([], schema=EVENT_SCHEMA)
-            empty.write.mode("overwrite").partitionBy("topic").parquet(self.path)
+        """DDL bootstrap (reference src/persistence.ts:260-294): create
+        the table directory, so a stream over it can start before the
+        first event. Indexes have no parquet analog — partitioning +
+        min/max stats play that role."""
+        os.makedirs(self.path, exist_ok=True)
+
+    def _part_dir(self, topic: str) -> str:
+        return os.path.join(self.path, partition_dir(self.spark, "topic", topic))
 
     def _exists(self) -> bool:
         if not os.path.isdir(self.path):
@@ -194,13 +205,11 @@ class ParquetEventStore:
 
     def save_events(self, events: Sequence[Row] | DataFrame) -> int:
         if isinstance(events, DataFrame):
-            df = events
-            n = df.count()
-        else:
-            df = self.spark.createDataFrame(list(events), schema=EVENT_SCHEMA)
-            n = len(events)
-        df.write.mode("append").partitionBy("topic").parquet(self.path)
-        return n
+            n = events.count()
+            events.write.mode("append").partitionBy("topic").parquet(self.path)
+            return n
+        append_rows(self.spark, EVENT_SCHEMA, events, self.path, partition_by="topic")
+        return len(events)
 
     def save_event(self, event: Row) -> None:
         self.save_events([event])
@@ -232,7 +241,7 @@ class ParquetEventStore:
         one-JSON-per-event store (src/persistence.ts:141-145), which
         at 100 TB destroys scan throughput (footer reads dominate).
         Run periodically alongside retention. Returns files removed."""
-        part_dir = os.path.join(self.path, f"topic={topic}")
+        part_dir = self._part_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
         before = sum(
@@ -253,7 +262,7 @@ class ParquetEventStore:
         delete, no scan of other topics (reference src/broker.ts:55-57
         only forgets the Topic object; dropping its stored rows is the
         documented upgrade)."""
-        part_dir = os.path.join(self.path, f"topic={topic}")
+        part_dir = self._part_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
         n = self.to_df().where(F.col("topic") == topic).count()
@@ -267,7 +276,7 @@ class ParquetEventStore:
 
     def delete_events(self, topic: str, before_ts) -> int:
         """Retention: rewrite only the affected topic partition."""
-        part_dir = os.path.join(self.path, f"topic={topic}")
+        part_dir = self._part_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
         full = self.to_df().where(F.col("topic") == topic).cache()
@@ -290,7 +299,7 @@ def _erase_matching_parquet(store: "ParquetEventStore", topic: str,
     NOT matching ``predicate`` (a Column over the event schema). The
     GDPR/right-to-erasure primitive — same rewrite shape as retention
     delete_events, arbitrary predicate."""
-    part_dir = os.path.join(store.path, f"topic={topic}")
+    part_dir = store._part_dir(topic)
     if not os.path.isdir(part_dir):
         return 0
     full = store.to_df().where(F.col("topic") == topic).cache()

@@ -158,29 +158,24 @@ def _stream_shuffle_parts(spark: SparkSession):
     bench execute strictly serially; if a parallel harness ever
     arrives, move this override to a per-query cloned session
     (spark.newSession()) instead of the shared conf."""
-    key = "spark.sql.shuffle.partitions"
-    ck = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    fm = "spark.sql.streaming.checkpointFileManagerClass"
-    old = spark.conf.get(key)
-    try:
-        old_ck = spark.conf.get(ck)
-    except Exception:  # pre-4.1 Spark: conf absent, nothing to scope
-        old_ck = None
-    old_fm = spark.conf.get(fm, None)
-    spark.conf.set(key, _STREAM_PARTS)
-    if old_ck is not None:
-        spark.conf.set(ck, _CKPT_CHECKSUM)
-    spark.conf.set(fm, _CKPT_FM)
+    scoped = {
+        "spark.sql.shuffle.partitions": _STREAM_PARTS,
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled": _CKPT_CHECKSUM,
+        "spark.sql.streaming.checkpointFileManagerClass": _CKPT_FM,
+    }
+    # explicit values only (None = unset): reading a conf's default and
+    # setting it back would pin it where it was unset
+    old = {k: spark.conf.get(k, None) for k in scoped}
+    for k, v in scoped.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set(key, old)
-        if old_ck is not None:
-            spark.conf.set(ck, old_ck)
-        if old_fm is None:
-            spark.conf.unset(fm)
-        else:
-            spark.conf.set(fm, old_fm)
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 # prefix -> state-operator metrics from the LAST micro-batch of the
