@@ -19,6 +19,7 @@ applyInPandasWithState in streaming/subscription.py.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from typing import Any
 
@@ -26,6 +27,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from env_event_stream_spark.storage.rewrite import drop_rows, recover
 
 FoldFn = Callable[[dict[str, Any], dict[str, Any]], dict[str, Any]]
 
@@ -198,24 +201,11 @@ def forget_key_in_snapshot(
     """Right-to-erasure companion for snapshot tables: rewrite the
     snapshot parquet without the given key (snapshots hold the FOLDED
     per-subject state, so erasing the event history alone leaves a
-    derived copy behind). Returns rows removed."""
-    import os
-
+    derived copy behind). Recovers a crashed swap first (``recover``).
+    Returns rows removed."""
+    recover(path)
     if not os.path.isdir(path):
         return 0
-    df = spark.read.parquet(path).cache()
-    try:
-        total = df.count()
-        keep = df.where(~F.col(key_col).eqNullSafe(F.lit(value)))
-        kept = keep.count()
-        if kept == total:
-            return 0
-        tmp = path + ".tmp"
-        keep.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        shutil.rmtree(path)
-        os.rename(tmp, path)
-        return total - kept
-    finally:
-        df.unpersist()
+    return drop_rows(
+        spark.read.parquet(path), path, F.col(key_col).eqNullSafe(F.lit(value))
+    )

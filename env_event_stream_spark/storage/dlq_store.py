@@ -20,8 +20,6 @@ Semantics ported:
 from __future__ import annotations
 
 import datetime as _dt
-import os
-import shutil
 from collections.abc import Callable
 from typing import Any
 
@@ -31,6 +29,7 @@ from pyspark.sql import types as T
 
 from env_event_stream_spark.storage.event_store import EVENT_SCHEMA
 from env_event_stream_spark.storage.parquet_append import append_rows
+from env_event_stream_spark.storage.rewrite import drop_rows, has_parquet, recover, replace_dir
 
 DLQ_SCHEMA = T.StructType(
     [
@@ -136,11 +135,8 @@ class InMemoryDeadLetterQueue:
         try:
             ok = handler(r["event"])
         except Exception as exc:  # hard failure: new error
-            r["attempts"] += 1
-            r["error"] = str(exc)
-            r["timestamp"] = _now()
-            return False
-        if ok is False:  # soft failure: error unchanged
+            ok, r["error"] = False, str(exc)
+        if ok is False:  # soft failure keeps the error
             r["attempts"] += 1
             r["timestamp"] = _now()
             return False
@@ -155,8 +151,13 @@ class InMemoryDeadLetterQueue:
 
     def delete_topic(self, topic: str) -> int:
         """Drop all dead letters for a topic (broker deleteTopic)."""
+        return self.delete_matching(F.col("event.topic") == topic)
+
+    def delete_matching(self, predicate) -> int:
+        """Drop the entries matching a Column predicate over the DLQ
+        schema. Returns entries removed."""
         doomed = [
-            k for k, r in self._entries.items() if r["event"].topic == topic
+            r.id for r in self.to_df().where(predicate).select("event.id").collect()
         ]
         for k in doomed:
             del self._entries[k]
@@ -170,19 +171,15 @@ class ParquetDeadLetterQueue:
     reference src/deadletter.ts:320-327) by versioning rows and taking
     max(attempts) per id at read time, with an explicit ``compact()``.
     Appends (``add_event(s)``, a failed ``retry_event``) are written by
-    the driver, one file per call, no Spark job."""
+    the driver, one file per call, no Spark job. Removals and
+    ``compact`` swap the dir via ``replace_dir``; the constructor's
+    ``recover`` rolls a crashed swap back (old or new entries, never
+    none)."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-
-    def _exists(self) -> bool:
-        if not os.path.isdir(self.path):
-            return False
-        for _root, _dirs, files in os.walk(self.path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        recover(path)
 
     def _append(self, rows: list[tuple]) -> None:
         """Driver-side append of one file, no Spark job (append_rows)."""
@@ -200,7 +197,7 @@ class ParquetDeadLetterQueue:
         )
 
     def _raw(self) -> DataFrame:
-        if not self._exists():
+        if not has_parquet(self.path):
             return self.spark.createDataFrame([], schema=DLQ_SCHEMA)
         return self.spark.read.schema(DLQ_SCHEMA).parquet(self.path)
 
@@ -242,27 +239,17 @@ class ParquetDeadLetterQueue:
         if not cur:
             return False
         entry = cur[0]
+        error = entry.error
         try:
             ok = handler(entry.event)
         except Exception as exc:
-            self._append(
-                [
-                    (
-                        _event_tuple(entry.event),
-                        str(exc),
-                        entry.subscription,
-                        _now(),
-                        entry.attempts + 1,
-                    )
-                ]
-            )
-            return False
+            ok, error = False, str(exc)
         if ok is False:
             self._append(
                 [
                     (
                         _event_tuple(entry.event),
-                        entry.error,
+                        error,
                         entry.subscription,
                         _now(),
                         entry.attempts + 1,
@@ -273,31 +260,18 @@ class ParquetDeadLetterQueue:
         self.remove_event(event_id)
         return True
 
+    def delete_matching(self, predicate) -> int:
+        """Drop the entries matching a Column predicate over the DLQ
+        schema in one rewrite; NULL keeps the entry. Returns count."""
+        return drop_rows(self.to_df(), self.path, predicate)
+
     def remove_event(self, event_id: str) -> bool:
-        cur = self.to_df()
-        if cur.where(F.col("event.id") == event_id).limit(1).count() == 0:
-            return False
-        self._rewrite(cur.where(F.col("event.id") != event_id))
-        return True
+        return self.delete_matching(F.col("event.id") == event_id) > 0
 
     def delete_topic(self, topic: str) -> int:
         """Drop all dead letters for a topic (broker deleteTopic)."""
-        cur = self.to_df().cache()
-        try:
-            n = cur.where(F.col("event.topic") == topic).count()
-            if n:
-                self._rewrite(cur.where(F.col("event.topic") != topic))
-            return n
-        finally:
-            cur.unpersist()
+        return self.delete_matching(F.col("event.topic") == topic)
 
     def compact(self) -> None:
         """Collapse the append log to current state (VACUUM analog)."""
-        self._rewrite(self.to_df())
-
-    def _rewrite(self, df: DataFrame) -> None:
-        tmp = self.path + ".tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(self.path):
-            shutil.rmtree(self.path)
-        os.rename(tmp, self.path)
+        replace_dir(self.to_df(), self.path)

@@ -12,7 +12,11 @@ Reference parity (SURVEY.md §2.1):
 - ``get_events``            = ``getEvents``  (src/persistence.ts:28-69)
 - ``delete_events``         = ``deleteEvents`` retention
   (src/persistence.ts:74-93) — implemented as partition-pruned rewrite
-  (anti-filter) since plain parquet has no row-level delete.
+  (anti-filter) since plain parquet has no row-level delete. Every
+  rewrite swaps the partition dir crash-safely (storage/rewrite.py)
+  and opening the store recovers a cut-short swap, so a crash never
+  loses a topic, as the reference's transactional ``DELETE`` never
+  does (src/persistence.ts:407-425).
 
 Canonical Event schema (reference src/types.ts:4-39; FIXTURES.md §A1):
 ``id, type, topic, timestamp, schemaVersion, payload(JSON string),
@@ -41,6 +45,7 @@ from pyspark.sql import types as T
 
 from env_event_stream_spark.operators.event_queries import get_events as _get_events_df
 from env_event_stream_spark.storage.parquet_append import append_rows, partition_dir
+from env_event_stream_spark.storage.rewrite import drop_rows, has_parquet, recover, replace_dir
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -128,14 +133,15 @@ class InMemoryEventStore:
             tiebreak_col="id", **kwargs,
         )
 
-    def delete_events(self, topic: str, before_ts) -> int:
+    def delete_events(self, topic: str, before_ts, *, before_id: str | None = None) -> int:
         import datetime as _dt
 
         if isinstance(before_ts, str):
             before_ts = _dt.datetime.fromisoformat(before_ts)
+        cut = (before_ts, before_id or "")  # no id: every row at before_ts stays
         n0 = len(self._rows)
         self._rows = [
-            r for r in self._rows if not (r.topic == topic and r.timestamp < before_ts)
+            r for r in self._rows if not (r.topic == topic and (r.timestamp, r.id) < cut)
         ]
         return n0 - len(self._rows)
 
@@ -159,8 +165,6 @@ class InMemoryEventStore:
             .select("id")
             .collect()
         }
-        if not doomed:
-            return 0
         n0 = len(self._rows)
         self._rows = [
             r for r in self._rows
@@ -179,11 +183,15 @@ class ParquetEventStore:
     values and ``.crc`` sidecars. Scan = pruned parquet read;
     retention delete = partition-local rewrite keeping ``ts >= cutoff``
     (the parquet analog of the Postgres ``DELETE WHERE topic=$1 AND
-    timestamp<$2``, reference src/persistence.ts:407-425)."""
+    timestamp<$2``, reference src/persistence.ts:407-425). Rewrites
+    swap the partition dir via ``replace_dir`` (``.topic=x.tmp`` in,
+    ``.topic=x.old`` aside); the constructor's ``recover`` rolls a
+    crashed swap back, so reads see old or new rows, never none."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        recover(path)
 
     def initialize(self) -> None:
         """DDL bootstrap (reference src/persistence.ts:260-294): create
@@ -195,13 +203,9 @@ class ParquetEventStore:
     def _part_dir(self, topic: str) -> str:
         return os.path.join(self.path, partition_dir(self.spark, "topic", topic))
 
-    def _exists(self) -> bool:
-        if not os.path.isdir(self.path):
-            return False
-        for root, _dirs, files in os.walk(self.path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+    def _partition(self, topic: str) -> DataFrame:
+        """A topic's rows as its partition dir holds them (no topic)."""
+        return self.to_df().where(F.col("topic") == topic).drop("topic")
 
     def save_events(self, events: Sequence[Row] | DataFrame) -> int:
         if isinstance(events, DataFrame):
@@ -215,7 +219,7 @@ class ParquetEventStore:
         self.save_events([event])
 
     def to_df(self) -> DataFrame:
-        if not self._exists():
+        if not has_parquet(self.path):
             return self.spark.createDataFrame([], schema=EVENT_SCHEMA)
         # partitioned reads append the partition column last; re-select
         # to the canonical field order so collected Rows align with
@@ -240,20 +244,17 @@ class ParquetEventStore:
         append — the same small-files pathology as the reference's
         one-JSON-per-event store (src/persistence.ts:141-145), which
         at 100 TB destroys scan throughput (footer reads dominate).
-        Run periodically alongside retention. Returns files removed."""
+        Run periodically alongside retention. Returns files removed.
+        Like retention and erase, it gives the kept rows new file
+        names, so a streaming subscription delivers them again (5
+        events, 10 deliveries after one ``compact``)."""
         part_dir = self._part_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
-        before = sum(
-            1 for f in os.listdir(part_dir) if f.endswith(".parquet")
-        )
+        before = sum(1 for f in os.listdir(part_dir) if f.endswith(".parquet"))
         if before <= target_files:
             return 0
-        full = self.to_df().where(F.col("topic") == topic)
-        tmp = part_dir + ".tmp"
-        full.drop("topic").coalesce(target_files).write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(part_dir)
-        os.rename(tmp, part_dir)
+        replace_dir(self._partition(topic).coalesce(target_files), part_dir)
         after = sum(1 for f in os.listdir(part_dir) if f.endswith(".parquet"))
         return before - after
 
@@ -270,52 +271,20 @@ class ParquetEventStore:
         return n
 
     def delete_matching(self, topic: str, predicate) -> int:
-        """Erase rows of a topic matching a Column predicate —
-        partition-local rewrite (_erase_matching_parquet)."""
-        return _erase_matching_parquet(self, topic, predicate)
-
-    def delete_events(self, topic: str, before_ts) -> int:
-        """Retention: rewrite only the affected topic partition."""
+        """Erase rows of a topic matching a Column predicate over the
+        event columns but ``topic`` — a partition-local rewrite, the
+        right-to-erasure primitive. NULL keeps the row (``drop_rows``)."""
         part_dir = self._part_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
-        full = self.to_df().where(F.col("topic") == topic).cache()
-        try:
-            total = full.count()
-            keep = full.where(~(F.col("timestamp") < F.lit(before_ts)))
-            kept = keep.count()
-            tmp = part_dir + ".tmp"
-            keep.drop("topic").write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(part_dir)
-            os.rename(tmp, part_dir)
-            return total - kept
-        finally:
-            full.unpersist()
+        return drop_rows(self._partition(topic), part_dir, predicate)
 
-
-def _erase_matching_parquet(store: "ParquetEventStore", topic: str,
-                            predicate) -> int:
-    """Partition-local erase: rewrite one topic partition keeping rows
-    NOT matching ``predicate`` (a Column over the event schema). The
-    GDPR/right-to-erasure primitive — same rewrite shape as retention
-    delete_events, arbitrary predicate."""
-    part_dir = store._part_dir(topic)
-    if not os.path.isdir(part_dir):
-        return 0
-    full = store.to_df().where(F.col("topic") == topic).cache()
-    try:
-        total = full.count()
-        # NULL-predicate rows (e.g. payloads lacking the probed JSON
-        # field) must be KEPT: where(~NULL) would silently drop them —
-        # the one data-loss trap a generic erase primitive must close
-        keep = full.where(~F.coalesce(predicate, F.lit(False)))
-        kept = keep.count()
-        if kept == total:
-            return 0
-        tmp = part_dir + ".tmp"
-        keep.drop("topic").write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(part_dir)
-        os.rename(tmp, part_dir)
-        return total - kept
-    finally:
-        full.unpersist()
+    def delete_events(self, topic: str, before_ts, *, before_id: str | None = None) -> int:
+        """Retention: drop a topic's rows before ``before_ts`` or, with
+        ``before_id``, before ``(before_ts, before_id)`` in (timestamp,
+        id) order, so a count cut is exact when timestamps tie."""
+        ts, cut = F.col("timestamp"), F.lit(before_ts)
+        older = ts < cut
+        if before_id is not None:
+            older = older | ((ts == cut) & (F.col("id") < F.lit(before_id)))
+        return self.delete_matching(topic, older)

@@ -348,7 +348,9 @@ class EventBroker:
         ``batch_handler(df, epoch)`` is the scale path (vectorized).
         ``handler`` wraps per-row parity semantics (retry→DLQ) around
         each micro-batch. Pause/resume = stop()/restart from the same
-        checkpoint (no loss; T8 upgrade mode)."""
+        checkpoint (no loss; T8 upgrade mode). A rewrite of the topic
+        (compact, retention, erase) renames the kept rows' files, and
+        they are delivered again (5 events, 10 deliveries)."""
         if self.path is None:
             raise ValueError("streaming subscriptions need a parquet-backed broker")
         options = options or SubscriptionOptions()
@@ -505,8 +507,8 @@ class EventBroker:
         (the reference has no analog; contract-side completeness for
         running the engine on user data). Event-store removal is a
         partition-local rewrite per affected topic (delete_matching);
-        DLQ removal goes through the backend's per-id remove (DLQs
-        are small by construction — they hold failures). Snapshot
+        DLQ removal is one ``delete_matching`` over the whole queue
+        (one rewrite, however many entries match). Snapshot
         tables must be filtered by the caller
         (sourcing.forget_key_in_snapshot): they hold FOLDED per-
         subject state, so erasing history alone leaves a derived
@@ -522,17 +524,10 @@ class EventBroker:
         removed_events = 0
         for name in self.list_topics():
             removed_events += self.store.delete_matching(name, pred)
-        doomed = [
-            r.id
-            for r in self.dlq.to_df()
-            .where(
-                F.get_json_object(F.col("event.payload"), f"$.{field}")
-                == F.lit(value).cast("string")
-            )
-            .select(F.col("event.id").alias("id"))
-            .collect()
-        ]
-        removed_dlq = sum(1 for i in doomed if self.dlq.remove_event(i))
+        removed_dlq = self.dlq.delete_matching(
+            F.get_json_object(F.col("event.payload"), f"$.{field}")
+            == F.lit(value).cast("string")
+        )
         return {"events": removed_events, "dlq": removed_dlq}
 
     def apply_retention(self, topic: str, *, now: _dt.datetime | None = None) -> int:
@@ -560,15 +555,16 @@ class EventBroker:
         return deleted
 
     def _enforce_max_events(self, meta: _TopicMeta) -> int:
-        """Count-based retention: keep the newest max_events rows.
-        (maxEvents is declared but never enforced in the reference —
-        SURVEY.md T7; enforcing it is a documented upgrade.)"""
+        """Count-based retention: keep exactly the newest max_events
+        rows in (timestamp, id) order. (maxEvents is declared but never
+        enforced in the reference — SURVEY.md T7; enforcing it is a
+        documented upgrade.)"""
         df = self.store.get_events(meta.name)
         total = df.count()
         overflow = total - meta.max_events
         if overflow <= 0:
             return 0
-        # cutoff = timestamp of the (overflow+1)-th oldest row, computed
+        # cutoff = (timestamp, id) of the (overflow+1)-th oldest row, computed
         # distributed: TakeOrdered(overflow+1) then re-sort the bounded
         # set descending and take 1 — exactly ONE row reaches the
         # driver, never O(overflow) (a 100M-row overflow would
@@ -580,7 +576,7 @@ class EventBroker:
             .limit(1)
             .collect()[0]
         )
-        return self.store.delete_events(meta.name, cutoff_row.timestamp)
+        return self.store.delete_events(meta.name, cutoff_row.timestamp, before_id=cutoff_row.id)
 
 
 # -- module-level default broker (mod.ts export parity) --------------------

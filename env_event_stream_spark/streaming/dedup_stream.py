@@ -19,12 +19,11 @@ effectively-once pair emission under replay."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from env_event_stream_spark.operators.dedup import minhash_signatures
+from env_event_stream_spark.storage.rewrite import has_parquet
 
 __all__ = ["IncrementalNearDupIndex", "contamination_gate"]
 
@@ -115,9 +114,7 @@ class IncrementalNearDupIndex:
         return out
 
     def _read(self, path: str, schema: str) -> DataFrame:
-        if os.path.isdir(path) and any(
-            f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs
-        ):
+        if has_parquet(path):
             return self.spark.read.parquet(path)
         return self.spark.createDataFrame([], schema)
 

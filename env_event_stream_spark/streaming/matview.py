@@ -10,11 +10,12 @@ they can query with zero knowledge of the pipeline."""
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from env_event_stream_spark.storage.rewrite import has_parquet
 
 __all__ = ["DailyRollupView"]
 
@@ -49,17 +50,8 @@ class DailyRollupView:
             F.date_trunc("day", self.ts_col).alias("day"), *self.keys
         ).agg(*aggs)
 
-    def _exists(self) -> bool:
-        if not os.path.isdir(self.path):
-            return False
-        return any(
-            f.endswith(".parquet")
-            for _r, _d, fs in os.walk(self.path)
-            for f in fs
-        )
-
     def read(self) -> DataFrame:
-        if not self._exists():
+        if not has_parquet(self.path):
             schema = "day timestamp, " + ", ".join(
                 f"{k} string" for k in self.keys
             ) + ", n bigint, " + ", ".join(

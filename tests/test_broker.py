@@ -138,6 +138,24 @@ def test_max_events_cutoff_bounded_collect(spark, monkeypatch):
     assert sizes and max(sizes) <= 1  # never O(overflow) on the driver
 
 
+@pytest.mark.parametrize("backend", ["memory", "parquet"])
+def test_max_events_exact_when_timestamps_tie(spark, tmp_path, backend):
+    """The count cap cuts on (timestamp, id): rows tied with the
+    cutoff row on timestamp alone do not survive it."""
+    import datetime as dt
+
+    from env_event_stream_spark.storage.event_store import make_event
+
+    broker = EventBroker(spark, None if backend == "memory" else str(tmp_path / "b"))
+    broker.create_topic("tie", max_events=2)
+    same = dt.datetime(2024, 1, 1)
+    broker.store.save_events([
+        make_event("tie", "e", timestamp=same, event_id=f"e-{i}") for i in range(5)
+    ])
+    assert broker.apply_retention("tie") == 3
+    assert [r.id for r in broker.store.get_events("tie").collect()] == ["e-3", "e-4"]
+
+
 def test_retry_count(broker):
     """Retry semantics: exactly max_retries TOTAL handler attempts
     (reference src/subscription.ts:95 retries while attempt <
