@@ -23,12 +23,14 @@ import datetime as _dt
 from collections.abc import Callable
 from typing import Any
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from env_event_stream_spark.storage.event_store import EVENT_SCHEMA
 from env_event_stream_spark.storage.parquet_append import append_rows
+from env_event_stream_spark.storage.parquet_read import read_internal
 from env_event_stream_spark.storage.rewrite import drop_rows, has_parquet, recover, replace_dir
 
 DLQ_SCHEMA = T.StructType(
@@ -120,6 +122,16 @@ class InMemoryDeadLetterQueue:
     def size(self) -> int:
         return len(self._entries)
 
+    def get_entry(self, event_id: str) -> Row | None:
+        """The entry for ``event_id`` as ``to_df().collect()`` returns
+        it, or None."""
+        r = self._entries.get(event_id)
+        if r is None:
+            return None
+        entry = (_event_tuple(r["event"]), r["error"], r["subscription"], r["timestamp"],
+                 r["attempts"])
+        return DLQ_SCHEMA.fromInternal(DLQ_SCHEMA.toInternal(entry))
+
     def retry_event(self, event_id: str, handler: Callable[[Row], Any]) -> bool:
         """Re-deliver; delete on success, failure increments
         ``attempts`` and refreshes ``timestamp`` (reference
@@ -171,7 +183,8 @@ class ParquetDeadLetterQueue:
     reference src/deadletter.ts:320-327) by versioning rows and taking
     max(attempts) per id at read time, with an explicit ``compact()``.
     Appends (``add_event(s)``, a failed ``retry_event``) are written by
-    the driver, one file per call, no Spark job. Removals and
+    the driver, one file per call, no Spark job, and the redrive lookup
+    (``get_entry``) reads on the driver too. Removals and
     ``compact`` swap the dir via ``replace_dir``; the constructor's
     ``recover`` rolls a crashed swap back (old or new entries, never
     none)."""
@@ -229,16 +242,26 @@ class ParquetDeadLetterQueue:
     ) -> DataFrame:
         return _filter_sort_limit(self.to_df(), topic, event_type, limit)
 
+    def get_entry(self, event_id: str) -> Row | None:
+        """The entry ``to_df`` keeps for ``event_id`` (latest
+        ``(timestamp, attempts)`` version), or None. Read on the driver
+        with the id filter pushed down, no Spark job; the Row equals
+        what ``collect()`` returns."""
+        versions = read_internal(DLQ_SCHEMA, self.path, pc.field("event", "id") == event_id)
+        if not versions:
+            return None
+        ts, attempts = DLQ_SCHEMA.names.index("timestamp"), DLQ_SCHEMA.names.index("attempts")
+        return DLQ_SCHEMA.fromInternal(max(versions, key=lambda v: (v[ts], v[attempts])))
+
     def retry_event(self, event_id: str, handler: Callable[[Row], Any]) -> bool:
         """Boolean callback contract as the in-memory twin: ``False``
         return = soft failure (attempts+1, error text kept), raise =
         hard failure (attempts+1, error replaced); both refresh the
         timestamp via the versioned append (reference
         src/deadletter.ts:78-103)."""
-        cur = self.to_df().where(F.col("event.id") == event_id).collect()
-        if not cur:
+        entry = self.get_entry(event_id)
+        if entry is None:
             return False
-        entry = cur[0]
         error = entry.error
         try:
             ok = handler(entry.event)

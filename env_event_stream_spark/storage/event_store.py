@@ -11,12 +11,14 @@ Reference parity (SURVEY.md §2.1):
   time; a batch here is one file per topic.
 - ``get_events``            = ``getEvents``  (src/persistence.ts:28-69)
 - ``delete_events``         = ``deleteEvents`` retention
-  (src/persistence.ts:74-93) — implemented as partition-pruned rewrite
-  (anti-filter) since plain parquet has no row-level delete. Every
-  rewrite swaps the partition dir crash-safely (storage/rewrite.py)
-  and opening the store recovers a cut-short swap, so a crash never
-  loses a topic, as the reference's transactional ``DELETE`` never
-  does (src/persistence.ts:407-425).
+  (src/persistence.ts:74-93). Plain parquet has no row-level delete,
+  so a sweep is planned from the topic's files: files wholly before
+  the cut are unlinked (no Spark job), kept files keep their names,
+  and only a cut that falls inside a file rewrites the partition
+  (anti-filter). A rewrite swaps the partition dir crash-safely
+  (storage/rewrite.py) and opening the store recovers a cut-short
+  swap, so a crash never loses a topic, as the reference's
+  transactional ``DELETE`` never does (src/persistence.ts:407-425).
 
 Canonical Event schema (reference src/types.ts:4-39; FIXTURES.md §A1):
 ``id, type, topic, timestamp, schemaVersion, payload(JSON string),
@@ -25,13 +27,15 @@ schema-on-read via from_json per event type (SURVEY.md §1.4).
 
 Scale: partitioned by ``topic`` (the reference's per-topic arrays/dirs/
 indexes are all this layout, src/persistence.ts:9,126,283-288); topic
-equality prunes partitions; ts predicates hit parquet row-group stats.
-At 100 TB add a date bucket column (``p_date = date(timestamp)``) as a
-second partition level so retention drops whole partitions.
+equality prunes partitions; ts predicates hit parquet row-group stats;
+retention drops whole files. At 100 TB add a date bucket column
+(``p_date = date(timestamp)``) as a second partition level so
+retention drops whole partitions.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
 import shutil
 import time
@@ -39,12 +43,16 @@ import uuid
 from collections.abc import Sequence
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from env_event_stream_spark.operators.event_queries import get_events as _get_events_df
 from env_event_stream_spark.storage.parquet_append import append_rows, partition_dir
+from env_event_stream_spark.storage.parquet_read import FileKeys, file_keys, read_keys, visible_files
 from env_event_stream_spark.storage.rewrite import drop_rows, has_parquet, recover, replace_dir
 
 EVENT_SCHEMA = T.StructType(
@@ -96,8 +104,6 @@ def make_event(
     """Construct an Event row exactly as broker.publish does
     (reference src/broker.ts:100-108): generated id, now() timestamp,
     schemaVersion default "1.0"."""
-    import datetime as _dt
-
     return Row(
         id=event_id or generate_id(),
         type=event_type,
@@ -134,8 +140,6 @@ class InMemoryEventStore:
         )
 
     def delete_events(self, topic: str, before_ts, *, before_id: str | None = None) -> int:
-        import datetime as _dt
-
         if isinstance(before_ts, str):
             before_ts = _dt.datetime.fromisoformat(before_ts)
         cut = (before_ts, before_id or "")  # no id: every row at before_ts stays
@@ -144,6 +148,29 @@ class InMemoryEventStore:
             r for r in self._rows if not (r.topic == topic and (r.timestamp, r.id) < cut)
         ]
         return n0 - len(self._rows)
+
+    def retention_cut(self, topic: str, keep: int) -> tuple[Any, str] | None:
+        """``(timestamp, id)`` of the ``keep``-th newest row of a topic
+        in (timestamp, id) order, or None when it holds ``keep`` rows or
+        fewer."""
+        df = self.get_events(topic)
+        total = df.count()
+        overflow = total - keep
+        if overflow <= 0:
+            return None
+        # cutoff = (timestamp, id) of the (overflow+1)-th oldest row, computed
+        # distributed: TakeOrdered(overflow+1) then re-sort the bounded
+        # set descending and take 1 — exactly ONE row reaches the
+        # driver, never O(overflow) (a 100M-row overflow would
+        # otherwise collect 100M rows).
+        cutoff_row = (
+            df.orderBy(F.col("timestamp").asc(), F.col("id").asc())
+            .limit(overflow + 1)
+            .orderBy(F.col("timestamp").desc(), F.col("id").desc())
+            .limit(1)
+            .collect()[0]
+        )
+        return cutoff_row.timestamp, cutoff_row.id
 
     def delete_topic(self, topic: str) -> int:
         """Drop every event of a topic (broker deleteTopic,
@@ -181,12 +208,15 @@ class ParquetEventStore:
     topic per call, no Spark job (``append_rows``). A DataFrame goes
     through Spark's partitioned writer. Both give the same layout,
     values and ``.crc`` sidecars. Scan = pruned parquet read;
-    retention delete = partition-local rewrite keeping ``ts >= cutoff``
-    (the parquet analog of the Postgres ``DELETE WHERE topic=$1 AND
-    timestamp<$2``, reference src/persistence.ts:407-425). Rewrites
-    swap the partition dir via ``replace_dir`` (``.topic=x.tmp`` in,
-    ``.topic=x.old`` aside); the constructor's ``recover`` rolls a
-    crashed swap back, so reads see old or new rows, never none."""
+    retention delete = the parquet analog of the Postgres ``DELETE
+    WHERE topic=$1 AND timestamp<$2`` (reference
+    src/persistence.ts:407-425), planned on the driver from the
+    partition's files: whole files before the cut are unlinked, and a
+    partition-local rewrite keeping ``ts >= cutoff`` runs only when the
+    cut falls inside a file. Rewrites swap the partition dir via
+    ``replace_dir`` (``.topic=x.tmp`` in, ``.topic=x.old`` aside); the
+    constructor's ``recover`` rolls a crashed swap back, so reads see
+    old or new rows, never none."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -245,9 +275,10 @@ class ParquetEventStore:
         one-JSON-per-event store (src/persistence.ts:141-145), which
         at 100 TB destroys scan throughput (footer reads dominate).
         Run periodically alongside retention. Returns files removed.
-        Like retention and erase, it gives the kept rows new file
-        names, so a streaming subscription delivers them again (5
-        events, 10 deliveries after one ``compact``)."""
+        Like erase and a retention cut inside a file, it gives the kept
+        rows new file names, so a streaming subscription delivers them
+        again (5 events, 10 deliveries after one ``compact``); a
+        retention sweep that drops whole files does not."""
         part_dir = self._part_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
@@ -262,11 +293,11 @@ class ParquetEventStore:
         """Drop a topic's whole partition directory — O(1) metadata
         delete, no scan of other topics (reference src/broker.ts:55-57
         only forgets the Topic object; dropping its stored rows is the
-        documented upgrade)."""
+        documented upgrade). Rows are counted from the file footers."""
         part_dir = self._part_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
-        n = self.to_df().where(F.col("topic") == topic).count()
+        n = sum(pq.read_metadata(f).num_rows for f in visible_files(part_dir))
         shutil.rmtree(part_dir)
         return n
 
@@ -282,9 +313,81 @@ class ParquetEventStore:
     def delete_events(self, topic: str, before_ts, *, before_id: str | None = None) -> int:
         """Retention: drop a topic's rows before ``before_ts`` or, with
         ``before_id``, before ``(before_ts, before_id)`` in (timestamp,
-        id) order, so a count cut is exact when timestamps tie."""
-        ts, cut = F.col("timestamp"), F.lit(before_ts)
-        older = ts < cut
-        if before_id is not None:
-            older = older | ((ts == cut) & (F.col("id") < F.lit(before_id)))
-        return self.delete_matching(topic, older)
+        id) order, so a count cut is exact when timestamps tie.
+
+        Planned from the partition's files, without a Spark job: a file
+        wholly before the cut is unlinked, ``.crc`` first, so a sweep cut
+        short leaves no orphan sidecar and the next sweep finishes it;
+        a file wholly after it keeps its name, so streaming
+        subscriptions do not see its rows again. Only when a file holds
+        rows on both sides is the partition rewritten (``drop_rows``).
+        An ISO string is read by ``datetime.fromisoformat``, as the
+        in-memory store reads it."""
+        if isinstance(before_ts, str):
+            before_ts = _dt.datetime.fromisoformat(before_ts)
+        cut = T.TimestampType().toInternal(before_ts)  # the rule F.lit applies
+        doomed = []
+        for f in file_keys(self._part_dir(topic)):
+            if f.lo > cut:
+                continue
+            if f.hi < cut:
+                doomed.append(f)
+                continue
+            older = _count_older(read_keys(f), cut, before_id)
+            if older == f.rows:
+                doomed.append(f)
+            elif older:  # the cut falls inside this file
+                ts, lit = F.col("timestamp"), F.lit(before_ts)
+                pred = ts < lit
+                if before_id is not None:
+                    pred = pred | ((ts == lit) & (F.col("id") < F.lit(before_id)))
+                return self.delete_matching(topic, pred)
+        for f in doomed:
+            directory, name = os.path.split(f.path)
+            crc = os.path.join(directory, f".{name}.crc")
+            if os.path.exists(crc):
+                os.unlink(crc)
+            os.unlink(f.path)
+        return sum(f.rows for f in doomed)
+
+    def retention_cut(self, topic: str, keep: int) -> tuple[_dt.datetime, str] | None:
+        """``(timestamp, id)`` of the ``keep``-th newest row of a topic
+        in (timestamp, id) order, or None when it holds ``keep`` rows or
+        fewer. Footer row counts bound the cut's timestamp; only the
+        files that can hold it have their two columns read, and no
+        Spark job runs. The timestamp is an aware UTC datetime, so it
+        converts back to the same instant in any host zone."""
+        files = file_keys(self._part_dir(topic))
+        if sum(f.rows for f in files) <= keep:
+            return None
+        # at least ``keep`` rows have ts >= lo; fewer than ``keep`` have ts > hi
+        lo, hi = _kth_bound(files, "lo", keep), _kth_bound(files, "hi", keep)
+        newer = sum(f.rows for f in files if f.lo > hi)
+        keys = pa.concat_tables(read_keys(f) for f in files if f.lo <= hi and f.hi >= lo)
+        order = keys.sort_by([("timestamp", "descending"), ("id", "descending")])
+        row = order.slice(keep - newer - 1, 1).to_pylist()[0]
+        return _EPOCH + _dt.timedelta(microseconds=row["timestamp"]), row["id"]
+
+
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+
+
+def _kth_bound(files: list[FileKeys], attr: str, k: int) -> int:
+    """``attr`` of the file at which the row count, files taken by
+    ``attr`` descending, first reaches ``k`` (the files hold more)."""
+    n = 0
+    for f in sorted(files, key=lambda f: getattr(f, attr), reverse=True):
+        n += f.rows
+        if n >= k:
+            return getattr(f, attr)
+
+
+def _count_older(keys: pa.Table, cut: int, before_id: str | None) -> int:
+    """Rows of ``keys`` before ``(cut, before_id)``, NULL kept, as the
+    Spark predicate in ``delete_events`` counts them."""
+    ts = keys.column("timestamp")
+    older = pc.less(ts, cut)
+    if before_id is not None:
+        tie = pc.and_kleene(pc.equal(ts, cut), pc.less(keys.column("id"), before_id))
+        older = pc.or_kleene(older, tie)
+    return pc.sum(older.fill_null(False).cast(pa.int64())).as_py() or 0

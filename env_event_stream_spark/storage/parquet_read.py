@@ -1,0 +1,151 @@
+"""Driver-side parquet reads for results that end on the driver.
+
+A Spark plan that only feeds ``collect()`` a handful of rows pays a
+job's scheduling, task launch and result round trip for every call.
+The readers here answer the same questions from the files with
+pyarrow, without a Spark job, and read only what they need:
+
+- ``file_keys`` gives each visible file's row count and the min/max of
+  its ``timestamp`` column. A file the driver wrote (INT64 microseconds)
+  answers from its footer alone; a file Spark wrote (INT96, no usable
+  statistics) has its ``timestamp`` and ``id`` column chunks read.
+- ``read_internal`` reads the rows matching a pushed-down filter as
+  Spark's internal values, so ``schema.fromInternal`` turns them into
+  the Rows ``collect()`` returns: local naive datetimes, maps as dicts,
+  nested structs as Rows.
+
+Timestamps are compared as Spark stores them: microseconds since the
+epoch, UTC (INT96 values are UTC instants, as Spark writes them).
+Visibility follows Spark's listing: ``.``/``_``-names are skipped.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+from collections.abc import Callable
+from typing import Any, NamedTuple
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+__all__ = ["FileKeys", "file_keys", "read_internal", "read_keys", "visible_files"]
+
+_INT96_AS_US = {"coerce_int96_timestamp_unit": "us"}
+_FORMAT = ds.ParquetFileFormat(read_options=ds.ParquetReadOptions(**_INT96_AS_US))
+
+
+def visible_files(directory: str) -> list[str]:
+    """The parquet files directly under ``directory`` that Spark reads."""
+    if not os.path.isdir(directory):
+        return []
+    return sorted(
+        os.path.join(directory, n) for n in os.listdir(directory)
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    )
+
+
+class FileKeys(NamedTuple):
+    """One file's row count and ``timestamp`` range (μs since the epoch);
+    ``keys`` holds its ``(timestamp, id)`` columns when they were read."""
+
+    path: str
+    rows: int
+    lo: int
+    hi: int
+    keys: pa.Table | None = None
+
+
+def file_keys(directory: str) -> list[FileKeys]:
+    """``FileKeys`` of every visible file under ``directory`` that holds
+    rows."""
+    out = []
+    for path in visible_files(directory):
+        f = pq.ParquetFile(path, **_INT96_AS_US)
+        md = f.metadata
+        if md.num_rows == 0:
+            continue
+        span = _footer_span(md)
+        if span is not None:
+            out.append(FileKeys(path, md.num_rows, *span))
+            continue
+        keys = _keys(f.read(columns=["timestamp", "id"]))
+        ts = keys.column("timestamp")
+        out.append(FileKeys(path, md.num_rows, pc.min(ts).as_py(), pc.max(ts).as_py(), keys))
+    return out
+
+
+def read_keys(f: FileKeys) -> pa.Table:
+    """The ``(timestamp, id)`` columns of one file, timestamp in μs."""
+    if f.keys is not None:
+        return f.keys
+    return _keys(pq.ParquetFile(f.path, **_INT96_AS_US).read(columns=["timestamp", "id"]))
+
+
+def _keys(table: pa.Table) -> pa.Table:
+    ts = table.column("timestamp")
+    if ts.type.unit != "us":
+        ts = ts.cast(pa.timestamp("us", ts.type.tz))
+    return pa.table({"timestamp": ts.cast(pa.int64()), "id": table.column("id")})
+
+
+def _footer_span(md: pq.FileMetaData) -> tuple[int, int] | None:
+    """min/max of ``timestamp`` from the footer statistics when it is an
+    INT64 UTC-microsecond column with min/max in every row group."""
+    names = [md.schema.column(i).path for i in range(md.num_columns)]
+    if "timestamp" not in names:
+        return None
+    i = names.index("timestamp")
+    col = md.schema.column(i)
+    logical = json.loads(col.logical_type.to_json())
+    if col.physical_type != "INT64" or logical.get("timeUnit") != "microseconds" \
+            or not logical.get("isAdjustedToUTC"):
+        return None
+    stats = [md.row_group(g).column(i).statistics for g in range(md.num_row_groups)]
+    if any(s is None or not s.has_min_max for s in stats):
+        return None
+    return min(s.min_raw for s in stats), max(s.max_raw for s in stats)
+
+
+def read_internal(schema: T.StructType, directory: str, where: pc.Expression) -> list[tuple]:
+    """Rows of the parquet files under ``directory`` matching ``where``,
+    as Spark's internal values in ``schema``'s field order."""
+    files = visible_files(directory)
+    if not files:
+        return []
+    table = ds.dataset(files, format=_FORMAT, schema=_relaxed(schema)).to_table(filter=where)
+    convert = _to_internal(schema)
+    return [convert(r) for r in table.to_pylist()]
+
+
+def _relaxed(schema: T.StructType) -> pa.Schema:
+    """``schema`` in Arrow, every field nullable and every timestamp its
+    int64 μs, so files written by the driver and by Spark (INT96, other
+    nullability) read alike."""
+
+    def relax(t: pa.DataType) -> pa.DataType:
+        if pa.types.is_timestamp(t):
+            return pa.int64()
+        if pa.types.is_struct(t):
+            return pa.struct([pa.field(f.name, relax(f.type)) for f in t])
+        if pa.types.is_map(t):
+            return pa.map_(relax(t.key_type), relax(t.item_type))
+        return t
+
+    return pa.schema([pa.field(f.name, relax(f.type)) for f in to_arrow_schema(schema)])
+
+
+def _to_internal(dtype: T.DataType) -> Callable[[Any], Any]:
+    """Arrow's Python value of ``dtype`` -> Spark's internal value
+    (struct dict -> tuple, map pairs -> dict)."""
+    if isinstance(dtype, T.StructType):
+        fields = [(f.name, _to_internal(f.dataType)) for f in dtype.fields]
+        return lambda v: None if v is None else tuple(c(v[n]) for n, c in fields)
+    if isinstance(dtype, T.MapType):
+        key, value = _to_internal(dtype.keyType), _to_internal(dtype.valueType)
+        return lambda v: None if v is None else {key(k): value(x) for k, x in v}
+    return lambda v: v

@@ -348,9 +348,11 @@ class EventBroker:
         ``batch_handler(df, epoch)`` is the scale path (vectorized).
         ``handler`` wraps per-row parity semantics (retry→DLQ) around
         each micro-batch. Pause/resume = stop()/restart from the same
-        checkpoint (no loss; T8 upgrade mode). A rewrite of the topic
-        (compact, retention, erase) renames the kept rows' files, and
-        they are delivered again (5 events, 10 deliveries)."""
+        checkpoint (no loss; T8 upgrade mode). The stream tracks file
+        names: a retention sweep that drops whole files delivers nothing
+        again, but a rewrite of the topic (compact, erase, a retention
+        cut inside a file) renames the kept rows' files, and they are
+        delivered again (5 events, 10 deliveries after a compact)."""
         if self.path is None:
             raise ValueError("streaming subscriptions need a parquet-backed broker")
         options = options or SubscriptionOptions()
@@ -471,12 +473,10 @@ class EventBroker:
         We treat a handler raise during redrive as a recorded hard
         failure instead (attempts+1, error replaced, entry kept):
         strictly more conservative, no silent data loss."""
-        entries = self.dlq.get_events().where(
-            F.col("event.id") == event_id
-        ).collect()
-        if not entries:
+        entry = self.dlq.get_entry(event_id)
+        if entry is None:
             return False
-        sub_id = entries[0].subscription
+        sub_id = entry.subscription
 
         def _redeliver(event) -> bool:
             if event.topic not in self.topics:
@@ -559,24 +559,11 @@ class EventBroker:
         rows in (timestamp, id) order. (maxEvents is declared but never
         enforced in the reference — SURVEY.md T7; enforcing it is a
         documented upgrade.)"""
-        df = self.store.get_events(meta.name)
-        total = df.count()
-        overflow = total - meta.max_events
-        if overflow <= 0:
+        cut = self.store.retention_cut(meta.name, meta.max_events)
+        if cut is None:
             return 0
-        # cutoff = (timestamp, id) of the (overflow+1)-th oldest row, computed
-        # distributed: TakeOrdered(overflow+1) then re-sort the bounded
-        # set descending and take 1 — exactly ONE row reaches the
-        # driver, never O(overflow) (a 100M-row overflow would
-        # otherwise collect 100M rows).
-        cutoff_row = (
-            df.orderBy(F.col("timestamp").asc(), F.col("id").asc())
-            .limit(overflow + 1)
-            .orderBy(F.col("timestamp").desc(), F.col("id").desc())
-            .limit(1)
-            .collect()[0]
-        )
-        return self.store.delete_events(meta.name, cutoff_row.timestamp, before_id=cutoff_row.id)
+        ts, event_id = cut
+        return self.store.delete_events(meta.name, ts, before_id=event_id)
 
 
 # -- module-level default broker (mod.ts export parity) --------------------

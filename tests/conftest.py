@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import pytest
 
@@ -18,6 +19,23 @@ def spark():
     s = get_spark("tests")
     prepare_session(s)
     yield s
+
+
+@pytest.fixture
+def host_tz(request):
+    """Run the test body with the Python process in another zone
+    (parametrize it with ``indirect=True``)."""
+    if not hasattr(time, "tzset"):
+        pytest.skip("tzset not available")
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = request.param
+    time.tzset()
+    yield request.param
+    if old is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
 
 
 @pytest.fixture(scope="session")

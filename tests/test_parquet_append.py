@@ -12,7 +12,6 @@ from __future__ import annotations
 import datetime as dt
 import glob
 import os
-import time
 import uuid
 
 import pytest
@@ -29,22 +28,6 @@ from env_event_stream_spark.streaming.broker import EventBroker, SubscriptionOpt
 
 TZS = ["UTC", "America/New_York", "Asia/Tokyo"]
 ODD_TOPICS = ["a/b", "x:y", "eq=1", "#h", "pct%20", "sp ace"]
-
-
-@pytest.fixture
-def host_tz(request):
-    """Run the test body with the Python process in another zone."""
-    if not hasattr(time, "tzset"):
-        pytest.skip("tzset not available")
-    old = os.environ.get("TZ")
-    os.environ["TZ"] = request.param
-    time.tzset()
-    yield request.param
-    if old is None:
-        del os.environ["TZ"]
-    else:
-        os.environ["TZ"] = old
-    time.tzset()
 
 
 def _events():

@@ -1,18 +1,19 @@
 """Crash safety of the parquet rewrites (storage/rewrite.py).
 
-Every rewrite of a stored directory — event-store retention and
-compaction, a DLQ removal, a snapshot erase — is driven through a
-failing rename. Two failure models:
+Every rewrite of a stored directory — event-store retention cut
+inside a file and compaction, a DLQ removal, a snapshot erase — is
+driven through a failing rename. Two failure models:
 
 - ``error``: the rename raises and the program goes on; the swap must
   roll itself back at once.
 - ``crash``: the process dies at that point; nothing after it touches
-  the disk (later renames, ``rmtree`` and writes raise as well). The
-  next open of the store must recover.
+  the disk (later renames, unlinks, ``rmtree`` and writes raise as
+  well). The next open of the store must recover.
 
 Either way a reader afterwards sees all the old rows or all the new
 ones, never an empty or missing directory, and no ``.tmp``/``.old``
-directory is left behind.
+directory is left behind. A retention sweep that drops whole files
+swaps nothing; it is driven through a failing ``os.unlink`` instead.
 """
 
 from __future__ import annotations
@@ -39,9 +40,11 @@ class Crash(Exception):
 def fail_at(monkeypatch, point: str, model: str) -> None:
     """Make the ``point`` step of the next rewrite fail: ``"write"``
     (right after the new rows are written), ``"rename1"`` or
-    ``"rename2"`` (the first or second ``os.rename``)."""
+    ``"rename2"`` (the first or second ``os.rename``), ``"unlinkN"``
+    (the N-th ``os.unlink``)."""
     real_rename, real_rmtree, real_parquet = os.rename, shutil.rmtree, DataFrameWriter.parquet
-    state = {"renames": 0, "dead": False}
+    real_unlink = os.unlink
+    state = {"renames": 0, "unlinks": 0, "dead": False}
 
     def check_alive():
         if state["dead"]:
@@ -62,6 +65,13 @@ def fail_at(monkeypatch, point: str, model: str) -> None:
         check_alive()
         real_rmtree(path, *args, **kwargs)
 
+    def unlink(path, *args, **kwargs):
+        check_alive()
+        state["unlinks"] += 1
+        if point == f"unlink{state['unlinks']}":
+            fail()
+        real_unlink(path, *args, **kwargs)
+
     def parquet(self, *args, **kwargs):
         check_alive()
         real_parquet(self, *args, **kwargs)
@@ -70,6 +80,7 @@ def fail_at(monkeypatch, point: str, model: str) -> None:
 
     monkeypatch.setattr(os, "rename", rename)
     monkeypatch.setattr(shutil, "rmtree", rmtree)
+    monkeypatch.setattr(os, "unlink", unlink)
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
 
 
@@ -95,13 +106,22 @@ def _store(spark, root):
     return store
 
 
+def _one_file_store(spark, root):
+    """The rows of ``_store`` in one file, so a cut between them falls
+    inside the file and the sweep rewrites the partition."""
+    store = ParquetEventStore(spark, root)
+    store.initialize()
+    store.save_events([_event(i) for i in range(3)])
+    return store
+
+
 def _ids(df) -> set[str]:
     return {r.id for r in df.select("id").collect()}
 
 
 def _retention(spark, tmp_path):
     root = str(tmp_path / "events")
-    store = _store(spark, root)
+    store = _one_file_store(spark, root)
     return (
         lambda: store.delete_events("t", BASE + dt.timedelta(minutes=2)),
         lambda: _ids(ParquetEventStore(spark, root).get_events("t")),
@@ -176,7 +196,7 @@ def test_tmp_left_mid_write_is_invisible(spark, tmp_path, monkeypatch):
     temporary dir next to the live one; the table must not show it
     as a topic."""
     root = str(tmp_path / "events")
-    store = _store(spark, root)
+    store = _one_file_store(spark, root)
     with monkeypatch.context() as m:
         fail_at(m, "write", "crash")
         with pytest.raises(Crash):
@@ -186,6 +206,37 @@ def test_tmp_left_mid_write_is_invisible(spark, tmp_path, monkeypatch):
     assert _ids(store.get_events("t")) == {"e0", "e1", "e2"}
     ParquetEventStore(spark, root)  # reopening drops the leftover
     assert leftovers(tmp_path) == []
+
+
+@pytest.mark.parametrize("model", ["error", "crash"])
+@pytest.mark.parametrize("point", ["unlink1", "unlink2", "unlink3"])
+def test_failed_unlink_mid_sweep_keeps_every_kept_row(spark, tmp_path, monkeypatch, point, model):
+    """A sweep that drops whole files, cut short at an ``os.unlink``:
+    the first file's sidecar, the first file, or the second file's
+    sidecar. Every kept row stays, only doomed rows are gone, no
+    ``.crc`` is left without its file, and a re-run finishes the sweep."""
+    root = str(tmp_path / "events")
+    store = ParquetEventStore(spark, root)
+    store.initialize()
+    store.save_event(_event(3))
+    part = store._part_dir("t")
+    final = sorted(os.listdir(part))
+    for i in range(3):
+        store.save_event(_event(i))  # one file each, all before the cut
+    cut = BASE + dt.timedelta(minutes=3)
+    with monkeypatch.context() as m:
+        fail_at(m, point, model)
+        with pytest.raises((Crash, OSError)):
+            store.delete_events("t", cut)
+    store = ParquetEventStore(spark, root)
+    left = _ids(store.get_events("t"))
+    assert "e3" in left
+    assert {"e0", "e1", "e2", "e3"} - left <= {"e0", "e1", "e2"}
+    names = os.listdir(part)
+    assert all(n[1:-len(".crc")] in names for n in names if n.endswith(".crc"))
+    assert store.delete_events("t", cut) == len(left) - 1
+    assert _ids(store.get_events("t")) == {"e3"}
+    assert sorted(os.listdir(part)) == final
 
 
 def test_noop_delete_events_rewrites_nothing(spark, tmp_path):

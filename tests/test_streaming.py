@@ -105,6 +105,32 @@ def test_pause_resume_streaming_restarts(pbroker, tmp_path):
     assert seen == ['{"i": 1}']
 
 
+def test_whole_file_retention_does_not_redeliver(pbroker, tmp_path):
+    """A count sweep whose cut falls between files unlinks the old
+    files and leaves the kept ones as they are, so a streaming
+    subscription resumed after it delivers nothing again."""
+    pbroker.create_topic("rt", max_events=3)
+    seen = []
+    sid = pbroker.subscribe_streaming(
+        "rt",
+        options=SubscriptionOptions(name="rtsub", retry_delay=0),
+        checkpoint=str(tmp_path / "rtc"),
+        handler=lambda e: seen.append(e.id),
+    )
+    pbroker.subscriptions[sid].query.awaitTermination(60)
+    pbroker.pause(sid)
+    ids = [pbroker.publish("rt", "a", {"i": i}).event_id for i in range(5)]  # one file each
+    pbroker.resume(sid)
+    pbroker.subscriptions[sid].query.awaitTermination(60)
+    pbroker.pause(sid)
+    assert sorted(seen) == sorted(ids)
+
+    assert pbroker.apply_retention("rt") == 2
+    pbroker.resume(sid)
+    pbroker.subscriptions[sid].query.awaitTermination(60)
+    assert len(seen) == 5
+
+
 def test_delete_topic_drops_partition_and_dlq(pbroker, tmp_path):
     """deleteTopic on the parquet broker removes the topic's partition
     directory and its DLQ entries, leaving other topics intact."""
