@@ -11,9 +11,10 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "extra_conf_pairs"]
+__all__ = ["get_spark", "extra_conf_pairs", "driver_class_path"]
 
 
 def extra_conf_pairs(extra: str) -> list:
@@ -43,6 +44,16 @@ def extra_conf_pairs(extra: str) -> list:
             )
         pairs.append((k.strip(), v.strip()))
     return pairs
+
+
+def driver_class_path(conf: SparkConf, jar: str) -> str:
+    """``spark.driver.extraClassPath`` of ``conf`` with ``jar`` appended
+    (once), so a class path set elsewhere is kept, not overwritten."""
+    key = "spark.driver.extraClassPath"
+    entries = [p for p in (conf.get(key) or "").split(os.pathsep) if p]
+    if jar not in entries:
+        entries.append(jar)
+    return os.pathsep.join(entries)
 
 
 def get_spark(app_name: str = "env_event_stream_spark") -> SparkSession:
@@ -105,10 +116,10 @@ def get_spark(app_name: str = "env_event_stream_spark") -> SparkSession:
     # and only when this jar is on the classpath — without it they
     # fall back to plain local paths. Durable deployments never see
     # it: no restorable path uses the scheme and fs.defaultFS is
-    # untouched. Only spark.driver.extraClassPath carries the jar:
-    # the master is always local[...], so executors run inside the
-    # driver JVM; a cluster master would also need it on
-    # spark.executor.extraClassPath.
+    # untouched. Only spark.driver.extraClassPath carries the jar,
+    # appended to any class path already configured: the master is
+    # always local[...], so executors run inside the driver JVM; a
+    # cluster master would also need it on spark.executor.extraClassPath.
     _nochmod_jar = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "jars",
@@ -116,7 +127,8 @@ def get_spark(app_name: str = "env_event_stream_spark") -> SparkSession:
     )
     if os.path.exists(_nochmod_jar):
         builder = builder.config(
-            "spark.driver.extraClassPath", _nochmod_jar
+            "spark.driver.extraClassPath",
+            driver_class_path(SparkConf(), _nochmod_jar),
         ).config(
             "spark.hadoop.fs.nochmod.impl",
             "sparkgraft.NoChmodLocalFileSystem",

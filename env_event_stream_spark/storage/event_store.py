@@ -9,7 +9,10 @@ Reference parity (SURVEY.md §2.1):
   (storage/parquet_append.py); a DataFrame (a bulk load) goes through
   Spark's partitioned writer. The reference appends one event at a
   time; a batch here is one file per topic.
-- ``get_events``            = ``getEvents``  (src/persistence.ts:28-69)
+- ``get_events``            = ``getEvents``  (src/persistence.ts:28-69).
+  A bounded read (``limit > 0``) is answered from the topic's files
+  on the driver (no Spark job); an unbounded one is a Spark scan, so
+  a full replay never has to fit in driver memory.
 - ``delete_events``         = ``deleteEvents`` retention
   (src/persistence.ts:74-93). Plain parquet has no row-level delete,
   so a sweep is planned from the topic's files: files wholly before
@@ -52,7 +55,13 @@ from pyspark.sql import types as T
 
 from env_event_stream_spark.operators.event_queries import get_events as _get_events_df
 from env_event_stream_spark.storage.parquet_append import append_rows, partition_dir
-from env_event_stream_spark.storage.parquet_read import FileKeys, file_keys, read_keys, visible_files
+from env_event_stream_spark.storage.parquet_read import (
+    FileKeys,
+    file_keys,
+    read_keys,
+    read_top_k,
+    visible_files,
+)
 from env_event_stream_spark.storage.rewrite import drop_rows, has_parquet, recover, replace_dir
 
 EVENT_SCHEMA = T.StructType(
@@ -207,9 +216,10 @@ class ParquetEventStore:
     a list to ``save_events``) are written by the driver: one file per
     topic per call, no Spark job (``append_rows``). A DataFrame goes
     through Spark's partitioned writer. Both give the same layout,
-    values and ``.crc`` sidecars. Scan = pruned parquet read;
-    retention delete = the parquet analog of the Postgres ``DELETE
-    WHERE topic=$1 AND timestamp<$2`` (reference
+    values and ``.crc`` sidecars. Scan: a read with ``limit > 0`` is
+    a driver-side top-``limit`` over the partition's files, any other
+    a pruned Spark parquet read. Retention delete = the parquet analog
+    of the Postgres ``DELETE WHERE topic=$1 AND timestamp<$2`` (reference
     src/persistence.ts:407-425), planned on the driver from the
     partition's files: whole files before the cut are unlinked, and a
     partition-local rewrite keeping ``ts >= cutoff`` runs only when the
@@ -261,11 +271,48 @@ class ParquetEventStore:
             .select(*EVENT_SCHEMA.fieldNames())
         )
 
-    def get_events(self, topic: str, **kwargs) -> DataFrame:
-        return _get_events_df(
-            self.to_df(), topic=topic, ts_col="timestamp", type_col="type",
-            tiebreak_col="id", **kwargs,
-        )
+    def get_events(
+        self,
+        topic: str,
+        *,
+        from_ts=None,
+        to_ts=None,
+        event_types: Sequence[str] | None = None,
+        limit: int | None = None,
+    ) -> DataFrame:
+        """A topic's events from ``from_ts`` to ``to_ts`` (inclusive)
+        whose type is in ``event_types``, in ``(timestamp, id)`` order,
+        the first ``limit`` of them.
+
+        A bounded read (``limit > 0``) ends on the driver with at most
+        ``limit`` rows, so it is read there: the partition's files are
+        scanned by ``read_top_k`` with the filters pushed down, and the
+        rows come back as a local DataFrame, which ``collect()`` and
+        ``take()`` answer without a Spark job. An unbounded read
+        (``limit`` None or <= 0, which means everything) stays a Spark
+        scan, so a whole topic never has to fit in driver memory. The
+        bounds compare as Spark compares them: a datetime by F.lit's
+        rule, anything else (an ISO string, a date) cast to a timestamp
+        in the session time zone."""
+        if limit is None or limit <= 0:
+            return _get_events_df(
+                self.to_df(), topic=topic, ts_col="timestamp", type_col="type",
+                tiebreak_col="id", from_ts=from_ts, to_ts=to_ts, event_types=event_types,
+            )
+        ts, utc = pc.field("timestamp"), pa.timestamp("us", "UTC")
+        where = pc.scalar(True)
+        if from_ts is not None:
+            where &= ts >= pa.scalar(_micros(self.spark, from_ts), utc)
+        if to_ts is not None:
+            where &= ts <= pa.scalar(_micros(self.spark, to_ts), utc)
+        if event_types is not None:
+            # a NULL in Spark's IN-list matches no row
+            wanted = pa.array([t for t in event_types if t is not None], pa.string())
+            where &= pc.field("type").isin(wanted)
+        top = read_top_k(EVENT_SCHEMA, self._part_dir(topic), where, ["timestamp", "id"], limit)
+        top = top.set_column(top.schema.get_field_index("topic"), "topic",
+                             pa.array([topic] * top.num_rows, pa.string()))
+        return self.spark.createDataFrame(top, _SCAN_SCHEMA)
 
     def compact(self, topic: str, target_files: int = 1) -> int:
         """Rewrite a topic partition into ``target_files`` files.
@@ -370,6 +417,21 @@ class ParquetEventStore:
 
 
 _EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+
+# EVENT_SCHEMA as a parquet scan reports it: every field nullable
+_SCAN_SCHEMA = T.StructType([T.StructField(f.name, f.dataType) for f in EVENT_SCHEMA])
+
+
+def _micros(spark: SparkSession, bound: Any) -> int | None:
+    """``bound`` in μs since the epoch, as ``F.col("timestamp") >=
+    F.lit(bound)`` compares it: a datetime converted by F.lit's rule (a
+    naive one in the host's zone), anything else cast by Spark in the
+    session zone (None where the cast gives NULL). The cast runs over a
+    one-row local relation, so it is folded on the driver: no job."""
+    if isinstance(bound, _dt.datetime):
+        return T.TimestampType().toInternal(bound)
+    one = spark.sql("VALUES (1)")
+    return one.select(F.unix_micros(F.lit(bound).cast("timestamp"))).collect()[0][0]
 
 
 def _kth_bound(files: list[FileKeys], attr: str, k: int) -> int:

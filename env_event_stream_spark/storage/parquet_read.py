@@ -13,6 +13,11 @@ pyarrow, without a Spark job, and read only what they need:
   Spark's internal values, so ``schema.fromInternal`` turns them into
   the Rows ``collect()`` returns: local naive datetimes, maps as dicts,
   nested structs as Rows.
+- ``read_top_k`` gives the first ``k`` rows matching a pushed-down
+  filter in an ORDER BY's order, streamed batch by batch, so the
+  driver holds ``k`` rows plus the scanner's read-ahead batches,
+  never the whole scan (Spark's ``TakeOrderedAndProject`` merges each
+  partition's top ``k`` on the driver too).
 
 Timestamps are compared as Spark stores them: microseconds since the
 epoch, UTC (INT96 values are UTC instants, as Spark writes them).
@@ -33,7 +38,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-__all__ = ["FileKeys", "file_keys", "read_internal", "read_keys", "visible_files"]
+__all__ = [
+    "FileKeys", "file_keys", "read_internal", "read_keys", "read_top_k", "visible_files",
+]
 
 _INT96_AS_US = {"coerce_int96_timestamp_unit": "us"}
 _FORMAT = ds.ParquetFileFormat(read_options=ds.ParquetReadOptions(**_INT96_AS_US))
@@ -122,14 +129,37 @@ def read_internal(schema: T.StructType, directory: str, where: pc.Expression) ->
     return [convert(r) for r in table.to_pylist()]
 
 
-def _relaxed(schema: T.StructType) -> pa.Schema:
-    """``schema`` in Arrow, every field nullable and every timestamp its
-    int64 μs, so files written by the driver and by Spark (INT96, other
-    nullability) read alike."""
+def read_top_k(
+    schema: T.StructType, directory: str, where: pc.Expression, order: list[str], k: int,
+) -> pa.Table:
+    """The first ``k`` rows under ``directory`` matching ``where`` in
+    ``order``, ascending with NULLs first (an ORDER BY's defaults;
+    strings compare as bytes, as Spark compares them), every field
+    nullable and every timestamp UTC μs, as ``where`` must compare
+    them. A running top ``k`` is merged with each record batch as it
+    is read, so memory is ``k`` rows plus the read-ahead batches,
+    however many rows match."""
+    relaxed = _relaxed(schema, pa.timestamp("us", "UTC"))
+    top = relaxed.empty_table()
+    files = visible_files(directory)
+    if not files:
+        return top
+    keys = [(c, "ascending") for c in order]
+    for batch in ds.dataset(files, format=_FORMAT, schema=relaxed).to_batches(filter=where):
+        if batch.num_rows:
+            merged = pa.concat_tables([top, pa.Table.from_batches([batch])])
+            top = merged.sort_by(keys, null_placement="at_start").slice(0, k)
+    return top
+
+
+def _relaxed(schema: T.StructType, timestamp: pa.DataType = pa.int64()) -> pa.Schema:
+    """``schema`` in Arrow, every field nullable and every timestamp
+    read as ``timestamp`` (by default its int64 μs), so files written
+    by the driver and by Spark (INT96, other nullability) read alike."""
 
     def relax(t: pa.DataType) -> pa.DataType:
         if pa.types.is_timestamp(t):
-            return pa.int64()
+            return timestamp
         if pa.types.is_struct(t):
             return pa.struct([pa.field(f.name, relax(f.type)) for f in t])
         if pa.types.is_map(t):

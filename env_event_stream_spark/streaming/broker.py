@@ -436,9 +436,12 @@ class EventBroker:
         event_types: Sequence[str] | None = None,
         limit: int | None = None,
     ) -> int:
-        """Bounded batch re-drive (src/broker.ts:144-161). Iterates
-        with toLocalIterator — bounded driver memory even for large
-        replays."""
+        """Batch re-drive (src/broker.ts:144-161) in ``(timestamp, id)``
+        order. A limited replay (``limit > 0``) holds at most ``limit``
+        rows, so it collects them (the parquet store reads them on the
+        driver: no Spark job); an unlimited one (None or <= 0) iterates
+        with toLocalIterator, so driver memory stays bounded however
+        large the topic."""
         df = self.store.get_events(
             topic,
             from_ts=from_ts,
@@ -447,7 +450,8 @@ class EventBroker:
             limit=limit,
         )
         n = 0
-        for row in df.toLocalIterator():
+        rows = df.collect() if limit is not None and limit > 0 else df.toLocalIterator()
+        for row in rows:
             handler(row)
             n += 1
         return n

@@ -3,8 +3,11 @@
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 
+from env_event_stream_spark.storage.event_store import make_event
 from env_event_stream_spark.streaming import (
     EventBroker,
     SubscriptionOptions,
@@ -217,14 +220,23 @@ def test_historical_catchup(broker):
     assert seen == ["a", "a"]
 
 
-def test_replay_events(broker):
-    """replayEvents (src/broker.ts:144-161): bounded batch redrive."""
-    for i in range(5):
-        broker.publish("t", "e", {"i": i})
-    seen = []
-    n = broker.replay_events("t", lambda e: seen.append(e.id), limit=3)
-    assert n == 3
-    assert len(seen) == 3
+def test_replay_events(spark, tmp_path):
+    """replayEvents (src/broker.ts:144-161): the topic's events in
+    (timestamp, id) order, the first ``limit`` of them; a limit of 0 or
+    None replays them all. Both store backends, a timestamp tie
+    written out of id order, and a published event after them."""
+    t0 = dt.datetime(2024, 1, 1)
+    for broker in (EventBroker(spark), EventBroker(spark, str(tmp_path / "b"))):
+        events = [make_event("t", "e", event_id=f"id{i}", timestamp=t0 + dt.timedelta(seconds=s))
+                  for i, s in ((4, 3), (3, 1), (2, 2), (1, 1), (0, 0))]
+        broker.store.save_events(events[:2])
+        broker.store.save_events(events[2:])
+        latest = broker.publish("t", "e", {"i": 5}).event_id
+        order = ["id0", "id1", "id3", "id2", "id4", latest]
+        for limit, want in ((3, order[:3]), (0, order), (None, order), (9, order)):
+            seen = []
+            assert broker.replay_events("t", lambda e: seen.append(e.id), limit=limit) == len(want)
+            assert seen == want, (broker.store, limit)
 
 
 def test_dlq_manual_redrive(broker):

@@ -1,6 +1,7 @@
 """Driver-side reads (storage/parquet_read.py) and the broker paths on
-them: DLQ redrive lookup, retention planned from the files, and
-``delete_topic``'s count.
+them: DLQ redrive lookup, retention planned from the files,
+``delete_topic``'s count, and bounded ``get_events`` (a limited replay,
+the aggregate ``exists`` probe).
 
 Each answer is pinned against what Spark gives for the same files, in
 several host time zones, over files the driver wrote (INT64
@@ -15,10 +16,15 @@ import os
 import shutil
 import uuid
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from env_event_stream_spark.aggregates import RepositoryFactory
 from env_event_stream_spark.storage.dlq_store import (
     InMemoryDeadLetterQueue,
     ParquetDeadLetterQueue,
@@ -38,8 +44,8 @@ T0 = dt.datetime(2024, 1, 15, 12, 0, 0, 250000)
 
 def _event(i: int, **kw):
     kw.setdefault("timestamp", T0 + dt.timedelta(seconds=i))
-    return make_event("t", "e", kw.pop("payload", '{"i": %d}' % i), kw.pop("metadata", {"k": "v"}),
-                      event_id=f"e{i}", **kw)
+    return make_event("t", kw.pop("type", "e"), kw.pop("payload", '{"i": %d}' % i),
+                      kw.pop("metadata", {"k": "v"}), event_id=f"e{i}", **kw)
 
 
 class JobBudget:
@@ -206,9 +212,112 @@ def test_file_boundary_sweep_unlinks_whole_files(spark, tmp_path):
     assert sorted(after) == sorted(names + [f".{n}.crc" for n in names])
 
 
+def _multi_batch_file(part_dir: str, events: list) -> str:
+    """``events`` written as one file of two-row row groups, newest
+    first, so the oldest rows come in the last record batch."""
+    rows = sorted(events, key=lambda e: (e.timestamp, e.id or ""), reverse=True)
+    table = pa.table({
+        "id": [e.id for e in rows],
+        "type": [e.type for e in rows],
+        "timestamp": pa.array([T.TimestampType().toInternal(e.timestamp) for e in rows])
+        .cast(pa.timestamp("us", "UTC")),
+        "schemaVersion": [e.schemaVersion for e in rows],
+        "payload": [e.payload for e in rows],
+        "metadata": pa.array([None if e.metadata is None else list(e.metadata.items())
+                              for e in rows], pa.map_(pa.string(), pa.string())),
+    })
+    path = os.path.join(part_dir, "part-multi.parquet")
+    pq.write_table(table, path, row_group_size=2)
+    return path
+
+
+def _bounded_store(spark, tmp_path):
+    """One topic ``t`` over every kind of file: Spark-written (INT96),
+    driver-written (one and several rows), and a multi-batch file; with
+    four rows tied on one timestamp spread over the writers, and NULL
+    payload and metadata; a NULL id (only a foreign writer makes one)
+    ties e12, and sorts first. Also ``a/b c``, a topic that needs
+    escapes."""
+    store = ParquetEventStore(spark, str(tmp_path / "bounded"))
+    store.initialize()
+    tie = T0 + dt.timedelta(seconds=5)
+    ev = [_event(i, type="ab"[i % 2]) for i in range(5)]
+    ev += [_event(i, timestamp=tie, type="ab"[i % 2]) for i in (8, 5, 7, 6)]
+    ev += [_event(i, type="abc"[i % 3], payload=None if i % 4 else "{}",
+                  metadata=None if i % 3 else {"m": str(i)}) for i in range(9, 21)]
+    store.save_events(spark.createDataFrame(ev[0:3] + ev[5:6], EVENT_SCHEMA).coalesce(1))
+    store.save_events(ev[6:8])
+    store.save_event(ev[3])
+    store.save_event(ev[8])
+    no_id = Row(**{**ev[12].asDict(), "id": None})
+    _multi_batch_file(store._part_dir("t"), ev[4:5] + ev[9:] + [no_id])
+    store.save_events([make_event("a/b c", "a", "{}", None, timestamp=T0, event_id="x1"),
+                       make_event("a/b c", "b", None, {"k": "v"}, timestamp=T0, event_id="x0")])
+    return store
+
+
+def _bounded_cases():
+    tz = dt.timezone(dt.timedelta(hours=5, minutes=30))
+    aware = (T0 + dt.timedelta(seconds=6)).replace(tzinfo=dt.timezone.utc).astimezone(tz)
+    windows = [
+        {},
+        {"from_ts": T0 + dt.timedelta(seconds=5)},  # naive: the host's zone
+        {"to_ts": T0 + dt.timedelta(seconds=5)},
+        {"from_ts": aware, "to_ts": T0 + dt.timedelta(seconds=15)},
+        {"from_ts": "2024-01-15 12:00:05.25"},  # a string: the session zone
+        {"from_ts": "2024-01-15T12:00:02+00:00", "to_ts": "2024-01-15T12:00:12.250+00:00"},
+        {"event_types": ["a"]},
+        {"event_types": ["b", "c"], "from_ts": T0 + dt.timedelta(seconds=3)},
+        {"event_types": []},
+        {"event_types": ["zzz"]},
+    ]
+    for kw in windows:
+        for k in (1, 3, 50):  # 50 is more than any window matches
+            yield "t", kw, k
+    for topic in ("a/b c", "missing"):
+        yield topic, {}, 5
+
+
+@pytest.mark.parametrize("host_tz", TZS, indirect=True)
+def test_bounded_get_events_matches_spark(spark, tmp_path, host_tz):
+    """``get_events(limit=k)`` read on the driver gives the Rows, order
+    and schema of the same store's unbounded Spark read cut to ``k``,
+    and starts no Spark job; also for string bounds under a non-UTC
+    session time zone."""
+    store = _bounded_store(spark, tmp_path)
+    part = store._part_dir("t")
+    assert "INT96" in {_timestamp_type(f) for f in visible_files(part)}
+    assert "INT64" in {_timestamp_type(f) for f in visible_files(part)}
+    multi = os.path.join(part, "part-multi.parquet")
+    assert len(list(ds.dataset(multi).to_batches())) > 1
+    session_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for zone in ("UTC", "America/Los_Angeles"):
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            cases = list(_bounded_cases())
+            with JobBudget(spark) as budget:
+                bounded = [store.get_events(t, limit=k, **kw) for t, kw, k in cases]
+                got = [df.collect() for df in bounded]
+                assert budget.jobs() == 0
+            for (t, kw, k), df, rows in zip(cases, bounded, got):
+                spark_df = store.get_events(t, **kw)
+                want = spark_df.collect()[:k]
+                assert df.schema == spark_df.schema
+                assert [r.asDict(recursive=True) for r in rows] \
+                    == [r.asDict(recursive=True) for r in want], (zone, t, kw, k)
+            assert sum(map(len, got)) > 50
+            assert [r.id for r in got[7]] == ["e0", "e1", "e2"]  # to_ts, k=3
+            ids = [r.id for r in got[2]]  # no filter, k=50: every row
+            assert ids[ids.index("e12") - 1] is None
+            assert [r.id for r in got[4]] == ["e5", "e6", "e7"]  # from_ts, k=3: the tie by id
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", session_tz)
+
+
 def test_broker_driver_paths_start_no_spark_job(spark, tmp_path):
     """A count sweep and a time sweep whose cuts fall between files, a
-    redrive, and ``delete_topic``'s count run on the driver."""
+    redrive, ``delete_topic``'s count, a limited replay and the
+    aggregate ``exists`` probe run on the driver."""
     broker = EventBroker(spark, str(tmp_path / "b"))
     broker.create_topic("orders", max_events=3)
     broker.create_topic("old", retention_period=3600.0)
@@ -222,15 +331,21 @@ def test_broker_driver_paths_start_no_spark_job(spark, tmp_path):
         broker.store.save_event(make_event("old", "x", timestamp=T0 + dt.timedelta(hours=i)))
     broker.dlq.compact()  # the lookup also reads Spark-written files
     counted = broker.store.to_df().where(F.col("topic") == "old").count()
+    repo = RepositoryFactory(broker.store).create_repository(lambda i: None, "account")
+    broker.store.save_event(make_event("aggregate.account.a1", "opened"))
     with JobBudget(spark) as budget:
         assert broker.apply_retention("orders") == 2
         assert broker.apply_retention("old", now=T0 + dt.timedelta(hours=3)) == 2
         assert broker.retry_dlq_event(ids[0]) is False  # still failing: a new version
         assert broker.retry_dlq_event("missing") is False
         assert broker.store.delete_topic("old") == counted - 2
+        replayed = []
+        assert broker.replay_events("orders", replayed.append, limit=2) == 2
+        assert repo.exists("a1") and not repo.exists("a2")
         assert budget.jobs() == 0
         spark.range(1).count()  # the meter does see jobs of this group
         assert budget.jobs() >= 1
+    assert [r.id for r in replayed] == ids[2:4]
     assert broker.store.get_events("orders").count() == 3
     entry = broker.dlq.get_entry(ids[0])
     assert (entry.attempts, entry.error) == (2, "down")

@@ -1,6 +1,7 @@
 """SparkSession factory contract: the SPARK_GRAFT_EXTRA_CONF override
 hook used by the catalog-wide invariance sweeps (non-UTC timezone,
-tiny Arrow batches, AQE off, broadcast disabled).
+tiny Arrow batches, AQE off, broadcast disabled), and the driver class
+path the nochmod jar joins.
 
 Only the parsing is unit-tested: getOrCreate() honors configs solely
 on first creation, so an in-process "does the config apply" test
@@ -10,9 +11,12 @@ themselves run check.py in a fresh interpreter.
 
 from __future__ import annotations
 
-import pytest
+import os
 
-from env_event_stream_spark.session import extra_conf_pairs
+import pytest
+from pyspark import SparkConf
+
+from env_event_stream_spark.session import driver_class_path, extra_conf_pairs
 
 
 def test_extra_conf_pairs_parses_k_v_list():
@@ -113,3 +117,16 @@ def test_plain_session_refuses_extra_conf(monkeypatch):
     )
     with pytest.raises(ValueError, match="PLAIN_SESSION ignores"):
         get_spark("refused")
+
+
+def test_driver_class_path_appends_the_jar():
+    """The nochmod jar joins a driver class path already configured
+    (spark-defaults.conf, ``--conf``) instead of replacing it, and is
+    not added twice."""
+    conf = SparkConf(loadDefaults=False)
+    assert driver_class_path(conf, "jars/n.jar") == "jars/n.jar"
+    conf.set("spark.driver.extraClassPath", os.pathsep.join(["libs/a.jar", "libs/b"]))
+    joined = os.pathsep.join(["libs/a.jar", "libs/b", "jars/n.jar"])
+    assert driver_class_path(conf, "jars/n.jar") == joined
+    conf.set("spark.driver.extraClassPath", joined)
+    assert driver_class_path(conf, "jars/n.jar") == joined
