@@ -118,8 +118,12 @@ class AggregateRoot(EventSourcedEntity):
 
 class EventSourcedRepository:
     """src/sourcing.ts:139-281: save / get_by_id / exists /
-    get_events / delete_events over any EventStore backend
-    (in-memory, parquet, JSON-dir, JDBC — all share the interface)."""
+    get_events / delete_events over an event store: ``ParquetEventStore``
+    (a broker's ``store``), or any object whose ``save_events`` takes a
+    list of event Rows and whose ``get_events(topic, **options)`` and
+    ``delete_events(topic, before_ts)`` answer as it does.
+    ``JdbcEventStore`` is not one: its ``save_events`` takes only a
+    DataFrame."""
 
     def __init__(
         self,

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from env_event_stream_spark.operators.event_queries import get_dlq_events
 from env_event_stream_spark.storage.event_store import EVENT_SCHEMA
 from env_event_stream_spark.storage.parquet_append import append_rows
 from env_event_stream_spark.storage.parquet_read import read_internal
@@ -43,7 +44,7 @@ DLQ_SCHEMA = T.StructType(
     ]
 )
 
-__all__ = ["DLQ_SCHEMA", "InMemoryDeadLetterQueue", "ParquetDeadLetterQueue"]
+__all__ = ["DLQ_SCHEMA", "ParquetDeadLetterQueue"]
 
 
 def _now() -> _dt.datetime:
@@ -55,125 +56,6 @@ def _event_tuple(event: Row) -> tuple:
     rows collected from partitioned reads can carry a different
     positional order (partition column last)."""
     return tuple(event[f] for f in EVENT_SCHEMA.fieldNames())
-
-
-def _filter_sort_limit(
-    df: DataFrame,
-    topic: str | None,
-    event_type: str | None,
-    limit: int | None,
-) -> DataFrame:
-    if topic is not None:
-        df = df.where(F.col("event.topic") == topic)
-    if event_type is not None:
-        df = df.where(F.col("event.type") == event_type)
-    df = df.orderBy(F.col("timestamp").desc(), F.col("event.id").desc())
-    # limit <= 0 = no limit (reference src/deadletter.ts:66 is an
-    # explicit `options.limit > 0` guard)
-    if limit is not None and limit > 0:
-        df = df.limit(limit)
-    return df
-
-
-class InMemoryDeadLetterQueue:
-    """In-memory backend (reference src/deadletter.ts:13-113): a dict
-    keyed by event.id, exactly the reference's ``Map`` (:14) — keyed
-    upsert on add, O(1) retry/remove, insertion order preserved
-    (Python dicts and JS Maps both keep first-insertion position on
-    re-set)."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self._entries: dict[str, dict[str, Any]] = {}
-
-    def add_event(self, event: Row, error: str, subscription: str) -> None:
-        """Keyed UPSERT, not append (src/deadletter.ts:25-31) —
-        re-adding the same event REPLACES the existing entry
-        (attempts reset to 1, fresh error/timestamp)."""
-        self._entries[event.id] = {
-            "event": event,
-            "error": error,
-            "subscription": subscription,
-            "timestamp": _now(),
-            "attempts": 1,
-        }
-
-    def to_df(self) -> DataFrame:
-        rows = [
-            (
-                _event_tuple(r["event"]),
-                r["error"],
-                r["subscription"],
-                r["timestamp"],
-                r["attempts"],
-            )
-            for r in self._entries.values()
-        ]
-        return self.spark.createDataFrame(rows or [], schema=DLQ_SCHEMA)
-
-    def get_events(
-        self,
-        topic: str | None = None,
-        event_type: str | None = None,
-        limit: int | None = None,
-    ) -> DataFrame:
-        return _filter_sort_limit(self.to_df(), topic, event_type, limit)
-
-    def size(self) -> int:
-        return len(self._entries)
-
-    def get_entry(self, event_id: str) -> Row | None:
-        """The entry for ``event_id`` as ``to_df().collect()`` returns
-        it, or None."""
-        r = self._entries.get(event_id)
-        if r is None:
-            return None
-        entry = (_event_tuple(r["event"]), r["error"], r["subscription"], r["timestamp"],
-                 r["attempts"])
-        return DLQ_SCHEMA.fromInternal(DLQ_SCHEMA.toInternal(entry))
-
-    def retry_event(self, event_id: str, handler: Callable[[Row], Any]) -> bool:
-        """Re-deliver; delete on success, failure increments
-        ``attempts`` and refreshes ``timestamp`` (reference
-        src/deadletter.ts:78-103). The reference's callback contract
-        is boolean: an explicit ``False`` return is a SOFT failure
-        (error text unchanged, src/deadletter.ts:92-96); a raised
-        exception is a HARD failure that also replaces the error
-        message (:97-102). A None-returning handler that doesn't
-        raise counts as success."""
-        r = self._entries.get(event_id)
-        if r is None:
-            return False
-        try:
-            ok = handler(r["event"])
-        except Exception as exc:  # hard failure: new error
-            ok, r["error"] = False, str(exc)
-        if ok is False:  # soft failure keeps the error
-            r["attempts"] += 1
-            r["timestamp"] = _now()
-            return False
-        # delete by id, as the reference does (entries.delete after the
-        # callback) — if the handler re-dead-lettered the event, that
-        # fresh entry is removed too
-        self._entries.pop(event_id, None)
-        return True
-
-    def remove_event(self, event_id: str) -> bool:
-        return self._entries.pop(event_id, None) is not None
-
-    def delete_topic(self, topic: str) -> int:
-        """Drop all dead letters for a topic (broker deleteTopic)."""
-        return self.delete_matching(F.col("event.topic") == topic)
-
-    def delete_matching(self, predicate) -> int:
-        """Drop the entries matching a Column predicate over the DLQ
-        schema. Returns entries removed."""
-        doomed = [
-            r.id for r in self.to_df().where(predicate).select("event.id").collect()
-        ]
-        for k in doomed:
-            del self._entries[k]
-        return len(doomed)
 
 
 class ParquetDeadLetterQueue:
@@ -240,7 +122,10 @@ class ParquetDeadLetterQueue:
         event_type: str | None = None,
         limit: int | None = None,
     ) -> DataFrame:
-        return _filter_sort_limit(self.to_df(), topic, event_type, limit)
+        return get_dlq_events(
+            self.to_df(), topic=topic, topic_col="event.topic", event_type=event_type,
+            type_col="event.type", ts_col="timestamp", limit=limit, tiebreak_col="event.id",
+        )
 
     def get_entry(self, event_id: str) -> Row | None:
         """The entry ``to_df`` keeps for ``event_id`` (latest
@@ -254,11 +139,13 @@ class ParquetDeadLetterQueue:
         return DLQ_SCHEMA.fromInternal(max(versions, key=lambda v: (v[ts], v[attempts])))
 
     def retry_event(self, event_id: str, handler: Callable[[Row], Any]) -> bool:
-        """Boolean callback contract as the in-memory twin: ``False``
-        return = soft failure (attempts+1, error text kept), raise =
-        hard failure (attempts+1, error replaced); both refresh the
-        timestamp via the versioned append (reference
-        src/deadletter.ts:78-103)."""
+        """Re-deliver; success removes the entry. The reference's
+        callback contract is boolean: ``False`` return = soft failure
+        (attempts+1, error text kept), raise = hard failure (attempts+1,
+        error replaced); both refresh the timestamp via the versioned
+        append (reference src/deadletter.ts:78-103). A None-returning
+        handler that doesn't raise counts as success; removal is by id,
+        so an entry the handler re-dead-lettered goes too."""
         entry = self.get_entry(event_id)
         if entry is None:
             return False

@@ -76,7 +76,7 @@ EVENT_SCHEMA = T.StructType(
     ]
 )
 
-__all__ = ["EVENT_SCHEMA", "make_event", "InMemoryEventStore", "ParquetEventStore"]
+__all__ = ["EVENT_SCHEMA", "make_event", "ParquetEventStore"]
 
 _counter = 0
 
@@ -122,91 +122,6 @@ def make_event(
         payload=payload,
         metadata=metadata,
     )
-
-
-class InMemoryEventStore:
-    """Test/dev backend (reference src/persistence.ts:8-94): events in
-    a per-process list, queried by converting to a DataFrame on read.
-    Keeps the same semantics; only suitable for small data."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self._rows: list[Row] = []
-
-    def save_event(self, event: Row) -> None:
-        self._rows.append(event)
-
-    def save_events(self, events: Sequence[Row]) -> None:
-        self._rows.extend(events)
-
-    def to_df(self) -> DataFrame:
-        return self.spark.createDataFrame(self._rows or [], schema=EVENT_SCHEMA)
-
-    def get_events(self, topic: str, **kwargs) -> DataFrame:
-        return _get_events_df(
-            self.to_df(), topic=topic, ts_col="timestamp", type_col="type",
-            tiebreak_col="id", **kwargs,
-        )
-
-    def delete_events(self, topic: str, before_ts, *, before_id: str | None = None) -> int:
-        if isinstance(before_ts, str):
-            before_ts = _dt.datetime.fromisoformat(before_ts)
-        cut = (before_ts, before_id or "")  # no id: every row at before_ts stays
-        n0 = len(self._rows)
-        self._rows = [
-            r for r in self._rows if not (r.topic == topic and (r.timestamp, r.id) < cut)
-        ]
-        return n0 - len(self._rows)
-
-    def retention_cut(self, topic: str, keep: int) -> tuple[Any, str] | None:
-        """``(timestamp, id)`` of the ``keep``-th newest row of a topic
-        in (timestamp, id) order, or None when it holds ``keep`` rows or
-        fewer."""
-        df = self.get_events(topic)
-        total = df.count()
-        overflow = total - keep
-        if overflow <= 0:
-            return None
-        # cutoff = (timestamp, id) of the (overflow+1)-th oldest row, computed
-        # distributed: TakeOrdered(overflow+1) then re-sort the bounded
-        # set descending and take 1 — exactly ONE row reaches the
-        # driver, never O(overflow) (a 100M-row overflow would
-        # otherwise collect 100M rows).
-        cutoff_row = (
-            df.orderBy(F.col("timestamp").asc(), F.col("id").asc())
-            .limit(overflow + 1)
-            .orderBy(F.col("timestamp").desc(), F.col("id").desc())
-            .limit(1)
-            .collect()[0]
-        )
-        return cutoff_row.timestamp, cutoff_row.id
-
-    def delete_topic(self, topic: str) -> int:
-        """Drop every event of a topic (broker deleteTopic,
-        reference src/broker.ts:55-57). Returns rows removed."""
-        n0 = len(self._rows)
-        self._rows = [r for r in self._rows if r.topic != topic]
-        return n0 - len(self._rows)
-
-    def delete_matching(self, topic: str, predicate) -> int:
-        """Erase rows of a topic matching a Column predicate (the
-        right-to-erasure primitive; see ParquetEventStore twin)."""
-        if not self._rows:
-            return 0
-        doomed = {
-            r.id
-            for r in self.to_df()
-            .where(F.col("topic") == topic)
-            .where(predicate)
-            .select("id")
-            .collect()
-        }
-        n0 = len(self._rows)
-        self._rows = [
-            r for r in self._rows
-            if not (r.topic == topic and r.id in doomed)
-        ]
-        return n0 - len(self._rows)
 
 
 class ParquetEventStore:
@@ -368,8 +283,7 @@ class ParquetEventStore:
         a file wholly after it keeps its name, so streaming
         subscriptions do not see its rows again. Only when a file holds
         rows on both sides is the partition rewritten (``drop_rows``).
-        An ISO string is read by ``datetime.fromisoformat``, as the
-        in-memory store reads it."""
+        An ISO string is read by ``datetime.fromisoformat``."""
         if isinstance(before_ts, str):
             before_ts = _dt.datetime.fromisoformat(before_ts)
         cut = T.TimestampType().toInternal(before_ts)  # the rule F.lit applies

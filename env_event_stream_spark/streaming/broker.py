@@ -18,6 +18,12 @@ Semantics ported 1:1 (and documented divergences):
   declared-but-dead in the reference (SURVEY.md T7) — here
   ``max_events`` is ENFORCED as count-based retention (upgrade).
 
+Storage: one backend. Every broker keeps its events and dead letters
+in parquet (``ParquetEventStore``, ``ParquetDeadLetterQueue``), under
+the caller's path or, with none, under a private temp dir that lives
+as long as the broker — the reference's in-memory backends map onto
+that (src/persistence.ts:8-94, src/deadletter.ts:13-113).
+
 Scale: publish batches (``publish_many``) append columnar; per-event
 python handlers exist for parity but the scale path is
 ``subscribe_streaming`` + a vectorized batch handler (DataFrame in,
@@ -28,9 +34,12 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
+import shutil
+import tempfile
 import threading
 import time
 import uuid
+import weakref
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from typing import Any
@@ -39,9 +48,9 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from env_event_stream_spark.schema_registry import SchemaRegistry
-from env_event_stream_spark.storage.dlq_store import InMemoryDeadLetterQueue
+from env_event_stream_spark.storage.dlq_store import ParquetDeadLetterQueue
 from env_event_stream_spark.storage.event_store import (
-    InMemoryEventStore,
+    EVENT_SCHEMA,
     ParquetEventStore,
     make_event,
 )
@@ -104,24 +113,22 @@ class _TopicMeta:
 
 
 class EventBroker:
-    """Topic hub (src/broker.ts:19-27). ``path=None`` uses the
-    in-memory store (unit tests); a path makes parquet the system of
-    record and enables streaming subscriptions."""
+    """Topic hub (src/broker.ts:19-27). Events and dead letters live in
+    parquet under ``path`` (``events/``, ``dlq/``). With no path the
+    broker makes a private temp dir, deleted when the broker is
+    garbage-collected or the process exits: the reference's
+    ``new EventBroker()`` keeps its state in memory, for the life of
+    the object."""
 
     def __init__(self, spark: SparkSession, path: str | None = None):
         self.spark = spark
-        self.path = path
         if path is None:
-            self.store = InMemoryEventStore(spark)
-            self.dlq = InMemoryDeadLetterQueue(spark)
-        else:
-            self.store = ParquetEventStore(spark, f"{path}/events")
-            self.store.initialize()
-            from env_event_stream_spark.storage.dlq_store import (
-                ParquetDeadLetterQueue,
-            )
-
-            self.dlq = ParquetDeadLetterQueue(spark, f"{path}/dlq")
+            path = tempfile.mkdtemp(prefix="event-broker-")
+            weakref.finalize(self, shutil.rmtree, path, True)
+        self.path = path
+        self.store = ParquetEventStore(spark, f"{path}/events")
+        self.store.initialize()
+        self.dlq = ParquetDeadLetterQueue(spark, f"{path}/dlq")
         self.topics: dict[str, _TopicMeta] = {}
         self.subscriptions: dict[str, _Subscription] = {}
 
@@ -353,13 +360,9 @@ class EventBroker:
         again, but a rewrite of the topic (compact, erase, a retention
         cut inside a file) renames the kept rows' files, and they are
         delivered again (5 events, 10 deliveries after a compact)."""
-        if self.path is None:
-            raise ValueError("streaming subscriptions need a parquet-backed broker")
         options = options or SubscriptionOptions()
         sub_id = options.name or f"sub-{uuid.uuid4().hex[:8]}"
         sub = _Subscription(sub_id, topic, handler or (lambda r: None), options)
-
-        from env_event_stream_spark.storage.event_store import EVENT_SCHEMA
 
         def process(df: DataFrame, epoch_id: int) -> None:
             if batch_handler is not None:
@@ -373,8 +376,8 @@ class EventBroker:
             # DataFrame across runs trips PLAN_VALIDATION_FAILED
             stream = (
                 self.spark.readStream.schema(EVENT_SCHEMA)
-                .option("basePath", f"{self.path}/events")
-                .parquet(f"{self.path}/events")
+                .option("basePath", self.store.path)
+                .parquet(self.store.path)
                 .where(F.col("topic") == topic)
             )
             if options.event_types:
@@ -591,16 +594,17 @@ def default_broker(spark: SparkSession) -> EventBroker:
     """The reference's module-level singleton (src/broker.ts:187:
     ``export const defaultBroker = new EventBroker()``), lazified:
     Python can't construct one at import time because a broker needs
-    a SparkSession. The first call creates it (in-memory store + DLQ,
-    exactly the reference's no-arg constructor); every later call
-    returns the SAME instance — per-process, like the reference's
-    module scope. Two departures the JVM lifecycle forces: creation
+    a SparkSession. The first call creates it (a broker with no path:
+    store and DLQ in a private temp dir, the reference's no-arg
+    constructor); every later call returns the SAME instance —
+    per-process, like the reference's module scope. Two departures
+    the JVM lifecycle forces: creation
     is lock-guarded (a module ``const`` can't race; a lazy factory
     can), and a singleton bound to a STOPPED session is replaced with
     one bound to the caller's live session instead of handing back a
     broker whose every call raises 'SparkContext was shut down'
-    (the in-memory state of the dead instance is unrecoverable
-    either way — its rows lived in that context's process state)."""
+    (the dead instance's events are not carried over: they lived in
+    its private temp dir, deleted with it)."""
     global _default_broker
     with _default_broker_lock:
         if _default_broker is None or _session_stopped(_default_broker.spark):

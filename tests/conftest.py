@@ -3,6 +3,7 @@ from __future__ import annotations
 import os
 import sys
 import time
+import uuid
 
 import pytest
 
@@ -58,3 +59,21 @@ def require_wholestage_codegen(spark):
     """Codegen-marker pins are vacuous under the `nocodegen` sweep."""
     if str(spark.conf.get("spark.sql.codegen.wholeStage", "true")).lower() == "false":
         pytest.skip("whole-stage codegen disabled (nocodegen sweep)")
+
+
+class JobBudget:
+    """Counts the Spark jobs started in a job group of its own."""
+
+    def __init__(self, spark):
+        self.sc = spark.sparkContext
+        self.group = f"budget-{uuid.uuid4().hex}"
+
+    def __enter__(self):
+        self.sc.setJobGroup(self.group, "job budget")
+        return self
+
+    def __exit__(self, *exc):
+        self.sc._jsc.clearJobGroup()
+
+    def jobs(self) -> int:
+        return len(self.sc.statusTracker().getJobIdsForGroup(self.group))

@@ -1,6 +1,6 @@
 """AggregateRoot / EventSourcedRepository facade (reference
 src/sourcing.ts:8-305): record → save → rehydrate round-trips over
-the pluggable stores, uncommitted-event bookkeeping, exists probe,
+the parquet store, uncommitted-event bookkeeping, exists probe,
 and the repository-consistent topic naming that fixes the
 reference's save/getById topic mismatch."""
 
@@ -14,10 +14,7 @@ from env_event_stream_spark.aggregates import (
     AggregateRoot,
     RepositoryFactory,
 )
-from env_event_stream_spark.storage.event_store import (
-    InMemoryEventStore,
-    ParquetEventStore,
-)
+from env_event_stream_spark.storage.event_store import ParquetEventStore
 
 
 class Account(AggregateRoot):
@@ -40,13 +37,9 @@ class Account(AggregateRoot):
         self.record_event("withdrawn", json.dumps({"amount": amount}))
 
 
-@pytest.fixture(params=["memory", "parquet"])
-def repo(request, spark, tmp_path):
-    store = (
-        InMemoryEventStore(spark)
-        if request.param == "memory"
-        else ParquetEventStore(spark, str(tmp_path / "events"))
-    )
+@pytest.fixture(params=["parquet"])
+def repo(spark, tmp_path):
+    store = ParquetEventStore(spark, str(tmp_path / "events"))
     return RepositoryFactory(store).create_repository(Account, "account")
 
 

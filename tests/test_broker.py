@@ -4,10 +4,16 @@
 from __future__ import annotations
 
 import datetime as dt
+import gc
+import os
 
+import pyarrow.parquet as pq
 import pytest
+from conftest import JobBudget
 
-from env_event_stream_spark.storage.event_store import make_event
+import env_event_stream_spark.storage.event_store as event_store
+from env_event_stream_spark.storage.dlq_store import ParquetDeadLetterQueue
+from env_event_stream_spark.storage.event_store import ParquetEventStore, make_event
 from env_event_stream_spark.streaming import (
     EventBroker,
     SubscriptionOptions,
@@ -16,7 +22,7 @@ from env_event_stream_spark.streaming import (
 
 @pytest.fixture()
 def broker(spark):
-    return EventBroker(spark)  # in-memory store/DLQ
+    return EventBroker(spark)  # store and DLQ in a private temp dir
 
 
 def test_topic_creation(broker):
@@ -93,63 +99,53 @@ def test_get_and_delete_topic(broker):
     )
     broker.publish("dt", "e", {"n": 1})
     broker.publish("other", "e", {"n": 2})
-    assert broker.dlq.size() == 1
+    assert broker.dlq.get_events().count() == 1
 
     assert broker.delete_topic("dt") is True
     assert broker.delete_topic("dt") is False  # already gone
     assert "dt" not in broker.list_topics()
     assert broker.get_topic("dt") is None
     assert broker.store.get_events("dt").count() == 0
-    assert broker.dlq.size() == 0
+    assert broker.dlq.get_events().count() == 0
     assert "dsub" not in broker.subscriptions
     assert broker.store.get_events("other").count() == 1  # untouched
 
 
 def test_max_events_cutoff_bounded_collect(spark, monkeypatch):
-    """_enforce_max_events must bring at most ONE row to the driver
-    regardless of overflow size (scale guard: a 100M-row overflow
-    must not become a 100M-row collect)."""
-    import datetime as dt
-
-    # patch the CONCRETE class (Spark 4 routes pyspark.sql.DataFrame
-    # calls through pyspark.sql.classic.dataframe.DataFrame.collect)
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    from env_event_stream_spark.storage.event_store import make_event
-
+    """Scale guard for the count cap: a sweep over 50 one-row files
+    reads the keys of the one file that holds the cut, and no other,
+    and starts no Spark job (a 100M-row overflow must not become a
+    100M-row read)."""
     broker = EventBroker(spark)
     broker.create_topic("big", max_events=5)
     base = dt.datetime(2024, 1, 1)
-    broker.store.save_events([
-        make_event("big", "e", timestamp=base + dt.timedelta(seconds=i),
-                   event_id=f"e-{i:03d}")
-        for i in range(50)
-    ])
+    for i in range(50):
+        broker.store.save_event(
+            make_event("big", "e", timestamp=base + dt.timedelta(seconds=i),
+                       event_id=f"e-{i:03d}")
+        )
+    read = []
+    orig = event_store.read_keys
 
-    sizes = []
-    orig = DataFrame.collect
+    def spying(f):
+        read.append(f.path)
+        return orig(f)
 
-    def spying(self):
-        out = orig(self)
-        sizes.append(len(out))
-        return out
-
-    monkeypatch.setattr(DataFrame, "collect", spying)
-    deleted = broker.apply_retention("big")
-    assert deleted == 45
-    assert broker.store.get_events("big").count() == 5
-    assert sizes and max(sizes) <= 1  # never O(overflow) on the driver
+    monkeypatch.setattr(event_store, "read_keys", spying)
+    with JobBudget(spark) as budget:
+        assert broker.apply_retention("big") == 45
+        assert budget.jobs() == 0
+    assert len(set(read)) == 1
+    assert pq.read_table(read[0]).column("id").to_pylist() == ["e-045"]
+    kept = [r.id for r in broker.store.get_events("big").collect()]
+    assert kept == [f"e-{i:03d}" for i in range(45, 50)]
 
 
-@pytest.mark.parametrize("backend", ["memory", "parquet"])
+@pytest.mark.parametrize("backend", ["parquet"])
 def test_max_events_exact_when_timestamps_tie(spark, tmp_path, backend):
     """The count cap cuts on (timestamp, id): rows tied with the
     cutoff row on timestamp alone do not survive it."""
-    import datetime as dt
-
-    from env_event_stream_spark.storage.event_store import make_event
-
-    broker = EventBroker(spark, None if backend == "memory" else str(tmp_path / "b"))
+    broker = EventBroker(spark, str(tmp_path / "b"))
     broker.create_topic("tie", max_events=2)
     same = dt.datetime(2024, 1, 1)
     broker.store.save_events([
@@ -189,7 +185,7 @@ def test_recovers_on_retry(broker):
     )
     broker.publish("t", "x", {})
     assert len(calls) == 2
-    assert broker.dlq.size() == 0
+    assert broker.dlq.get_events().count() == 0
 
 
 def test_pause_drops_resume_delivers(broker):
@@ -220,23 +216,22 @@ def test_historical_catchup(broker):
     assert seen == ["a", "a"]
 
 
-def test_replay_events(spark, tmp_path):
+def test_replay_events(broker):
     """replayEvents (src/broker.ts:144-161): the topic's events in
     (timestamp, id) order, the first ``limit`` of them; a limit of 0 or
-    None replays them all. Both store backends, a timestamp tie
-    written out of id order, and a published event after them."""
+    None replays them all. A timestamp tie written out of id order,
+    and a published event after them."""
     t0 = dt.datetime(2024, 1, 1)
-    for broker in (EventBroker(spark), EventBroker(spark, str(tmp_path / "b"))):
-        events = [make_event("t", "e", event_id=f"id{i}", timestamp=t0 + dt.timedelta(seconds=s))
-                  for i, s in ((4, 3), (3, 1), (2, 2), (1, 1), (0, 0))]
-        broker.store.save_events(events[:2])
-        broker.store.save_events(events[2:])
-        latest = broker.publish("t", "e", {"i": 5}).event_id
-        order = ["id0", "id1", "id3", "id2", "id4", latest]
-        for limit, want in ((3, order[:3]), (0, order), (None, order), (9, order)):
-            seen = []
-            assert broker.replay_events("t", lambda e: seen.append(e.id), limit=limit) == len(want)
-            assert seen == want, (broker.store, limit)
+    events = [make_event("t", "e", event_id=f"id{i}", timestamp=t0 + dt.timedelta(seconds=s))
+              for i, s in ((4, 3), (3, 1), (2, 2), (1, 1), (0, 0))]
+    broker.store.save_events(events[:2])
+    broker.store.save_events(events[2:])
+    latest = broker.publish("t", "e", {"i": 5}).event_id
+    order = ["id0", "id1", "id3", "id2", "id4", latest]
+    for limit, want in ((3, order[:3]), (0, order), (None, order), (9, order)):
+        seen = []
+        assert broker.replay_events("t", lambda e: seen.append(e.id), limit=limit) == len(want)
+        assert seen == want, limit
 
 
 def test_dlq_manual_redrive(broker):
@@ -259,7 +254,7 @@ def test_dlq_manual_redrive(broker):
     # fixed: redrive succeeds and removes
     state["fail"] = False
     assert broker.retry_dlq_event(entry.event.id) is True
-    assert broker.dlq.size() == 0
+    assert broker.dlq.get_events().count() == 0
     assert broker.retry_dlq_event("missing-id") is False
 
 
@@ -324,41 +319,30 @@ def test_retention_time_and_count(spark):
 def test_dlq_get_events_filtering_and_remove(spark, tmp_path):
     """deadletter_test.ts:82-107 ('should get events with filtering')
     and :162-186 (remove + removing a non-existent id returns false),
-    on both backends: topic filter, type filter, limit, newest-first
-    order, keyed removal."""
-    import datetime as dt
-
-    from env_event_stream_spark.storage.dlq_store import (
-        InMemoryDeadLetterQueue,
-        ParquetDeadLetterQueue,
-    )
-    from env_event_stream_spark.storage.event_store import make_event
-
+    topic filter, type filter, limit, newest-first order, keyed
+    removal."""
     e1 = make_event("topic-1", "type-1", "{}", None,
                     timestamp=dt.datetime(2024, 1, 1, 10), event_id="ev-1")
     e2 = make_event("topic-2", "type-2", "{}", None,
                     timestamp=dt.datetime(2024, 1, 1, 11), event_id="ev-2")
-    for dlq in (
-        InMemoryDeadLetterQueue(spark),
-        ParquetDeadLetterQueue(spark, str(tmp_path / "dlq_filter")),
-    ):
-        dlq.add_event(e1, "Test error 1", "handler-1")
-        dlq.add_event(e2, "Test error 2", "handler-2")
-        by_topic = dlq.get_events(topic="topic-1").collect()
-        assert [r.event.id for r in by_topic] == ["ev-1"]
-        assert by_topic[0].subscription == "handler-1"
-        by_type = dlq.get_events(event_type="type-2").collect()
-        assert [r.event.id for r in by_type] == ["ev-2"]
-        limited = dlq.get_events(limit=1).collect()
-        assert len(limited) == 1
-        # newest-first: e2 was ADDED second (its DLQ timestamp is
-        # later), so it leads (deadletter.ts:63 sorts on entry ts)
-        assert [r.event.id for r in dlq.get_events().collect()] == [
-            "ev-2", "ev-1",
-        ]
-        assert dlq.remove_event("ev-1") is True
-        assert dlq.get_events().count() == 1
-        assert dlq.remove_event("no-such-id") is False
+    dlq = ParquetDeadLetterQueue(spark, str(tmp_path / "dlq_filter"))
+    dlq.add_event(e1, "Test error 1", "handler-1")
+    dlq.add_event(e2, "Test error 2", "handler-2")
+    by_topic = dlq.get_events(topic="topic-1").collect()
+    assert [r.event.id for r in by_topic] == ["ev-1"]
+    assert by_topic[0].subscription == "handler-1"
+    by_type = dlq.get_events(event_type="type-2").collect()
+    assert [r.event.id for r in by_type] == ["ev-2"]
+    limited = dlq.get_events(limit=1).collect()
+    assert len(limited) == 1
+    # newest-first: e2 was ADDED second (its DLQ timestamp is
+    # later), so it leads (deadletter.ts:63 sorts on entry ts)
+    assert [r.event.id for r in dlq.get_events().collect()] == [
+        "ev-2", "ev-1",
+    ]
+    assert dlq.remove_event("ev-1") is True
+    assert dlq.get_events().count() == 1
+    assert dlq.remove_event("no-such-id") is False
 
 
 def test_default_broker_is_a_process_singleton(spark):
@@ -386,34 +370,19 @@ def test_limit_zero_means_no_limit(spark, tmp_path):
     `if (options.limit)` treats 0 as absent (src/persistence.ts:63)
     and the DLQ guard is an explicit `limit > 0`
     (src/deadletter.ts:66) — limit=0 must return EVERYTHING, not an
-    empty frame, on every backend."""
-    from env_event_stream_spark.storage.dlq_store import (
-        InMemoryDeadLetterQueue,
-        ParquetDeadLetterQueue,
-    )
-    from env_event_stream_spark.storage.event_store import (
-        InMemoryEventStore,
-        ParquetEventStore,
-        make_event,
-    )
-
-    mem = InMemoryEventStore(spark)
-    pq = ParquetEventStore(spark, str(tmp_path / "ev"))
-    pq.initialize()
+    empty frame, on the event store and the DLQ."""
+    store = ParquetEventStore(spark, str(tmp_path / "ev"))
+    store.initialize()
     events = [make_event("t", "e", event_id=f"ev-{i}") for i in range(4)]
-    for store in (mem, pq):
-        store.save_events(events)
-        assert store.get_events("t", limit=0).count() == 4
-        assert store.get_events("t", limit=2).count() == 2
+    store.save_events(events)
+    assert store.get_events("t", limit=0).count() == 4
+    assert store.get_events("t", limit=2).count() == 2
 
-    for dlq in (
-        InMemoryDeadLetterQueue(spark),
-        ParquetDeadLetterQueue(spark, str(tmp_path / "dlq")),
-    ):
-        for e in events:
-            dlq.add_event(e, "err", "h1")
-        assert dlq.get_events(limit=0).count() == 4
-        assert dlq.get_events(limit=2).count() == 2
+    dlq = ParquetDeadLetterQueue(spark, str(tmp_path / "dlq"))
+    for e in events:
+        dlq.add_event(e, "err", "h1")
+    assert dlq.get_events(limit=0).count() == 4
+    assert dlq.get_events(limit=2).count() == 2
 
 
 def test_retention_zero_means_keep_forever(spark):
@@ -493,15 +462,10 @@ def test_dlq_soft_and_hard_retry_failures(broker, spark, tmp_path):
     """deadletter_test.ts "should handle failed retries" (callback
     returns false -> attempts+1, error text UNCHANGED) and "should
     handle retry exceptions" (raise -> attempts+1, error REPLACED) —
-    the reference's boolean retry-callback contract, on both DLQ
-    backends (src/deadletter.ts:78-103)."""
-    from env_event_stream_spark.storage.dlq_store import (
-        InMemoryDeadLetterQueue,
-        ParquetDeadLetterQueue,
-    )
-
+    the reference's boolean retry-callback contract
+    (src/deadletter.ts:78-103)."""
     # manufacture a real DLQ entry through the broker, then replay
-    # its event into both backends directly
+    # its event into a DLQ of its own
     broker.subscribe(
         "t",
         lambda e: (_ for _ in ()).throw(RuntimeError("first error")),
@@ -510,28 +474,25 @@ def test_dlq_soft_and_hard_retry_failures(broker, spark, tmp_path):
     broker.publish("t", "x", {})
     event = broker.dlq.get_events().collect()[0].event
 
-    backends = [
-        InMemoryDeadLetterQueue(spark),
-        ParquetDeadLetterQueue(spark, str(tmp_path / "dlq")),
-    ]
-    for dlq in backends:
-        dlq.add_event(event, "first error", "h1")
-        # soft failure: handler returns False — error text kept
-        assert dlq.retry_event(event.id, lambda e: False) is False
-        entry = dlq.get_events().collect()[0]
-        assert entry.attempts == 2
-        assert entry.error == "first error"
-        # hard failure: handler raises — error text replaced
-        def boom(_):
-            raise RuntimeError("second error")
+    dlq = ParquetDeadLetterQueue(spark, str(tmp_path / "dlq"))
+    dlq.add_event(event, "first error", "h1")
+    # soft failure: handler returns False — error text kept
+    assert dlq.retry_event(event.id, lambda e: False) is False
+    entry = dlq.get_events().collect()[0]
+    assert entry.attempts == 2
+    assert entry.error == "first error"
 
-        assert dlq.retry_event(event.id, boom) is False
-        entry = dlq.get_events().collect()[0]
-        assert entry.attempts == 3
-        assert entry.error == "second error"
-        # success (None-returning handler): entry removed
-        assert dlq.retry_event(event.id, lambda e: None) is True
-        assert dlq.get_events().count() == 0
+    # hard failure: handler raises — error text replaced
+    def boom(_):
+        raise RuntimeError("second error")
+
+    assert dlq.retry_event(event.id, boom) is False
+    entry = dlq.get_events().collect()[0]
+    assert entry.attempts == 3
+    assert entry.error == "second error"
+    # success (None-returning handler): entry removed
+    assert dlq.retry_event(event.id, lambda e: None) is True
+    assert dlq.get_events().count() == 0
 
 
 def test_dlq_redrive_missing_subscription_is_hard_failure(broker):
@@ -575,7 +536,7 @@ def test_dlq_redrive_paused_sub_is_gated_noop(broker):
     broker.pause(sid)
     assert broker.retry_dlq_event(entry.event.id) is True
     assert len(calls) == n_calls  # handler never invoked
-    assert broker.dlq.size() == 0  # gated no-op counts as success
+    assert broker.dlq.get_events().count() == 0  # gated no-op counts as success
 
 
 def test_dlq_redrive_type_filtered_is_gated_noop(broker):
@@ -603,7 +564,7 @@ def test_dlq_redrive_type_filtered_is_gated_noop(broker):
     broker.subscriptions[sid].options.event_types = ["other"]
     assert broker.retry_dlq_event(entry.event.id) is True
     assert len(calls) == n_calls
-    assert broker.dlq.size() == 0
+    assert broker.dlq.get_events().count() == 0
 
 
 def test_dlq_redrive_missing_topic_is_hard_failure(broker):
@@ -630,12 +591,7 @@ def test_dlq_redrive_missing_topic_is_hard_failure(broker):
 def test_dlq_add_event_is_keyed_upsert(broker, spark, tmp_path):
     """src/deadletter.ts:14,25-31: entries are a Map keyed by
     event.id — re-adding the same event REPLACES the entry (attempts
-    reset to 1, fresh error), in both backends."""
-    from env_event_stream_spark.storage.dlq_store import (
-        InMemoryDeadLetterQueue,
-        ParquetDeadLetterQueue,
-    )
-
+    reset to 1, fresh error)."""
     broker.subscribe(
         "t",
         lambda e: (_ for _ in ()).throw(RuntimeError("first error")),
@@ -644,20 +600,16 @@ def test_dlq_add_event_is_keyed_upsert(broker, spark, tmp_path):
     broker.publish("t", "x", {})
     event = broker.dlq.get_events().collect()[0].event
 
-    backends = [
-        InMemoryDeadLetterQueue(spark),
-        ParquetDeadLetterQueue(spark, str(tmp_path / "dlq_upsert")),
-    ]
-    for dlq in backends:
-        dlq.add_event(event, "first error", "h1")
-        # bump attempts so the reset is observable
-        assert dlq.retry_event(event.id, lambda e: False) is False
-        assert dlq.get_events().collect()[0].attempts == 2
-        dlq.add_event(event, "second error", "h1")
-        entries = dlq.get_events().collect()
-        assert len(entries) == 1  # keyed, not appended
-        assert entries[0].attempts == 1  # Map.set resets
-        assert entries[0].error == "second error"
+    dlq = ParquetDeadLetterQueue(spark, str(tmp_path / "dlq_upsert"))
+    dlq.add_event(event, "first error", "h1")
+    # bump attempts so the reset is observable
+    assert dlq.retry_event(event.id, lambda e: False) is False
+    assert dlq.get_events().collect()[0].attempts == 2
+    dlq.add_event(event, "second error", "h1")
+    entries = dlq.get_events().collect()
+    assert len(entries) == 1  # keyed, not appended
+    assert entries[0].attempts == 1  # Map.set resets
+    assert entries[0].error == "second error"
 
 
 def test_create_topic_is_idempotent_keep_first(broker):
@@ -669,3 +621,51 @@ def test_create_topic_is_idempotent_keep_first(broker):
     again = broker.create_topic("t", max_events=999)
     assert again is first
     assert broker.get_topic("t").max_events == 5
+
+
+def _parquet_files(root: str) -> list[str]:
+    return [os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs
+            if f.endswith(".parquet")]
+
+
+def test_broker_without_path_owns_a_private_dir(spark):
+    """``EventBroker(spark)`` keeps its events and dead letters in a
+    dir of its own, deleted when the broker is garbage-collected."""
+    broker = EventBroker(spark)
+    path = broker.path
+
+    def failing(_):
+        raise RuntimeError("down")
+
+    broker.subscribe("t", failing, SubscriptionOptions(max_retries=1, retry_delay=0))
+    broker.publish("t", "e", {"n": 1})
+    assert _parquet_files(broker.store.path) and _parquet_files(broker.dlq.path)
+    assert {os.path.dirname(broker.store.path), os.path.dirname(broker.dlq.path)} == {path}
+    del broker, failing
+    gc.collect()
+    assert not os.path.exists(path)
+
+
+def test_brokers_without_path_do_not_share_events(spark):
+    a, b = EventBroker(spark), EventBroker(spark)
+    assert a.path != b.path
+
+    def failing(_):
+        raise RuntimeError("down")
+
+    a.subscribe("t", failing, SubscriptionOptions(max_retries=1, retry_delay=0))
+    a.publish("t", "e", {"n": 1})
+    assert a.store.get_events("t").count() == a.dlq.get_events().count() == 1
+    assert b.store.get_events("t").count() == b.dlq.get_events().count() == 0
+    b.publish("t", "e", {"n": 2})
+    assert a.store.get_events("t").count() == b.store.get_events("t").count() == 1
+
+
+def test_subscribe_streaming_without_path_delivers_backlog(broker, tmp_path):
+    broker.publish_many("s", [("a", {"i": i}, None) for i in range(3)])
+    seen = []
+    sid = broker.subscribe_streaming(
+        "s", checkpoint=str(tmp_path / "ckpt"), handler=lambda e: seen.append(e.payload),
+    )
+    broker.subscriptions[sid].query.awaitTermination(60)
+    assert sorted(seen) == ['{"i": 0}', '{"i": 1}', '{"i": 2}']

@@ -179,9 +179,9 @@ def test_crc_sidecar_is_byte_identical_to_hadoops(spark, tmp_path):
 
 
 def test_publish_starts_no_spark_job(spark, tmp_path):
-    """A publish to a parquet-backed broker, one that dead-letters
-    included, runs entirely on the driver; a 1,000-event publish_many
-    adds exactly one file to its topic."""
+    """A publish, one that dead-letters included, runs entirely on the
+    driver; a 1,000-event publish_many adds exactly one file to its
+    topic."""
     broker = EventBroker(spark, str(tmp_path / "b"))
 
     def fail(_):

@@ -14,24 +14,20 @@ from __future__ import annotations
 import datetime as dt
 import os
 import shutil
-import uuid
 
 import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
+from conftest import JobBudget
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from env_event_stream_spark.aggregates import RepositoryFactory
-from env_event_stream_spark.storage.dlq_store import (
-    InMemoryDeadLetterQueue,
-    ParquetDeadLetterQueue,
-)
+from env_event_stream_spark.storage.dlq_store import ParquetDeadLetterQueue
 from env_event_stream_spark.storage.event_store import (
     EVENT_SCHEMA,
-    InMemoryEventStore,
     ParquetEventStore,
     make_event,
 )
@@ -46,24 +42,6 @@ def _event(i: int, **kw):
     kw.setdefault("timestamp", T0 + dt.timedelta(seconds=i))
     return make_event("t", kw.pop("type", "e"), kw.pop("payload", '{"i": %d}' % i),
                       kw.pop("metadata", {"k": "v"}), event_id=f"e{i}", **kw)
-
-
-class JobBudget:
-    """Counts the Spark jobs started in a job group of its own."""
-
-    def __init__(self, spark):
-        self.sc = spark.sparkContext
-        self.group = f"budget-{uuid.uuid4().hex}"
-
-    def __enter__(self):
-        self.sc.setJobGroup(self.group, "job budget")
-        return self
-
-    def __exit__(self, *exc):
-        self.sc._jsc.clearJobGroup()
-
-    def jobs(self) -> int:
-        return len(self.sc.statusTracker().getJobIdsForGroup(self.group))
 
 
 def _timestamp_type(path: str) -> str:
@@ -112,33 +90,22 @@ def test_dlq_get_entry_matches_spark_collect(spark, tmp_path, host_tz):
     assert dlq.get_entry("e2").attempts == 2
 
 
-@pytest.mark.parametrize("host_tz", TZS, indirect=True)
-def test_in_memory_dlq_get_entry_matches_collect(spark, host_tz):
-    dlq = InMemoryDeadLetterQueue(spark)
-    dlq.add_event(_event(0), "boom", "s")
-    dlq.add_event(_event(1, payload=None, metadata=None), None, None)
-    for i in ("e0", "e1", "missing"):
-        assert dlq.get_entry(i) == _collected(dlq, i)
-
-
-def _stores(spark, tmp_path):
-    """The same events in both backends. In the parquet one, e0-e5 are
-    one Spark-written file per timestamp pair and the rest are
-    driver-written, one or three rows to a file; e6-e8 tie."""
+def _events_store(spark, tmp_path):
+    """14 events, and a store holding them: e0-e5 are one Spark-written
+    file per timestamp pair and the rest are driver-written, one or
+    three rows to a file; e6-e8 tie."""
     tie = T0 + dt.timedelta(seconds=6)
     events = [_event(i) for i in range(6)]
     events += [_event(i, timestamp=tie) for i in (8, 6, 7)]
     events += [_event(i) for i in range(9, 14)]
-    memory = InMemoryEventStore(spark)
-    memory.save_events(events)
-    parquet = ParquetEventStore(spark, str(tmp_path / "events"))
-    parquet.initialize()
+    store = ParquetEventStore(spark, str(tmp_path / "events"))
+    store.initialize()
     for k in range(0, 6, 2):
-        parquet.save_events(spark.createDataFrame(events[k:k + 2], EVENT_SCHEMA).coalesce(1))
-    parquet.save_events(events[6:9])
+        store.save_events(spark.createDataFrame(events[k:k + 2], EVENT_SCHEMA).coalesce(1))
+    store.save_events(events[6:9])
     for e in events[9:]:
-        parquet.save_event(e)
-    return memory, parquet
+        store.save_event(e)
+    return events, store
 
 
 def _kept(store) -> list[str]:
@@ -160,49 +127,47 @@ CUTS = [
 
 
 @pytest.mark.parametrize("host_tz", TZS, indirect=True)
-def test_retention_keeps_same_ids_on_both_backends(spark, tmp_path, host_tz):
+def test_retention_keeps_same_ids(spark, tmp_path, host_tz):
     """``apply_retention`` (count and time) and an ISO-string
-    ``delete_events`` keep the same ids on the in-memory store and on
-    parquet files of both writers, ties included."""
-    memory0, parquet0 = _stores(spark, tmp_path)
+    ``delete_events`` keep the ids that the cut leaves in ``(timestamp,
+    id)`` order, over files of both writers, ties included."""
+    events, store0 = _events_store(spark, tmp_path)
+    ordered = sorted(events, key=lambda e: (e.timestamp, e.id))
     for n, (kind, cut) in enumerate(CUTS):
-        memory = InMemoryEventStore(spark)
-        memory.save_events(memory0._rows)
-        parquet = ParquetEventStore(spark, str(tmp_path / f"cut{n}"))
-        shutil.copytree(parquet0.path, parquet.path)
-        got = []
-        for store in (memory, parquet):
-            broker = EventBroker(spark)
-            broker.store = store
-            if kind == "count":
-                broker.create_topic("t", max_events=cut)
-                deleted = broker.apply_retention("t")
-            elif kind == "time":
-                broker.create_topic("t", retention_period=60.0)
-                deleted = broker.apply_retention("t", now=cut + dt.timedelta(seconds=60))
-            else:
-                deleted = store.delete_events("t", cut)
-            kept = _kept(store)
-            assert deleted + len(kept) == 14, (kind, cut, store)
-            got.append(kept)
-        assert got[0] == got[1], (kind, cut)
+        shutil.copytree(store0.path, str(tmp_path / f"cut{n}" / "events"))
+        broker = EventBroker(spark, str(tmp_path / f"cut{n}"))
         if kind == "count":
-            assert len(got[1]) == min(cut, 14)
+            broker.create_topic("t", max_events=cut)
+            deleted = broker.apply_retention("t")
+            want = ordered[-cut:]
+        elif kind == "time":
+            broker.create_topic("t", retention_period=60.0)
+            deleted = broker.apply_retention("t", now=cut + dt.timedelta(seconds=60))
+            want = [e for e in ordered if e.timestamp >= cut]
+        else:
+            deleted = broker.store.delete_events("t", cut)
+            want = [e for e in ordered if e.timestamp >= dt.datetime.fromisoformat(cut)]
+        kept = _kept(broker.store)
+        assert kept == sorted(e.id for e in want), (kind, cut)
+        assert deleted + len(kept) == 14, (kind, cut)
 
 
 def test_retention_cut_matches_spark_order(spark, tmp_path):
-    memory, parquet = _stores(spark, tmp_path)
+    """The cut is the ``keep``-th newest row of the same store's Spark
+    read, in ``(timestamp, id)`` order."""
+    _events, store = _events_store(spark, tmp_path)
+    rows = store.get_events("t").collect()
     for keep in (1, 5, 7, 8, 9, 13):
-        m, p = memory.retention_cut("t", keep), parquet.retention_cut("t", keep)
-        assert p[1] == m[1]
-        assert p[0] == m[0].astimezone(dt.timezone.utc)
-    assert memory.retention_cut("t", 14) is parquet.retention_cut("t", 14) is None
+        ts, event_id = store.retention_cut("t", keep)
+        assert event_id == rows[-keep].id
+        assert ts == rows[-keep].timestamp.astimezone(dt.timezone.utc)
+    assert store.retention_cut("t", 14) is None
 
 
 def test_file_boundary_sweep_unlinks_whole_files(spark, tmp_path):
     """A cut between files removes those files and their ``.crc``
     sidecars and leaves every other file, name included."""
-    _memory, store = _stores(spark, tmp_path)
+    _events, store = _events_store(spark, tmp_path)
     part = store._part_dir("t")
     before = set(os.listdir(part))
     assert store.delete_events("t", T0 + dt.timedelta(seconds=2)) == 2
