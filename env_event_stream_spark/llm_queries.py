@@ -10,7 +10,6 @@ plan constant-for-constant (hyperplanes, seeds, band layout).
 from __future__ import annotations
 
 import functools as _functools
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -4462,18 +4461,10 @@ def doc_ppjoin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the replay in parallel stages. The win is cluster throughput
     (total compute), not single-query latency at this scale.
 
-    SPARK_GRAFT_PPJOIN_INV=estimate (r16, VERDICT r15 task 2): the
-    inverted-baseline leg is AUDIT-ONLY — the one column whose 16x
-    scale-probe rung OOMed the default 8 GB local JVM (290M-pair
-    distinct; SCALING.md §8). Under the knob, n_cand_inverted is
-    instead SUM over shingles of dfc*(dfc-1)/2 — the EXACT number of
-    (ordered pair, shared shingle) incidences the raw inverted join
-    would emit before distinct, i.e. the true join cost being
-    avoided, and a provable upper bound on the distinct pair count —
-    computed from the already-built df table with one aggregate and
-    no pair materialization. Default stays 'exact' (the DuckDB oracle
-    replays the exact leg); probe runs at hostile rungs set the knob
-    and SCALING.md labels the column estimator-mode."""
+    n_cand_inverted is always the exact distinct pair count of the
+    raw inverted join (the DuckDB oracle replays it). That leg is the
+    query's largest: at the 16x scale-probe rung it needs a larger
+    driver heap (``SPARK_DRIVER_MEM=24g``; SCALING.md §8)."""
     d = load_table(spark, sf_dir, "documents")
     # sh feeds dfc, ord, and both sides of the inverted baseline —
     # cache it so the tokenize+explode runs once (PLANLINT caught the
@@ -4542,23 +4533,6 @@ def doc_ppjoin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_common"))
         .localCheckpoint(eager=False)  # pair-set-sized; two consumers
     )
-    if os.environ.get("SPARK_GRAFT_PPJOIN_INV", "exact") == "estimate":
-        # audit-leg estimator: per-shingle C(df,2) incidences — no
-        # pair materialization, fits any heap at any rung
-        n_inv_src = dfc.agg(
-            F.coalesce(
-                F.sum(
-                    (
-                        F.col("dfc").cast("bigint")
-                        * (F.col("dfc").cast("bigint") - F.lit(1))
-                    )
-                    / F.lit(2)
-                ).cast("bigint"),
-                F.lit(0).cast("bigint"),
-            ).alias("n_cand_inverted")
-        )
-    else:
-        n_inv_src = common.agg(F.count("*").alias("n_cand_inverted"))
     tp = (
         common.join(
             sizes.select(F.col("doc_id").alias("ida"), F.col("n_sh").alias("n_a")),
@@ -4589,7 +4563,7 @@ def doc_ppjoin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("n_missed"),
     )
     n_cand = cand.agg(F.count("*").alias("n_cand_prefix"))
-    n_inv = n_inv_src
+    n_inv = common.agg(F.count("*").alias("n_cand_inverted"))
     return (
         tpc.crossJoin(n_cand)
         .crossJoin(n_inv)

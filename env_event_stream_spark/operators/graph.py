@@ -12,7 +12,13 @@ round); iterations needed = graph diameter, and dup-cluster graphs
 are shallow (near-cliques), so 3-5 rounds close virtually all real
 corpora. localCheckpoint per round truncates the growing lineage —
 without it the plan doubles every iteration and the driver OOMs
-planning, not executing."""
+planning, not executing.
+
+The frames every iteration re-reads (edge lists, degrees) are
+``localCheckpoint(eager=True)``-ed once before the loop, so their
+build never lands on an iteration's clock. AQE broadcasts the
+node-sized join side at single-node scale, so the edge list does not
+shuffle in the loop."""
 
 from __future__ import annotations
 
@@ -27,70 +33,24 @@ __all__ = [
 ]
 
 
-def _materialize_static(df: DataFrame, key: str, partition_static: bool) -> DataFrame:
-    """Materialize a frame that every iteration re-reads.
-
-    Two strategies, chosen by the caller's scale:
-    - ``partition_static=False`` (default): ``localCheckpoint`` — the
-      fast path at single-node/bench scale, where AQE broadcasts the
-      node-sized join side anyway so the edge list never shuffles in
-      the loop. Measured 25-33% faster end-to-end at sf0.1 than the
-      partitioned path (whose extra build shuffle + InMemoryRelation
-      scan buy nothing when the join is broadcast).
-    - ``partition_static=True``: ``repartition(key).persist()`` — the
-      1000-executor path. PySpark's localCheckpoint DROPS
-      outputPartitioning (the plan shows a fresh Exchange on the edge
-      side EVERY iteration once the label side is too big to
-      broadcast); InMemoryRelation preserves it, so the per-iteration
-      SortMergeJoin reads the edge list in place — |E| rows of
-      shuffle saved per round for one build exchange. Flip it on when
-      the node frame won't broadcast (≳ tens of millions of nodes).
-    Both materialize eagerly so the build never lands on an
-    iteration's clock. Results are identical either way (all
-    downstream aggregates are key-grouped and order-free) —
-    pytest-pinned. Callers of the persisted path must
-    ``_release_static`` the frame before returning (the final result
-    rides a lineage-truncated checkpoint, so the cache is dead weight
-    once the loop ends — leaking one |E|-row InMemoryRelation per
-    call would evict useful storage on a long-lived driver)."""
-    if partition_static:
-        out = df.repartition(key).persist()
-        out.count()
-        return out
-    return df.localCheckpoint(eager=True)
-
-
-def _release_static(*frames: DataFrame) -> None:
-    """Unpersist the static frames a loop persisted (no-op for the
-    localCheckpoint path — blocking=False, never fails the result)."""
-    for df in frames:
-        try:
-            df.unpersist()
-        except Exception:  # result is already materialized; best-effort
-            pass
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     *,
     max_iter: int = 10,
-    partition_static: bool = False,
 ) -> DataFrame:
     """(node, component) for every node in the edge list; component =
     min node id reachable. Converges in <= diameter iterations;
     raises if max_iter rounds don't reach fixpoint (pathological
-    chain graphs — raise max_iter). ``partition_static`` selects the
-    cluster-scale edge-list strategy (see _materialize_static)."""
-    e = _materialize_static(
+    chain graphs — raise max_iter)."""
+    e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(
             edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
         )
-        .distinct(),
-        "v",  # the per-iteration join key (e.v == labels.node)
-        partition_static,
+        .distinct()
+        .localCheckpoint(eager=True)
     )
     labels = e.select("u").distinct().select(
         F.col("u").alias("node"), F.col("u").alias("label")
@@ -130,9 +90,7 @@ def connected_components(
         changed = updated.where(F.col("_chg")).count()
         labels = updated.select("node", "label")
         if changed == 0:
-            _release_static(e)  # labels is checkpointed; e is done
             return labels.select("node", F.col("label").alias("component"))
-    _release_static(e)
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} iterations"
     )
@@ -145,7 +103,6 @@ def pagerank_int(
     *,
     iterations: int = 3,
     unit: int = 10**12,
-    partition_static: bool = False,
     distinct_edges: bool = True,
 ) -> DataFrame:
     """INTEGER-EXACT PageRank (damping 0.85), fixed iteration count.
@@ -181,8 +138,7 @@ def pagerank_int(
     oracle-pinned). The Catalyst plan is truncated to a LogicalRDD
     either way, so the driver-plan-growth hazard the checkpoints
     exist for stays closed; at 3 iterations the deferred RDD chain
-    is shallow. Eager on the persisted-statics path: execution must
-    finish before _release_static drops the e/deg cache.
+    is shallow.
 
     Returns (node, odeg, rank_units). Dangling nodes are the
     caller's concern — symmetrize the edge list (as the bipartite
@@ -197,15 +153,11 @@ def pagerank_int(
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if distinct_edges:
         e = e.distinct()
-    e = _materialize_static(
-        e,
-        "src",  # contributions join on e.src every iteration
-        partition_static,
-    )
-    deg = _materialize_static(
-        e.groupBy("src").agg(F.count("*").cast("bigint").alias("odeg")),
-        "src",  # the rank rebuild left-joins deg.src == total.dst
-        partition_static,
+    e = e.localCheckpoint(eager=True)
+    deg = (
+        e.groupBy("src")
+        .agg(F.count("*").cast("bigint").alias("odeg"))
+        .localCheckpoint(eager=True)
     )
     n = deg.count()
     base = (15 * unit) // (100 * n)  # exact int — replayed by the oracle
@@ -233,14 +185,8 @@ def pagerank_int(
                     + F.expr("(85 * coalesce(total, 0L)) DIV 100")
                 ).cast("bigint").alias("r"),
             )
-            # lazy checkpoints (see docstring) — EXCEPT on the
-            # persisted-statics path, where execution must finish
-            # BEFORE _release_static unpersists e/deg (a lazy chain
-            # would otherwise recompute the static frames from
-            # lineage after their cache is dropped)
-            .localCheckpoint(eager=partition_static)
+            .localCheckpoint(eager=False)  # lazy: see docstring
         )
-    _release_static(e, deg)  # ranks is checkpointed; statics are done
     return ranks.select("node", "odeg", F.col("r").alias("rank_units"))
 
 
@@ -252,7 +198,6 @@ def pagerank_int_weighted(
     *,
     iterations: int = 3,
     unit: int = 10**12,
-    partition_static: bool = False,
 ) -> DataFrame:
     """WEIGHTED integer PageRank: per-edge transfer =
     (rank · w_e) DIV wdeg(src), wdeg = Σ w over the node's out-edges
@@ -265,10 +210,9 @@ def pagerank_int_weighted(
     inside int64 (rank ≤ unit ≈ 2^40). Same plan shape per
     iteration: one node-keyed join + grouped sum, localCheckpoint
     lineage truncation — LAZY in-loop like pagerank_int (fixed
-    iteration count, no mid-loop action; eager on the
-    persisted-statics path for the _release_static ordering).
+    iteration count, no mid-loop action).
     Returns (node, wdeg, rank_units)."""
-    e = _materialize_static(
+    e = (
         edges.select(
             F.col(src).alias("src"),
             F.col(dst).alias("dst"),
@@ -282,14 +226,13 @@ def pagerank_int_weighted(
                     "rank*w could overflow int64; rescale weights"
                 ),
             ).isNull()
-        ),
-        "src",
-        partition_static,
+        )
+        .localCheckpoint(eager=True)
     )
-    deg = _materialize_static(
-        e.groupBy("src").agg(F.sum("w").cast("bigint").alias("wdeg")),
-        "src",
-        partition_static,
+    deg = (
+        e.groupBy("src")
+        .agg(F.sum("w").cast("bigint").alias("wdeg"))
+        .localCheckpoint(eager=True)
     )
     n = deg.count()
     base = (15 * unit) // (100 * n)
@@ -317,9 +260,8 @@ def pagerank_int_weighted(
                     + F.expr("(85 * coalesce(total, 0L)) DIV 100")
                 ).cast("bigint").alias("r"),
             )
-            .localCheckpoint(eager=partition_static)  # see pagerank_int
+            .localCheckpoint(eager=False)  # see pagerank_int
         )
-    _release_static(e, deg)  # ranks is checkpointed; statics are done
     return ranks.select("node", "wdeg", F.col("r").alias("rank_units"))
 
 

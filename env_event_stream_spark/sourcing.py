@@ -13,8 +13,8 @@ The scale win over the reference: ``rehydrate_all`` folds EVERY
 aggregate in ONE distributed groupBy pass (the reference loads one id
 at a time through the store). Ordering inside each group is explicit
 (sort by ts, id within the pandas group) — never rely on shuffle
-order. Streaming twin: transformWithStateInPandas /
-applyInPandasWithState in streaming/subscription.py.
+order. Streaming twin: ``live_rehydrate`` (applyInPandasWithState)
+in streaming/stateful.py.
 """
 
 from __future__ import annotations

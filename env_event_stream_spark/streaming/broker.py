@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
+import os
 import shutil
 import tempfile
 import threading
@@ -46,6 +47,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from env_event_stream_spark.schema_registry import SchemaRegistry
 from env_event_stream_spark.storage.dlq_store import ParquetDeadLetterQueue
@@ -204,39 +206,48 @@ class EventBroker:
 
         if meta.persistent:
             self.store.save_event(event)  # persist BEFORE fan-out
-
-        receivers = 0
-        for sub in list(self.subscriptions.values()):
-            if sub.topic != topic or sub.query is not None:
-                continue  # streaming subs consume from the table
-            if not sub.matches(event_type):
-                continue
-            receivers += 1
-            self._deliver(sub, event)  # failures isolated (topic.ts:133-139)
-        return PublishResult(True, event.id, receivers)
+        return PublishResult(True, event.id, self._fan_out(topic, event))
 
     def publish_many(
         self, topic: str, events: Sequence[tuple[str, Any, dict | None]]
     ) -> int:
         """Batch publish — ONE columnar append for the whole batch
         (the reference loops saveEvent per event; this is the scale
-        path). Direct-mode fan-out still per event."""
+        path). Direct-mode fan-out still per event.
+
+        Every event is validated against the topic's schema registry
+        before anything is written: the first invalid one raises
+        ValueError with its index, and then no event of the batch is
+        persisted or delivered."""
         meta = self._topic(topic)
         rows = [
             make_event(topic, t, None if p is None else json.dumps(p), m)
             for (t, p, m) in events
         ]
+        if meta.registry is not None:
+            for i, r in enumerate(rows):
+                err = self._validate(meta.registry, r.type, r.payload)
+                if err:
+                    raise ValueError(f"publish_many: event {i}: {err}")
         if meta.persistent:
             self.store.save_events(rows)
         for r in rows:
-            for sub in list(self.subscriptions.values()):
-                if (
-                    sub.topic == topic
-                    and sub.query is None
-                    and sub.matches(r.type)
-                ):
-                    self._deliver(sub, r)
+            self._fan_out(topic, r)
         return len(rows)
+
+    def _fan_out(self, topic: str, event: Row) -> int:
+        """Deliver a published event to the topic's direct-mode
+        subscriptions whose type filter matches; returns how many
+        there were. Failures are isolated (src/topic.ts:133-139)."""
+        receivers = 0
+        for sub in list(self.subscriptions.values()):
+            if sub.topic != topic or sub.query is not None:
+                continue  # streaming subs consume from the table
+            if not sub.matches(event.type):
+                continue
+            receivers += 1
+            self._deliver(sub, event)
+        return receivers
 
     def _validate(
         self, registry: SchemaRegistry, event_type: str, payload_json: str | None
@@ -331,11 +342,14 @@ class EventBroker:
         self.subscriptions[sub_id] = sub
         if options.receive_historical:
             # backlog delivery (src/topic.ts:71-86): type-filtered, not
-            # time-filtered. Table-backed: no backlog/live race.
-            for row in self.store.get_events(
-                topic, event_types=options.event_types
-            ).collect():
-                self._deliver(sub, row)
+            # time-filtered. Table-backed: no backlog/live race. The
+            # replay read iterates, so the backlog need not fit in
+            # driver memory.
+            self.replay_events(
+                topic,
+                lambda row: self._deliver(sub, row),
+                event_types=options.event_types,
+            )
         return sub_id
 
     def subscribe_streaming(
@@ -346,11 +360,12 @@ class EventBroker:
         *,
         checkpoint: str,
         handler: EventHandler | None = None,
-        trigger_once: bool = True,
     ) -> str:
         """Streaming subscription: a checkpointed StreamingQuery over
-        the events table (backlog + live unified — upgrade over the
-        reference's racy catch-up, SURVEY §3.2).
+        the topic's partition of the events table (backlog + live
+        unified — upgrade over the reference's racy catch-up, SURVEY
+        §3.2). Each (re)start runs under an availableNow trigger: it
+        delivers what the topic holds, then stops.
 
         ``batch_handler(df, epoch)`` is the scale path (vectorized).
         ``handler`` wraps per-row parity semantics (retry→DLQ) around
@@ -363,6 +378,8 @@ class EventBroker:
         options = options or SubscriptionOptions()
         sub_id = options.name or f"sub-{uuid.uuid4().hex[:8]}"
         sub = _Subscription(sub_id, topic, handler or (lambda r: None), options)
+        part_dir = self.store._part_dir(topic)
+        file_schema = T.StructType([f for f in EVENT_SCHEMA if f.name != "topic"])
 
         def process(df: DataFrame, epoch_id: int) -> None:
             if batch_handler is not None:
@@ -373,25 +390,28 @@ class EventBroker:
 
         def _start():
             # build a FRESH plan per (re)start — reusing one streaming
-            # DataFrame across runs trips PLAN_VALIDATION_FAILED
+            # DataFrame across runs trips PLAN_VALIDATION_FAILED. The
+            # source is the topic's own dir, so a trigger lists no other
+            # topic's files; a file stream over a missing dir fails to
+            # start (PATH_NOT_FOUND).
+            os.makedirs(part_dir, exist_ok=True)
             stream = (
-                self.spark.readStream.schema(EVENT_SCHEMA)
-                .option("basePath", self.store.path)
-                .parquet(self.store.path)
-                .where(F.col("topic") == topic)
+                self.spark.readStream.schema(file_schema)
+                .parquet(part_dir)
+                .withColumn("topic", F.lit(topic))
+                .select(*EVENT_SCHEMA.fieldNames())
             )
             if options.event_types:
                 stream = stream.where(
                     F.col("type").isin(list(options.event_types))
                 )
-            writer = (
+            return (
                 stream.writeStream.foreachBatch(process)
                 .queryName(sub_id)
                 .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
             )
-            if trigger_once:
-                writer = writer.trigger(availableNow=True)
-            return writer.start()
 
         sub.restart = _start
         sub.query = _start()

@@ -178,43 +178,6 @@ def _stream_shuffle_parts(spark: SparkSession):
                 spark.conf.set(k, v)
 
 
-# prefix -> state-operator metrics from the LAST micro-batch of the
-# most recent availableNow run (numRowsTotal / memoryUsedBytes per
-# state operator, plus batch count). Observability only — nothing in
-# the catalog reads it; tools/state_probe.py uses it to measure how
-# streaming STATE grows with data volume on the scale ladder
-# (VERDICT r15 task 1). Size: O(state operators) dicts per prefix.
-STATE_PROGRESS: dict[str, dict] = {}
-
-
-def _capture_state_progress(prefix: str, q) -> None:
-    """Record the final micro-batch's stateOperators metrics for a
-    finished StreamingQuery. recentProgress holds the trailing
-    progress dicts; the last one with stateOperators is the stream's
-    end-state (availableNow runs end after the final batch). Never
-    raises — a metrics gap must not fail a catalog query."""
-    try:
-        progresses = q.recentProgress or []
-        last = None
-        for p in progresses:
-            if p.get("stateOperators"):
-                last = p
-        STATE_PROGRESS[prefix] = {
-            "n_batches": len(progresses),
-            "stateOperators": [
-                {
-                    "operatorName": so.get("operatorName"),
-                    "numRowsTotal": so.get("numRowsTotal"),
-                    "numRowsUpdated": so.get("numRowsUpdated"),
-                    "memoryUsedBytes": so.get("memoryUsedBytes"),
-                }
-                for so in (last or {}).get("stateOperators", [])
-            ],
-        }
-    except Exception:  # pragma: no cover - defensive, see docstring
-        pass
-
-
 # output mode -> sink attached to a DataStreamWriter for a sink dir.
 _SINKS = {
     # each micro-batch's rows plus their epoch are APPENDED by the
@@ -286,7 +249,6 @@ def _run_available_now(
                         f"{prefix}: availableNow stream did not finish in 300s"
                     )
                 running.remove(q)
-                _capture_state_progress(prefix, q)
     finally:
         for q in running:
             q.stop()

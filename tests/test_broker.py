@@ -216,6 +216,26 @@ def test_historical_catchup(broker):
     assert seen == ["a", "a"]
 
 
+def test_historical_backlog_is_not_collected(broker, spark, monkeypatch):
+    """The receive_historical backlog is iterated like an unlimited
+    replay, never pulled whole into driver memory with collect()."""
+    for i in range(4):
+        broker.publish("t", "a" if i % 2 else "b", {"n": i})
+    want = [r.id for r in broker.store.get_events("t", event_types=["a"]).collect()]
+
+    def no_collect(self):
+        raise AssertionError("backlog must not be collected")
+
+    monkeypatch.setattr(type(spark.range(0)), "collect", no_collect)
+    seen = []
+    broker.subscribe(
+        "t",
+        lambda e: seen.append(e.id),
+        SubscriptionOptions(event_types=["a"], receive_historical=True),
+    )
+    assert seen == want and len(seen) == 2
+
+
 def test_replay_events(broker):
     """replayEvents (src/broker.ts:144-161): the topic's events in
     (timestamp, id) order, the first ``limit`` of them; a limit of 0 or
@@ -289,6 +309,34 @@ def test_schema_validation_gate(broker):
     assert not wrong_type.success
     other = broker.publish("users", "unregistered.type", {"whatever": True})
     assert other.success
+
+
+def test_publish_many_validates_every_event_first(broker):
+    """publish_many applies the topic's registry like publish: the
+    first invalid event raises with its index, before any event of the
+    batch is persisted or delivered."""
+    from env_event_stream_spark.schema_registry import SchemaRegistry
+
+    reg = SchemaRegistry()
+    reg.register(
+        "order",
+        {"type": "object", "required": ["amount"], "properties": {"amount": {"type": "number"}}},
+    )
+    broker.create_topic("orders", registry=reg)
+    seen = []
+    broker.subscribe("orders", seen.append)
+    assert not broker.publish("orders", "order", {"amount": "x"}).success
+    with pytest.raises(ValueError, match=r"event 1: \$\.amount: expected number"):
+        broker.publish_many(
+            "orders",
+            [("order", {"amount": 1}, None), ("order", {"amount": "x"}, None),
+             ("order", {}, None)],
+        )
+    assert broker.store.get_events("orders").count() == 0
+    assert seen == []
+    assert broker.publish_many("orders", [("order", {"amount": 2}, None), ("other", None, None)]) == 2
+    assert broker.store.get_events("orders").count() == 2
+    assert [e.type for e in seen] == ["order", "other"]
 
 
 def test_retention_time_and_count(spark):

@@ -115,25 +115,6 @@ def test_ppjoin_candidates_complete_and_smaller(spark, sf_dir):
     assert row.n_true_pairs <= row.n_cand_prefix
 
 
-def test_ppjoin_inverted_estimator_mode(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_PPJOIN_INV=estimate (r16): the audit-only
-    inverted-baseline column switches to the per-shingle C(df,2)
-    incidence count — it must UPPER-BOUND the exact distinct pair
-    count (a pair sharing k shingles is counted k times instead of
-    once) and leave every other column bit-identical, with no pair
-    materialization (the 16x-probe OOM fix, VERDICT r15 task 2)."""
-    from env_event_stream_spark.catalog import QUERIES
-
-    exact = QUERIES["doc_ppjoin_stats"](spark, sf_dir).collect()[0]
-    spark.catalog.clearCache()
-    monkeypatch.setenv("SPARK_GRAFT_PPJOIN_INV", "estimate")
-    est = QUERIES["doc_ppjoin_stats"](spark, sf_dir).collect()[0]
-    assert est.n_cand_inverted >= exact.n_cand_inverted
-    assert est.n_true_pairs == exact.n_true_pairs
-    assert est.n_cand_prefix == exact.n_cand_prefix
-    assert est.n_missed == exact.n_missed
-
-
 def test_scurve_high_bucket_detects_and_low_bucket_rarely(spark, sf_dir):
     """The S-curve's reason to exist: near-dups (J >= 0.9) must be
     detected at ~the theoretical rate (>= 0.99 at 4x4 banding) and

@@ -311,59 +311,6 @@ def test_connected_components_match_python(spark, edges):
     assert got == expected
 
 
-def test_partition_static_strategy_is_result_identical(spark):
-    """The cluster-scale edge-list strategy (partition_static=True:
-    repartition-by-join-key + persist, eliminating the per-iteration
-    edge shuffle once the label side can't broadcast) must produce
-    BIT-IDENTICAL results to the default localCheckpoint path — all
-    downstream aggregates are key-grouped and order-free, so the
-    physical layout must not matter."""
-    from env_event_stream_spark.operators.graph import (
-        connected_components,
-        pagerank_int,
-        pagerank_int_weighted,
-    )
-
-    edges = [(1, 2), (2, 3), (5, 6), (7, 7), (3, 9), (10, 5)]
-    df = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-    base = {
-        r.node: r.component
-        for r in connected_components(df, partition_static=False).collect()
-    }
-    part = {
-        r.node: r.component
-        for r in connected_components(df, partition_static=True).collect()
-    }
-    assert base == part
-
-    pe = spark.createDataFrame(
-        [(1, 2), (2, 1), (2, 3), (3, 1), (3, 2)], "src bigint, dst bigint"
-    )
-    pr_a = {
-        r.node: r.rank_units
-        for r in pagerank_int(pe, partition_static=False).collect()
-    }
-    pr_b = {
-        r.node: r.rank_units
-        for r in pagerank_int(pe, partition_static=True).collect()
-    }
-    assert pr_a == pr_b
-
-    we = spark.createDataFrame(
-        [(1, 2, 3), (2, 1, 1), (2, 3, 5), (3, 1, 2), (3, 2, 1)],
-        "src bigint, dst bigint, w bigint",
-    )
-    wr_a = {
-        r.node: r.rank_units
-        for r in pagerank_int_weighted(we, partition_static=False).collect()
-    }
-    wr_b = {
-        r.node: r.rank_units
-        for r in pagerank_int_weighted(we, partition_static=True).collect()
-    }
-    assert wr_a == wr_b
-
-
 @given(
     docs=st.lists(
         st.lists(st.sampled_from("abcdef"), min_size=1, max_size=10).map(
