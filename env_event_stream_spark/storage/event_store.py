@@ -23,6 +23,16 @@ Reference parity (SURVEY.md §2.1):
   swap, so a crash never loses a topic, as the reference's
   transactional ``DELETE`` never does (src/persistence.ts:407-425).
 
+Write sequence: every file of a topic carries an int64 ``_seq`` column
+(``SEQ``) beside the event columns, unique in the topic and increasing
+in write order, and rewrites keep it. Broker subscriptions track it
+instead of file names, so a rewrite (compact, erase, a retention cut
+inside a file) delivers no row again. Each topic's head (the largest
+``_seq`` handed out) is memoised per process and recovered as the larger
+of the footers' max and a marker under ``.seq/`` at the store root,
+which removals raise first, so no number is handed out twice. Files
+written before the column existed read it as NULL.
+
 Canonical Event schema (reference src/types.ts:4-39; FIXTURES.md §A1):
 ``id, type, topic, timestamp, schemaVersion, payload(JSON string),
 metadata(map<string,string>)``. Payload stays a JSON string —
@@ -41,6 +51,7 @@ from __future__ import annotations
 import datetime as _dt
 import os
 import shutil
+import threading
 import time
 import uuid
 from collections.abc import Sequence
@@ -57,9 +68,12 @@ from env_event_stream_spark.operators.event_queries import get_events as _get_ev
 from env_event_stream_spark.storage.parquet_append import append_rows, partition_dir
 from env_event_stream_spark.storage.parquet_read import (
     FileKeys,
+    SeqSpan,
     file_keys,
     read_keys,
+    read_sorted,
     read_top_k,
+    seq_span,
     visible_files,
 )
 from env_event_stream_spark.storage.rewrite import drop_rows, has_parquet, recover, replace_dir
@@ -76,7 +90,24 @@ EVENT_SCHEMA = T.StructType(
     ]
 )
 
-__all__ = ["EVENT_SCHEMA", "make_event", "ParquetEventStore"]
+__all__ = ["EVENT_SCHEMA", "SEQ", "make_event", "ParquetEventStore"]
+
+# The write sequence: an int64 column every file of a topic carries
+# beside the event columns, unique in the topic and increasing in write
+# order. Readers that pass EVENT_SCHEMA never see it.
+SEQ = "_seq"
+# a topic dir's files as Spark reads them (no ``topic``), sequence kept
+_FILE_SCHEMA = T.StructType(
+    [f for f in EVENT_SCHEMA if f.name != "topic"] + [T.StructField(SEQ, T.LongType())]
+)
+# the largest SEQ handed out per topic dir, seeded once from the dir's
+# marker and footers. Per process, not per store object: two stores
+# opened on one path must not hand out the same numbers. The lock also
+# orders each write's numbering and its files becoming visible against
+# ``seq_spans``, so a listing never sees a later write without an
+# earlier one.
+_HEADS: dict[str, int] = {}
+_HEAD_LOCK = threading.RLock()
 
 _counter = 0
 
@@ -159,16 +190,149 @@ class ParquetEventStore:
         return os.path.join(self.path, partition_dir(self.spark, "topic", topic))
 
     def _partition(self, topic: str) -> DataFrame:
-        """A topic's rows as its partition dir holds them (no topic)."""
-        return self.to_df().where(F.col("topic") == topic).drop("topic")
+        """A topic's rows as its partition dir holds them: no ``topic``,
+        and ``SEQ`` kept, so a rewrite keeps every row's number."""
+        return self.spark.read.schema(_FILE_SCHEMA).parquet(self._part_dir(topic))
+
+    # -- the write sequence ------------------------------------------------
+
+    def _head(self, part_dir: str) -> int:
+        """The largest SEQ handed out in ``part_dir`` (0 for none): the
+        process memo, seeded from the larger of the dir's marker and its
+        footers. Call with ``_HEAD_LOCK`` held."""
+        key = os.path.abspath(part_dir)
+        head = _HEADS.get(key)
+        if head is None:
+            spans = [seq_span(f, SEQ) for f in visible_files(part_dir)]
+            his = [s.hi for s in spans if s.hi is not None]
+            head = _HEADS[key] = max([_read_marker(_marker(part_dir)), *his])
+        return head
+
+    def _take(self, part_dir: str, n: int) -> int:
+        """Hand out ``n`` numbers in ``part_dir``; returns the first."""
+        first = self._head(part_dir) + 1
+        _HEADS[os.path.abspath(part_dir)] = first + n - 1
+        return first
+
+    def _keep_head(self, topic: str) -> None:
+        """Before rows of ``topic`` are removed: raise its marker to its
+        head. The head is recovered from the footers, so without the
+        marker, erasing the newest rows and restarting would hand their
+        numbers out again, and a subscription that committed them would
+        never deliver the new rows."""
+        with _HEAD_LOCK:
+            part_dir = self._part_dir(topic)
+            head, marker = self._head(part_dir), _marker(part_dir)
+            if head > _read_marker(marker):
+                _write_marker(marker, head)
+
+    def seq_spans(self, topic: str, known: dict[str, SeqSpan]) -> dict[str, SeqSpan]:
+        """``SeqSpan`` of each visible file of ``topic``; ``known``
+        holds spans read before (file names are uuids, never reused).
+        Listed under ``_HEAD_LOCK``."""
+        with _HEAD_LOCK:
+            return {p: known.get(p) or seq_span(p, SEQ)
+                    for p in visible_files(self._part_dir(topic))}
+
+    def read_seq(
+        self,
+        topic: str,
+        spans: dict[str, SeqSpan],
+        start: int,
+        end: int,
+        *,
+        nulls: bool = False,
+        event_types: Sequence[str] | None = None,
+    ) -> DataFrame | None:
+        """The rows of ``topic`` with ``start < SEQ <= end`` (and, with
+        ``nulls``, those with no SEQ, written before it existed) whose
+        type is in ``event_types``, in SEQ order and EVENT_SCHEMA's
+        shape; None when no file of ``spans`` holds such rows.
+
+        Only the files whose span overlaps the range are read. When
+        their uncompressed size fits under the session's
+        ``spark.sql.execution.arrow.localRelationThreshold`` they are
+        read on the driver and come back as a local relation (no Spark
+        job to build it) in one partition, so an aggregate over the
+        batch needs no shuffle (a ``count()`` takes one stage, not two);
+        larger ranges are a Spark scan of those files, so a big backlog
+        stays distributed. A file gone since ``spans`` was listed raises
+        FileNotFoundError on the driver path."""
+        files = [p for p, s in spans.items()
+                 if (s.hi is not None and s.hi > start and s.lo <= end) or (nulls and s.nulls)]
+        if not files:
+            return None
+        size = sum(spans[p].size for p in files)
+        limit = self.spark._jsparkSession.sessionState().conf().arrowLocalRelationThreshold()
+        if size <= limit:
+            seq = pc.field(SEQ)
+            where = (seq > start) & (seq <= end)
+            if nulls:
+                where |= seq.is_null()
+            if event_types is not None:
+                wanted = pa.array([t for t in event_types if t is not None], pa.string())
+                where &= pc.field("type").isin(wanted)
+            rows = read_sorted(_SEQ_SCHEMA, files, where, SEQ).drop_columns([SEQ])
+            rows = rows.set_column(rows.schema.get_field_index("topic"), "topic",
+                                   pa.array([topic] * rows.num_rows, pa.string()))
+            return self.spark.createDataFrame(rows, _SCAN_SCHEMA).coalesce(1)
+        seq = F.col(SEQ)
+        where = (seq > start) & (seq <= end)
+        if nulls:
+            where |= seq.isNull()
+        if event_types is not None:
+            where &= F.col("type").isin(list(event_types))
+        df = (self.spark.read.schema(_FILE_SCHEMA)
+              .option("basePath", self._part_dir(topic)).parquet(*files))
+        return (df.where(where).orderBy(SEQ).withColumn("topic", F.lit(topic))
+                .select(*EVENT_SCHEMA.fieldNames()))
+
+    def count_seq_after(self, spans: dict[str, SeqSpan], after: int, *, nulls: bool) -> int:
+        """Rows of ``spans`` with SEQ above ``after`` (and, with
+        ``nulls``, rows with none), counted from the spans; only a file
+        whose span straddles ``after`` has its SEQ column read."""
+        n = 0
+        for path, s in spans.items():
+            n += s.nulls if nulls else 0
+            if s.hi is None or s.hi <= after:
+                continue
+            if s.lo > after:
+                n += s.rows - s.nulls
+                continue
+            try:
+                values = pq.read_table(path, columns=[SEQ]).column(0)
+            except FileNotFoundError:
+                continue  # removed since it was listed
+            n += pc.sum(pc.greater(values, after).cast(pa.int64())).as_py() or 0
+        return n
 
     def save_events(self, events: Sequence[Row] | DataFrame) -> int:
+        """Append events. A list is written by the driver, one file per
+        topic, numbered on from each topic's head. A DataFrame is
+        written by Spark with ``SEQ = base + monotonically_increasing_id()
+        + 1``, ``base`` the largest head of any topic in the store, so
+        its numbers are new in every topic it writes; the new files'
+        footers give the new heads."""
         if isinstance(events, DataFrame):
-            n = events.count()
-            events.write.mode("append").partitionBy("topic").parquet(self.path)
+            with _HEAD_LOCK:
+                base = max([self._head(d) for d in self._topic_dirs()], default=0)
+                n = events.count()
+                seq = F.lit(base + 1).cast("long") + F.monotonically_increasing_id()
+                events.withColumn(SEQ, seq).write.mode("append") \
+                    .partitionBy("topic").parquet(self.path)
+                for d in self._topic_dirs():
+                    _HEADS.pop(os.path.abspath(d), None)
             return n
-        append_rows(self.spark, EVENT_SCHEMA, events, self.path, partition_by="topic")
+        with _HEAD_LOCK:
+            append_rows(self.spark, EVENT_SCHEMA, events, self.path, partition_by="topic",
+                        seq=(SEQ, self._take))
         return len(events)
+
+    def _topic_dirs(self) -> list[str]:
+        """Every topic dir of the store, and the dir of every topic that
+        has only a marker left (its rows were all removed)."""
+        names = set(_listdir(self.path)) | set(_listdir(os.path.join(self.path, _MARKERS)))
+        return [os.path.join(self.path, n) for n in names if not n.startswith((".", "_"))]
 
     def save_event(self, event: Row) -> None:
         self.save_events([event])
@@ -237,10 +401,8 @@ class ParquetEventStore:
         one-JSON-per-event store (src/persistence.ts:141-145), which
         at 100 TB destroys scan throughput (footer reads dominate).
         Run periodically alongside retention. Returns files removed.
-        Like erase and a retention cut inside a file, it gives the kept
-        rows new file names, so a streaming subscription delivers them
-        again (5 events, 10 deliveries after one ``compact``); a
-        retention sweep that drops whole files does not."""
+        The rows keep their SEQ, so a subscription, which tracks SEQ and
+        not file names, delivers none of them again."""
         part_dir = self._part_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
@@ -255,21 +417,27 @@ class ParquetEventStore:
         """Drop a topic's whole partition directory — O(1) metadata
         delete, no scan of other topics (reference src/broker.ts:55-57
         only forgets the Topic object; dropping its stored rows is the
-        documented upgrade). Rows are counted from the file footers."""
+        documented upgrade). Rows are counted from the file footers. The
+        topic's head marker stays, so a topic of the same name numbers
+        on past it."""
         part_dir = self._part_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
         n = sum(pq.read_metadata(f).num_rows for f in visible_files(part_dir))
+        self._keep_head(topic)
         shutil.rmtree(part_dir)
         return n
 
     def delete_matching(self, topic: str, predicate) -> int:
         """Erase rows of a topic matching a Column predicate over the
         event columns but ``topic`` — a partition-local rewrite, the
-        right-to-erasure primitive. NULL keeps the row (``drop_rows``)."""
+        right-to-erasure primitive. NULL keeps the row (``drop_rows``).
+        The kept rows keep their SEQ, so a subscription delivers none of
+        them again."""
         part_dir = self._part_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
+        self._keep_head(topic)
         return drop_rows(self._partition(topic), part_dir, predicate)
 
     def delete_events(self, topic: str, before_ts, *, before_id: str | None = None) -> int:
@@ -280,10 +448,10 @@ class ParquetEventStore:
         Planned from the partition's files, without a Spark job: a file
         wholly before the cut is unlinked, ``.crc`` first, so a sweep cut
         short leaves no orphan sidecar and the next sweep finishes it;
-        a file wholly after it keeps its name, so streaming
-        subscriptions do not see its rows again. Only when a file holds
-        rows on both sides is the partition rewritten (``drop_rows``).
-        An ISO string is read by ``datetime.fromisoformat``."""
+        a file wholly after it keeps its name. Only when a file holds
+        rows on both sides is the partition rewritten (``drop_rows``),
+        and its kept rows keep their SEQ. An ISO string is read by
+        ``datetime.fromisoformat``."""
         if isinstance(before_ts, str):
             before_ts = _dt.datetime.fromisoformat(before_ts)
         cut = T.TimestampType().toInternal(before_ts)  # the rule F.lit applies
@@ -303,6 +471,8 @@ class ParquetEventStore:
                 if before_id is not None:
                     pred = pred | ((ts == lit) & (F.col("id") < F.lit(before_id)))
                 return self.delete_matching(topic, pred)
+        if doomed:
+            self._keep_head(topic)
         for f in doomed:
             directory, name = os.path.split(f.path)
             crc = os.path.join(directory, f".{name}.crc")
@@ -334,6 +504,38 @@ _EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
 
 # EVENT_SCHEMA as a parquet scan reports it: every field nullable
 _SCAN_SCHEMA = T.StructType([T.StructField(f.name, f.dataType) for f in EVENT_SCHEMA])
+_SEQ_SCHEMA = T.StructType([*EVENT_SCHEMA, T.StructField(SEQ, T.LongType())])
+
+# Head markers live in one hidden dir at the store root, outside the
+# topic dirs that ``replace_dir`` swaps whole; one file per topic dir.
+_MARKERS = ".seq"
+
+
+def _marker(part_dir: str) -> str:
+    root, name = os.path.split(os.path.normpath(part_dir))
+    return os.path.join(root, _MARKERS, name)
+
+
+def _read_marker(path: str) -> int:
+    try:
+        with open(path) as f:
+            return int(f.read())
+    except FileNotFoundError:
+        return 0
+
+
+def _write_marker(path: str, head: int) -> None:
+    """Replace the marker at ``path`` at once (tmp + rename)."""
+    directory, name = os.path.split(path)
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".{name}.tmp")
+    with open(tmp, "w") as f:
+        f.write(str(head))
+    os.replace(tmp, path)
+
+
+def _listdir(path: str) -> list[str]:
+    return os.listdir(path) if os.path.isdir(path) else []
 
 
 def _micros(spark: SparkSession, bound: Any) -> int | None:

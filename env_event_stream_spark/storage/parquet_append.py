@@ -20,6 +20,9 @@ and keeps what the Spark writer guarantees:
   filesystem verifies the file on every read, as it does for files
   Spark writes.
 
+A caller may also number each file's rows in an extra int64 column
+(``seq``), from a first number it hands out per file.
+
 Local paths only, like the stores that call it.
 """
 
@@ -29,7 +32,7 @@ import os
 import struct
 import uuid
 import zlib
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 from typing import Any
 
 import pyarrow as pa
@@ -64,11 +67,16 @@ def append_rows(
     rows: Iterable[Any],
     path: str,
     partition_by: str | None = None,
+    seq: tuple[str, Callable[[str, int], int]] | None = None,
 ) -> None:
     """Append ``rows`` to the parquet table at ``path`` without a Spark
     job, as ``createDataFrame(rows, schema).write.mode("append")
     .partitionBy(partition_by).parquet(path)`` would. Every row is
-    checked before any file is written."""
+    checked before any file is written.
+
+    With ``seq = (column, first)`` each file gets one more int64
+    column, ``column``, holding ``first(directory, n)``, its successor
+    and so on for the file's ``n`` rows in the order given."""
     verify = _make_type_verifier(schema)
     convert = _create_converter(schema)
     internal = []
@@ -87,6 +95,8 @@ def append_rows(
             d = os.path.join(path, partition_dir(spark, partition_by, r[i]))
             groups.setdefault(d, []).append(r[:i] + r[i + 1:])
         fields = [f for f in schema.fields if f.name != partition_by]
+    if seq is not None:
+        fields = [*fields, T.StructField(seq[0], T.LongType(), False)]
     file_schema = T.StructType(fields)
     arrow_schema = to_arrow_schema(file_schema).with_metadata({
         # read back as written by Spark >= 3: no calendar rebase
@@ -95,6 +105,9 @@ def append_rows(
     })
     for directory, group in groups.items():
         columns = [pa.array(list(col), type=f.type) for col, f in zip(zip(*group), arrow_schema)]
+        if seq is not None:
+            first = seq[1](directory, len(group))
+            columns.append(pa.array(range(first, first + len(group)), pa.int64()))
         _write_file(pa.Table.from_arrays(columns, schema=arrow_schema), directory)
 
 

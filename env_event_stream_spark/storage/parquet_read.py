@@ -18,6 +18,11 @@ pyarrow, without a Spark job, and read only what they need:
   driver holds ``k`` rows plus the scanner's read-ahead batches,
   never the whole scan (Spark's ``TakeOrderedAndProject`` merges each
   partition's top ``k`` on the driver too).
+- ``seq_span`` gives a file's row count, the min/max and NULL count of
+  an int64 sequence column, and its uncompressed size, from the footer
+  alone when its statistics are complete; ``read_sorted`` reads the
+  rows of some files matching a pushed-down filter, sorted by one
+  column.
 
 Timestamps are compared as Spark stores them: microseconds since the
 epoch, UTC (INT96 values are UTC instants, as Spark writes them).
@@ -39,7 +44,8 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 __all__ = [
-    "FileKeys", "file_keys", "read_internal", "read_keys", "read_top_k", "visible_files",
+    "FileKeys", "SeqSpan", "file_keys", "read_internal", "read_keys", "read_sorted",
+    "read_top_k", "seq_span", "visible_files",
 ]
 
 _INT96_AS_US = {"coerce_int96_timestamp_unit": "us"}
@@ -116,6 +122,54 @@ def _footer_span(md: pq.FileMetaData) -> tuple[int, int] | None:
     if any(s is None or not s.has_min_max for s in stats):
         return None
     return min(s.min_raw for s in stats), max(s.max_raw for s in stats)
+
+
+class SeqSpan(NamedTuple):
+    """One file's rows, the min/max of its sequence column (None when
+    no row has a value), how many rows have none, and the file's
+    uncompressed size in bytes as its footer states it."""
+
+    rows: int
+    lo: int | None
+    hi: int | None
+    nulls: int
+    size: int
+
+
+def seq_span(path: str, column: str) -> SeqSpan:
+    """``SeqSpan`` of the int64 ``column`` of one file. A file without
+    the column has no value in any row. The footer answers when every
+    row group has a NULL count and, if it holds a value, a min/max;
+    otherwise the column is read."""
+    md = pq.read_metadata(path)
+    groups = [md.row_group(g) for g in range(md.num_row_groups)]
+    size = sum(g.total_byte_size for g in groups)
+    names = [md.schema.column(i).path for i in range(md.num_columns)]
+    if column not in names:
+        return SeqSpan(md.num_rows, None, None, md.num_rows, size)
+    i = names.index(column)
+    stats = [(g.num_rows, g.column(i).statistics) for g in groups]
+    if all(s is not None and s.has_null_count and (s.has_min_max or s.null_count == n)
+           for n, s in stats):
+        ranged = [s for _n, s in stats if s.has_min_max]
+        return SeqSpan(md.num_rows, min((s.min for s in ranged), default=None),
+                       max((s.max for s in ranged), default=None),
+                       sum(s.null_count for _n, s in stats), size)
+    values = pq.read_table(path, columns=[column]).column(0)
+    return SeqSpan(md.num_rows, pc.min(values).as_py(), pc.max(values).as_py(),
+                   values.null_count, size)
+
+
+def read_sorted(
+    schema: T.StructType, files: list[str], where: pc.Expression, by: str,
+) -> pa.Table:
+    """Rows of ``files`` matching ``where``, sorted by ``by`` ascending
+    with NULLs first, every field nullable and every timestamp UTC μs
+    (``read_top_k``'s shape). A listed file that is gone raises
+    FileNotFoundError."""
+    relaxed = _relaxed(schema, pa.timestamp("us", "UTC"))
+    table = ds.dataset(files, format=_FORMAT, schema=relaxed).to_table(filter=where)
+    return table.sort_by([(by, "ascending")], null_placement="at_start")
 
 
 def read_internal(schema: T.StructType, directory: str, where: pc.Expression) -> list[tuple]:

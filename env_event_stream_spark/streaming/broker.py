@@ -12,8 +12,13 @@ Semantics ported 1:1 (and documented divergences):
   retry (max_retries, retry_delay) → dead-letter on final failure
   (src/subscription.ts:78-107).
 - paused subscriptions DROP events (src/subscription.ts:79-81) in
-  direct mode; streaming mode upgrades to stop/restart-from-
+  direct mode; checkpointed mode upgrades to stop/restart-from-
   checkpoint (no loss) — both offered, per SURVEY.md T8.
+- checkpointed subscriptions (``subscribe_streaming``) are a cursor
+  over each topic's write sequence (the store's ``_seq`` column), with
+  Spark's offset/commit log in the checkpoint dir; no Structured
+  Streaming query runs. Each row is delivered once, across restarts
+  and across rewrites of the topic, and ``lag`` counts what is left.
 - retention: delete events older than retention_period; maxEvents is
   declared-but-dead in the reference (SURVEY.md T7) — here
   ``max_events`` is ENFORCED as count-based retention (upgrade).
@@ -45,17 +50,13 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from env_event_stream_spark.schema_registry import SchemaRegistry
 from env_event_stream_spark.storage.dlq_store import ParquetDeadLetterQueue
-from env_event_stream_spark.storage.event_store import (
-    EVENT_SCHEMA,
-    ParquetEventStore,
-    make_event,
-)
+from env_event_stream_spark.storage.event_store import ParquetEventStore, make_event
 
 EventHandler = Callable[[Row], None]
 
@@ -95,8 +96,8 @@ class _Subscription:
     handler: EventHandler
     options: SubscriptionOptions
     active: bool = True
-    query: Any = None  # StreamingQuery when in streaming mode
-    restart: Any = None  # zero-arg () -> StreamingQuery for streaming subs
+    cursor: Any = None  # _Cursor of a checkpointed sub
+    query: Any = None  # its running or last _Run
 
     def matches(self, event_type: str) -> bool:
         types = self.options.event_types
@@ -242,7 +243,7 @@ class EventBroker:
         receivers = 0
         for sub in list(self.subscriptions.values()):
             if sub.topic != topic or sub.query is not None:
-                continue  # streaming subs consume from the table
+                continue  # checkpointed subs read the table
             if not sub.matches(event.type):
                 continue
             receivers += 1
@@ -361,25 +362,33 @@ class EventBroker:
         checkpoint: str,
         handler: EventHandler | None = None,
     ) -> str:
-        """Streaming subscription: a checkpointed StreamingQuery over
-        the topic's partition of the events table (backlog + live
-        unified — upgrade over the reference's racy catch-up, SURVEY
-        §3.2). Each (re)start runs under an availableNow trigger: it
-        delivers what the topic holds, then stops.
+        """Checkpointed subscription: a cursor over the topic's write
+        sequence (``SEQ``), backlog and live events in one order
+        (upgrade over the reference's racy catch-up, SURVEY §3.2). Each
+        (re)start runs availableNow on a thread of its own: it delivers
+        what the topic holds when it starts, then stops.
 
         ``batch_handler(df, epoch)`` is the scale path (vectorized).
         ``handler`` wraps per-row parity semantics (retry→DLQ) around
-        each micro-batch. Pause/resume = stop()/restart from the same
-        checkpoint (no loss; T8 upgrade mode). The stream tracks file
-        names: a retention sweep that drops whole files delivers nothing
-        again, but a rewrite of the topic (compact, erase, a retention
-        cut inside a file) renames the kept rows' files, and they are
-        delivered again (5 events, 10 deliveries after a compact)."""
+        each batch. Pause/resume = stop()/restart from the same
+        checkpoint (no loss; T8 upgrade mode). The cursor tracks row
+        numbers, not file names, so every row is delivered once, across
+        restarts and across rewrites of the topic (compact, erase, a
+        retention cut inside a file); rows removed before their batch
+        ran are not delivered. A checkpoint left by the Structured
+        Streaming subscription this replaced raises ValueError."""
+        stale = [n for n in ("sources", "metadata")
+                 if os.path.exists(os.path.join(checkpoint, n))]
+        if stale:
+            raise ValueError(
+                f"subscribe_streaming: {checkpoint} holds a Spark Structured "
+                f"Streaming checkpoint ({', '.join(stale)}), which this "
+                "subscription cannot resume; start from a fresh checkpoint "
+                "(it delivers the topic's backlog again)"
+            )
         options = options or SubscriptionOptions()
         sub_id = options.name or f"sub-{uuid.uuid4().hex[:8]}"
         sub = _Subscription(sub_id, topic, handler or (lambda r: None), options)
-        part_dir = self.store._part_dir(topic)
-        file_schema = T.StructType([f for f in EVENT_SCHEMA if f.name != "topic"])
 
         def process(df: DataFrame, epoch_id: int) -> None:
             if batch_handler is not None:
@@ -388,35 +397,22 @@ class EventBroker:
                 for row in df.collect():
                     self._deliver(sub, row)
 
-        def _start():
-            # build a FRESH plan per (re)start — reusing one streaming
-            # DataFrame across runs trips PLAN_VALIDATION_FAILED. The
-            # source is the topic's own dir, so a trigger lists no other
-            # topic's files; a file stream over a missing dir fails to
-            # start (PATH_NOT_FOUND).
-            os.makedirs(part_dir, exist_ok=True)
-            stream = (
-                self.spark.readStream.schema(file_schema)
-                .parquet(part_dir)
-                .withColumn("topic", F.lit(topic))
-                .select(*EVENT_SCHEMA.fieldNames())
-            )
-            if options.event_types:
-                stream = stream.where(
-                    F.col("type").isin(list(options.event_types))
-                )
-            return (
-                stream.writeStream.foreachBatch(process)
-                .queryName(sub_id)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        sub.restart = _start
-        sub.query = _start()
+        # an empty type list filters nothing, as in ``matches``
+        sub.cursor = _Cursor(self.store, topic, checkpoint, process, options.event_types or None)
+        sub.query = _Run(sub.cursor.catch_up)
         self.subscriptions[sub_id] = sub
         return sub_id
+
+    def lag(self, sub_id: str) -> int:
+        """Rows of a checkpointed subscription's topic that it has not
+        committed yet: rows numbered above its committed offset (and,
+        before its first commit, rows written before ``SEQ`` existed).
+        Counted over the topic, ignoring the type filter. A direct-mode
+        subscription keeps no offset: ValueError."""
+        cursor = self.subscriptions[sub_id].cursor
+        if cursor is None:
+            raise ValueError(f"lag: {sub_id} is not a checkpointed subscription")
+        return cursor.lag()
 
     def unsubscribe(self, sub_id: str) -> bool:
         sub = self.subscriptions.pop(sub_id, None)
@@ -428,7 +424,7 @@ class EventBroker:
 
     def pause(self, sub_id: str) -> None:
         """Direct mode: events during pause are DROPPED (faithful,
-        src/subscription.ts:79-81). Streaming mode: query stopped;
+        src/subscription.ts:79-81). Checkpointed mode: run stopped;
         restart resumes from checkpoint (documented upgrade)."""
         sub = self.subscriptions[sub_id]
         sub.active = False
@@ -436,16 +432,14 @@ class EventBroker:
             sub.query.stop()
 
     def resume(self, sub_id: str) -> None:
-        """Direct mode: future events delivered again. Streaming mode:
-        RESTART the query from its checkpoint (pause() stopped it) —
+        """Direct mode: future events delivered again. Checkpointed mode:
+        RESTART the run from its checkpoint (pause() stopped it) —
         without this the subscription would silently never consume
         again despite the documented stop/restart semantics."""
         sub = self.subscriptions[sub_id]
         sub.active = True
-        if sub.restart is not None and (
-            sub.query is None or not sub.query.isActive
-        ):
-            sub.query = sub.restart()
+        if sub.cursor is not None and not sub.query.isActive:
+            sub.query = _Run(sub.cursor.catch_up)
 
     # -- replay / DLQ / retention ------------------------------------------
 
@@ -591,6 +585,132 @@ class EventBroker:
             return 0
         ts, event_id = cut
         return self.store.delete_events(meta.name, ts, before_id=event_id)
+
+
+class _Cursor:
+    """A checkpointed subscription's position in its topic's write
+    sequence, kept with Spark's write-ahead protocol (the
+    ``readBetweenOffsets`` rule of ``sources/json_datasource.py``):
+    ``offsets/<epoch>`` holds the ``{"start", "end"}`` SEQ range of a
+    batch and is written (tmp + rename) before the handler runs;
+    ``commits/<epoch>`` is written after it returns. A restart first
+    runs a logged range that has no commit again, exactly; the next
+    range starts where the last one ended. Epoch 0 also takes rows
+    written before SEQ existed (they have none)."""
+
+    RETAIN = 100  # epochs of log kept
+
+    def __init__(self, store, topic: str, checkpoint: str, process, event_types):
+        self.store = store
+        self.topic = topic
+        self.offsets = os.path.join(checkpoint, "offsets")
+        self.commits = os.path.join(checkpoint, "commits")
+        self.process = process
+        self.event_types = event_types
+        self.spans: dict = {}  # path -> SeqSpan, only listed files kept
+
+    def catch_up(self, stopped: threading.Event) -> None:
+        """One availableNow run: the logged but uncommitted range, if
+        any, then everything up to the topic's head at this point."""
+        self.spans = self.store.seq_spans(self.topic, self.spans)
+        epoch, start = _last(self.offsets), 0
+        if epoch is not None:
+            logged = _read_json(os.path.join(self.offsets, str(epoch)))
+            if not os.path.exists(os.path.join(self.commits, str(epoch))):
+                if stopped.is_set():
+                    return
+                self._batch(epoch, logged["start"], logged["end"])
+            start = logged["end"]
+        epoch = 0 if epoch is None else epoch + 1
+        end = max([start, *(s.hi for s in self.spans.values() if s.hi is not None)])
+        fresh = end > start or (epoch == 0 and any(s.nulls for s in self.spans.values()))
+        if not fresh or stopped.is_set():
+            return
+        _write_json(self.offsets, epoch, {"start": start, "end": end})
+        self._batch(epoch, start, end)
+
+    def _batch(self, epoch: int, start: int, end: int) -> None:
+        """Deliver SEQ range ``(start, end]`` as batch ``epoch``, then
+        commit it. When a listed file has gone, the range is planned
+        again from a fresh listing: rows retention removed are not
+        delivered, rows a rewrite moved are read from their new file."""
+        def read():
+            return self.store.read_seq(self.topic, self.spans, start, end,
+                                       nulls=epoch == 0, event_types=self.event_types)
+
+        try:
+            df = read()
+        except FileNotFoundError:  # gone since the listing: list again
+            self.spans = self.store.seq_spans(self.topic, self.spans)
+            df = read()
+        if df is not None:
+            self.process(df, epoch)
+        _write_json(self.commits, epoch, {})
+        for log in (self.offsets, self.commits):
+            old = os.path.join(log, str(epoch - self.RETAIN))
+            if os.path.exists(old):
+                os.unlink(old)
+
+    def lag(self) -> int:
+        epoch = _last(self.commits)
+        done = 0 if epoch is None else _read_json(os.path.join(self.offsets, str(epoch)))["end"]
+        self.spans = self.store.seq_spans(self.topic, self.spans)
+        return self.store.count_seq_after(self.spans, done, nulls=epoch is None)
+
+
+def _last(log: str) -> int | None:
+    epochs = [int(n) for n in os.listdir(log) if n.isdigit()] if os.path.isdir(log) else []
+    return max(epochs, default=None)
+
+
+def _read_json(path: str) -> dict:
+    with open(path) as f:
+        return json.load(f)
+
+
+def _write_json(log: str, epoch: int, value: dict) -> None:
+    os.makedirs(log, exist_ok=True)
+    tmp = os.path.join(log, f".{epoch}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(value, f)
+    os.replace(tmp, os.path.join(log, str(epoch)))
+
+
+class _Run:
+    """One run of a checkpointed subscription (``sub.query``), with the
+    calls callers make of a StreamingQuery: ``awaitTermination``,
+    ``isActive`` and ``stop``. It runs on an InheritableThread, so the
+    handler's Spark jobs carry the starting thread's job group."""
+
+    def __init__(self, target: Callable[[threading.Event], None]):
+        self._stopped = threading.Event()
+        self._error: Exception | None = None
+        self._thread = InheritableThread(self._main, args=(target,), daemon=True)
+        self._thread.start()
+
+    def _main(self, target) -> None:
+        try:
+            target(self._stopped)
+        except Exception as exc:  # re-raised by awaitTermination
+            self._error = exc
+
+    @property
+    def isActive(self) -> bool:
+        return self._thread.is_alive()
+
+    def awaitTermination(self, timeout: float | None = None) -> bool | None:
+        """Wait for the run to end; re-raise what its handler raised.
+        With a timeout, returns whether it ended."""
+        self._thread.join(timeout)
+        if self._error is not None:
+            raise self._error
+        return None if timeout is None else not self._thread.is_alive()
+
+    def stop(self) -> None:
+        """No batch starts after this; one under way finishes first."""
+        self._stopped.set()
+        if threading.current_thread() is not self._thread:
+            self._thread.join()
 
 
 # -- module-level default broker (mod.ts export parity) --------------------

@@ -62,33 +62,32 @@ def test_streaming_subscription_backlog_and_live(pbroker, tmp_path):
     assert len(seen) == 4  # only the new event, no reprocessing
 
 
-def test_streaming_source_lists_only_its_topic_dir(pbroker, tmp_path):
-    """A subscription's file source reads its own topic's partition
-    dir: every file in the source log lies under ``topic=<t>``, and the
-    delivered rows keep EVENT_SCHEMA's fields and order."""
-    import json
-    from urllib.parse import urlparse
-
+def test_streaming_source_lists_only_its_topic_dir(pbroker, tmp_path, monkeypatch):
+    """A subscription's cursor lists its own topic's partition dir and
+    no other, and the delivered rows keep EVENT_SCHEMA's fields and
+    order."""
+    from env_event_stream_spark.storage import event_store
     from env_event_stream_spark.storage.event_store import EVENT_SCHEMA
 
     pbroker.publish_many("a", [("x", {"i": i}, None) for i in range(2)])
     pbroker.publish_many("b", [("x", {"i": 9}, None)])
+    listed = []
+
+    def spy(directory):
+        listed.append(directory)
+        return visible_files(directory)
+
+    visible_files = event_store.visible_files
+    monkeypatch.setattr(event_store, "visible_files", spy)
     rows = []
-    ckpt = tmp_path / "ckpt"
-    sid = pbroker.subscribe_streaming("a", checkpoint=str(ckpt), handler=rows.append)
+    sid = pbroker.subscribe_streaming("a", checkpoint=str(tmp_path / "ckpt"), handler=rows.append)
     pbroker.subscriptions[sid].query.awaitTermination(60)
     assert sorted(r.payload for r in rows) == ['{"i": 0}', '{"i": 1}']
     assert all(r.topic == "a" for r in rows)
     assert all(list(r.asDict()) == EVENT_SCHEMA.fieldNames() for r in rows)
 
-    paths = [
-        json.loads(line)["path"]
-        for log in glob.glob(str(ckpt / "sources" / "0" / "*"))
-        for line in open(log).read().splitlines()[1:]
-    ]
-    assert paths
-    part_dir = os.path.realpath(pbroker.store._part_dir("a"))
-    assert all(os.path.dirname(urlparse(p).path) == part_dir for p in paths), paths
+    assert listed
+    assert set(listed) == {pbroker.store._part_dir("a")}, listed
 
 
 def test_streaming_retry_to_dlq(pbroker, tmp_path):
