@@ -100,6 +100,11 @@ def get_spark(app_name: str = "env_event_stream_spark") -> SparkSession:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # INT64 UTC-μs timestamps with footer min/max instead of INT96,
+        # which has no statistics: driver-side reads of store files
+        # (storage/parquet_read.py) then skip the files outside a window
+        # from their footers. Session-wide: Spark has no per-write option.
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")

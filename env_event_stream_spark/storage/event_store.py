@@ -54,7 +54,7 @@ import shutil
 import threading
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 from typing import Any
 
 import pyarrow as pa
@@ -74,9 +74,16 @@ from env_event_stream_spark.storage.parquet_read import (
     read_sorted,
     read_top_k,
     seq_span,
+    to_rows,
     visible_files,
 )
-from env_event_stream_spark.storage.rewrite import drop_rows, has_parquet, recover, replace_dir
+from env_event_stream_spark.storage.rewrite import (
+    WRITE_OPTIONS,
+    drop_rows,
+    has_parquet,
+    recover,
+    replace_dir,
+)
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -272,7 +279,7 @@ class ParquetEventStore:
             if event_types is not None:
                 wanted = pa.array([t for t in event_types if t is not None], pa.string())
                 where &= pc.field("type").isin(wanted)
-            rows = read_sorted(_SEQ_SCHEMA, files, where, SEQ).drop_columns([SEQ])
+            rows = read_sorted(_SEQ_SCHEMA, files, where, [(SEQ, "ascending")]).drop_columns(SEQ)
             rows = rows.set_column(rows.schema.get_field_index("topic"), "topic",
                                    pa.array([topic] * rows.num_rows, pa.string()))
             return self.spark.createDataFrame(rows, _SCAN_SCHEMA).coalesce(1)
@@ -318,7 +325,7 @@ class ParquetEventStore:
                 base = max([self._head(d) for d in self._topic_dirs()], default=0)
                 n = events.count()
                 seq = F.lit(base + 1).cast("long") + F.monotonically_increasing_id()
-                events.withColumn(SEQ, seq).write.mode("append") \
+                events.withColumn(SEQ, seq).write.mode("append").options(**WRITE_OPTIONS) \
                     .partitionBy("topic").parquet(self.path)
                 for d in self._topic_dirs():
                     _HEADS.pop(os.path.abspath(d), None)
@@ -358,26 +365,32 @@ class ParquetEventStore:
         to_ts=None,
         event_types: Sequence[str] | None = None,
         limit: int | None = None,
-    ) -> DataFrame:
+        rows: bool = False,
+    ) -> DataFrame | Iterable[Row]:
         """A topic's events from ``from_ts`` to ``to_ts`` (inclusive)
         whose type is in ``event_types``, in ``(timestamp, id)`` order,
-        the first ``limit`` of them.
+        the first ``limit`` of them; with ``rows``, the Rows ``collect()``
+        gives for them instead of a DataFrame.
 
         A bounded read (``limit > 0``) ends on the driver with at most
         ``limit`` rows, so it is read there: the partition's files are
-        scanned by ``read_top_k`` with the filters pushed down, and the
+        scanned by ``read_top_k`` with the filters pushed down (files
+        whose footer range misses the window are skipped), and the top
         rows come back as a local DataFrame, which ``collect()`` and
-        ``take()`` answer without a Spark job. An unbounded read
-        (``limit`` None or <= 0, which means everything) stays a Spark
-        scan, so a whole topic never has to fit in driver memory. The
-        bounds compare as Spark compares them: a datetime by F.lit's
-        rule, anything else (an ISO string, a date) cast to a timestamp
-        in the session time zone."""
+        ``take()`` answer without a Spark job, or with ``rows`` as a
+        list of Rows built on the driver (``to_rows``), with no JVM
+        round trip at all. An unbounded read (``limit`` None or <= 0,
+        which means everything) stays a Spark scan, so a whole topic
+        never has to fit in driver memory; with ``rows`` it is iterated
+        with ``toLocalIterator``. The bounds compare as Spark compares
+        them: a datetime by F.lit's rule, anything else (an ISO string,
+        a date) cast to a timestamp in the session time zone."""
         if limit is None or limit <= 0:
-            return _get_events_df(
+            df = _get_events_df(
                 self.to_df(), topic=topic, ts_col="timestamp", type_col="type",
                 tiebreak_col="id", from_ts=from_ts, to_ts=to_ts, event_types=event_types,
             )
+            return df.toLocalIterator() if rows else df
         ts, utc = pc.field("timestamp"), pa.timestamp("us", "UTC")
         where = pc.scalar(True)
         if from_ts is not None:
@@ -391,7 +404,7 @@ class ParquetEventStore:
         top = read_top_k(EVENT_SCHEMA, self._part_dir(topic), where, ["timestamp", "id"], limit)
         top = top.set_column(top.schema.get_field_index("topic"), "topic",
                              pa.array([topic] * top.num_rows, pa.string()))
-        return self.spark.createDataFrame(top, _SCAN_SCHEMA)
+        return to_rows(_SCAN_SCHEMA, top) if rows else self.spark.createDataFrame(top, _SCAN_SCHEMA)
 
     def compact(self, topic: str, target_files: int = 1) -> int:
         """Rewrite a topic partition into ``target_files`` files.

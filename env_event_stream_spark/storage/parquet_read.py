@@ -6,23 +6,25 @@ The readers here answer the same questions from the files with
 pyarrow, without a Spark job, and read only what they need:
 
 - ``file_keys`` gives each visible file's row count and the min/max of
-  its ``timestamp`` column. A file the driver wrote (INT64 microseconds)
-  answers from its footer alone; a file Spark wrote (INT96, no usable
-  statistics) has its ``timestamp`` and ``id`` column chunks read.
-- ``read_internal`` reads the rows matching a pushed-down filter as
-  Spark's internal values, so ``schema.fromInternal`` turns them into
-  the Rows ``collect()`` returns: local naive datetimes, maps as dicts,
-  nested structs as Rows.
+  its ``timestamp`` column from the footer alone. Store files carry
+  INT64 UTC-microsecond timestamps with statistics, whether the driver
+  or Spark wrote them (``session.get_spark`` makes Spark write INT64).
+  A legacy or foreign file with INT96 timestamps (no usable statistics:
+  written before that setting, or by a session built elsewhere) has its
+  ``timestamp`` and ``id`` columns read instead (``read_keys``).
 - ``read_top_k`` gives the first ``k`` rows matching a pushed-down
   filter in an ORDER BY's order, streamed batch by batch, so the
   driver holds ``k`` rows plus the scanner's read-ahead batches,
   never the whole scan (Spark's ``TakeOrderedAndProject`` merges each
-  partition's top ``k`` on the driver too).
+  partition's top ``k`` on the driver too). pyarrow's dataset skips
+  the row groups whose statistics rule the filter out.
 - ``seq_span`` gives a file's row count, the min/max and NULL count of
   an int64 sequence column, and its uncompressed size, from the footer
   alone when its statistics are complete; ``read_sorted`` reads the
-  rows of some files matching a pushed-down filter, sorted by one
-  column.
+  rows of some files matching a pushed-down filter, sorted.
+- ``to_rows`` turns such a table into the Rows ``collect()`` returns
+  (local naive datetimes, maps as dicts, nested structs as Rows),
+  column by column, with no JVM round trip.
 
 Timestamps are compared as Spark stores them: microseconds since the
 epoch, UTC (INT96 values are UTC instants, as Spark writes them).
@@ -33,7 +35,6 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Callable
 from typing import Any, NamedTuple
 
 import pyarrow as pa
@@ -42,10 +43,11 @@ import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _create_row
 
 __all__ = [
-    "FileKeys", "SeqSpan", "file_keys", "read_internal", "read_keys", "read_sorted",
-    "read_top_k", "seq_span", "visible_files",
+    "FileKeys", "SeqSpan", "file_keys", "read_keys", "read_sorted", "read_top_k",
+    "seq_span", "to_rows", "visible_files",
 ]
 
 _INT96_AS_US = {"coerce_int96_timestamp_unit": "us"}
@@ -75,20 +77,20 @@ class FileKeys(NamedTuple):
 
 def file_keys(directory: str) -> list[FileKeys]:
     """``FileKeys`` of every visible file under ``directory`` that holds
-    rows."""
+    rows; only a file whose footer has no ``timestamp`` range has its
+    columns read."""
     out = []
     for path in visible_files(directory):
-        f = pq.ParquetFile(path, **_INT96_AS_US)
-        md = f.metadata
+        md = pq.read_metadata(path)
         if md.num_rows == 0:
             continue
+        f = FileKeys(path, md.num_rows, 0, 0)
         span = _footer_span(md)
-        if span is not None:
-            out.append(FileKeys(path, md.num_rows, *span))
-            continue
-        keys = _keys(f.read(columns=["timestamp", "id"]))
-        ts = keys.column("timestamp")
-        out.append(FileKeys(path, md.num_rows, pc.min(ts).as_py(), pc.max(ts).as_py(), keys))
+        if span is None:
+            f = f._replace(keys=read_keys(f))
+            ts = f.keys.column("timestamp")
+            span = pc.min(ts).as_py(), pc.max(ts).as_py()
+        out.append(f._replace(lo=span[0], hi=span[1]))
     return out
 
 
@@ -96,10 +98,7 @@ def read_keys(f: FileKeys) -> pa.Table:
     """The ``(timestamp, id)`` columns of one file, timestamp in μs."""
     if f.keys is not None:
         return f.keys
-    return _keys(pq.ParquetFile(f.path, **_INT96_AS_US).read(columns=["timestamp", "id"]))
-
-
-def _keys(table: pa.Table) -> pa.Table:
+    table = pq.ParquetFile(f.path, **_INT96_AS_US).read(columns=["timestamp", "id"])
     ts = table.column("timestamp")
     if ts.type.unit != "us":
         ts = ts.cast(pa.timestamp("us", ts.type.tz))
@@ -161,26 +160,14 @@ def seq_span(path: str, column: str) -> SeqSpan:
 
 
 def read_sorted(
-    schema: T.StructType, files: list[str], where: pc.Expression, by: str,
+    schema: T.StructType, files: list[str], where: pc.Expression, order: list[tuple[str, str]],
 ) -> pa.Table:
-    """Rows of ``files`` matching ``where``, sorted by ``by`` ascending
-    with NULLs first, every field nullable and every timestamp UTC μs
-    (``read_top_k``'s shape). A listed file that is gone raises
-    FileNotFoundError."""
-    relaxed = _relaxed(schema, pa.timestamp("us", "UTC"))
-    table = ds.dataset(files, format=_FORMAT, schema=relaxed).to_table(filter=where)
-    return table.sort_by([(by, "ascending")], null_placement="at_start")
-
-
-def read_internal(schema: T.StructType, directory: str, where: pc.Expression) -> list[tuple]:
-    """Rows of the parquet files under ``directory`` matching ``where``,
-    as Spark's internal values in ``schema``'s field order."""
-    files = visible_files(directory)
-    if not files:
-        return []
+    """Rows of ``files`` matching ``where``, sorted by the ``(column,
+    "ascending" | "descending")`` keys of ``order`` with NULLs first,
+    every field nullable and every timestamp UTC μs (``read_top_k``'s
+    shape). A listed file that is gone raises FileNotFoundError."""
     table = ds.dataset(files, format=_FORMAT, schema=_relaxed(schema)).to_table(filter=where)
-    convert = _to_internal(schema)
-    return [convert(r) for r in table.to_pylist()]
+    return table.sort_by(order, null_placement="at_start")
 
 
 def read_top_k(
@@ -193,7 +180,7 @@ def read_top_k(
     them. A running top ``k`` is merged with each record batch as it
     is read, so memory is ``k`` rows plus the read-ahead batches,
     however many rows match."""
-    relaxed = _relaxed(schema, pa.timestamp("us", "UTC"))
+    relaxed = _relaxed(schema)
     top = relaxed.empty_table()
     files = visible_files(directory)
     if not files:
@@ -206,14 +193,14 @@ def read_top_k(
     return top
 
 
-def _relaxed(schema: T.StructType, timestamp: pa.DataType = pa.int64()) -> pa.Schema:
+def _relaxed(schema: T.StructType) -> pa.Schema:
     """``schema`` in Arrow, every field nullable and every timestamp
-    read as ``timestamp`` (by default its int64 μs), so files written
-    by the driver and by Spark (INT96, other nullability) read alike."""
+    read as UTC μs, so files written by the driver and by Spark (INT64
+    or INT96, other nullability) read alike."""
 
     def relax(t: pa.DataType) -> pa.DataType:
         if pa.types.is_timestamp(t):
-            return timestamp
+            return pa.timestamp("us", "UTC")
         if pa.types.is_struct(t):
             return pa.struct([pa.field(f.name, relax(f.type)) for f in t])
         if pa.types.is_map(t):
@@ -223,13 +210,34 @@ def _relaxed(schema: T.StructType, timestamp: pa.DataType = pa.int64()) -> pa.Sc
     return pa.schema([pa.field(f.name, relax(f.type)) for f in to_arrow_schema(schema)])
 
 
-def _to_internal(dtype: T.DataType) -> Callable[[Any], Any]:
-    """Arrow's Python value of ``dtype`` -> Spark's internal value
-    (struct dict -> tuple, map pairs -> dict)."""
-    if isinstance(dtype, T.StructType):
-        fields = [(f.name, _to_internal(f.dataType)) for f in dtype.fields]
-        return lambda v: None if v is None else tuple(c(v[n]) for n, c in fields)
+def to_rows(schema: T.StructType, table: pa.Table) -> list[T.Row]:
+    """The rows of ``table`` as ``collect()`` returns them for
+    ``schema``: its fields by name and in its order, timestamps as the
+    host zone's naive datetimes (``TimestampType.fromInternal``), maps
+    as dicts and structs as Rows. Converted column by column, not
+    through ``Table.to_pylist()``, whose tz-aware datetimes and map
+    pairs cost several times more."""
+    columns = [_values(f.dataType, table.column(f.name)) for f in schema.fields]
+    return [_create_row(schema.names, v) for v in zip(*columns)]
+
+
+def _values(dtype: T.DataType, array: pa.Array | pa.ChunkedArray) -> list[Any]:
+    """``array``'s values as ``collect()`` gives values of ``dtype``."""
+    if isinstance(array, pa.ChunkedArray):
+        array = array.combine_chunks()
+    if isinstance(dtype, T.TimestampType):
+        micros = array.cast(pa.timestamp("us", array.type.tz)).cast(pa.int64())
+        return [None if v is None else dtype.fromInternal(v) for v in micros.to_pylist()]
     if isinstance(dtype, T.MapType):
-        key, value = _to_internal(dtype.keyType), _to_internal(dtype.valueType)
-        return lambda v: None if v is None else {key(k): value(x) for k, x in v}
-    return lambda v: v
+        # offsets index the whole key/item children, also in a slice
+        keys = _values(dtype.keyType, array.keys)
+        items = _values(dtype.valueType, array.items)
+        offsets = array.offsets.to_pylist()
+        return [dict(zip(keys[lo:hi], items[lo:hi])) if ok else None
+                for ok, lo, hi in zip(array.is_valid().to_pylist(), offsets, offsets[1:])]
+    if isinstance(dtype, T.StructType):
+        children = dict(zip((f.name for f in array.type), array.flatten()))
+        fields = zip(*(_values(f.dataType, children[f.name]) for f in dtype.fields))
+        return [_create_row(dtype.names, v) if ok else None
+                for ok, v in zip(array.is_valid().to_pylist(), fields)]
+    return array.to_pylist()

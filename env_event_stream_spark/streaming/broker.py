@@ -455,20 +455,14 @@ class EventBroker:
     ) -> int:
         """Batch re-drive (src/broker.ts:144-161) in ``(timestamp, id)``
         order. A limited replay (``limit > 0``) holds at most ``limit``
-        rows, so it collects them (the parquet store reads them on the
-        driver: no Spark job); an unlimited one (None or <= 0) iterates
-        with toLocalIterator, so driver memory stays bounded however
-        large the topic."""
-        df = self.store.get_events(
-            topic,
-            from_ts=from_ts,
-            to_ts=to_ts,
-            event_types=event_types,
-            limit=limit,
-        )
+        rows: the store reads them from the topic's files on the driver
+        and hands them over as Rows, with no Spark job and no JVM round
+        trip. An unlimited one (None or <= 0) iterates a Spark scan with
+        toLocalIterator, so driver memory stays bounded however large
+        the topic."""
         n = 0
-        rows = df.collect() if limit is not None and limit > 0 else df.toLocalIterator()
-        for row in rows:
+        for row in self.store.get_events(topic, from_ts=from_ts, to_ts=to_ts,
+                                         event_types=event_types, limit=limit, rows=True):
             handler(row)
             n += 1
         return n

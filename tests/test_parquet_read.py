@@ -4,13 +4,16 @@ them: DLQ redrive lookup, retention planned from the files,
 the aggregate ``exists`` probe).
 
 Each answer is pinned against what Spark gives for the same files, in
-several host time zones, over files the driver wrote (INT64
-timestamps with footer statistics) and files Spark wrote (INT96, no
-statistics); and the driver paths are pinned to start no Spark job.
+several host time zones, over files with INT64 timestamps and footer
+statistics (the driver's, and Spark's under ``get_spark``) and legacy
+INT96 files (written here under a scoped ``outputTimestampType``); the
+driver paths are pinned to start no Spark job, and a limited replay to
+make no JVM call at all.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import os
 import shutil
@@ -25,9 +28,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from env_event_stream_spark.aggregates import RepositoryFactory
+from env_event_stream_spark.storage import event_store, parquet_read
 from env_event_stream_spark.storage.dlq_store import ParquetDeadLetterQueue
 from env_event_stream_spark.storage.event_store import (
     EVENT_SCHEMA,
+    SEQ,
     ParquetEventStore,
     make_event,
 )
@@ -50,6 +55,19 @@ def _timestamp_type(path: str) -> str:
                 if schema.column(i).path == "timestamp")
 
 
+@contextlib.contextmanager
+def _int96(spark):
+    """Spark writes INT96 timestamps inside the block, as a session not
+    built by ``get_spark`` (or one from before it set INT64) does."""
+    key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 def _collected(dlq, event_id):
     rows = dlq.to_df().where(F.col("event.id") == event_id).collect()
     assert len(rows) <= 1
@@ -60,7 +78,8 @@ def _collected(dlq, event_id):
 def test_dlq_get_entry_matches_spark_collect(spark, tmp_path, host_tz):
     """``get_entry`` returns the Row ``to_df().collect()`` gives: on
     driver-written files, after ``compact`` rewrote them with Spark
-    (INT96), and with a driver append on top of that."""
+    (INT96, the legacy layout), and with a driver append on top of
+    that."""
     dlq = ParquetDeadLetterQueue(spark, str(tmp_path / "dlq"))
     t = dt.datetime(2024, 3, 10, 6, 59, 59, 123456)
     e0, e1, e2 = _event(0), _event(1, payload=None, metadata=None), _event(2)
@@ -82,7 +101,8 @@ def test_dlq_get_entry_matches_spark_collect(spark, tmp_path, host_tz):
         assert dlq.get_entry("e1").event.metadata is None
 
     check()
-    dlq.compact()
+    with _int96(spark):
+        dlq.compact()
     assert {_timestamp_type(f) for f in visible_files(dlq.path)} == {"INT96"}
     check()
     dlq._append([(tuple(e2), "again", "s", dt.datetime(2100, 1, 1), 2)])
@@ -202,7 +222,7 @@ def _bounded_store(spark, tmp_path):
     four rows tied on one timestamp spread over the writers, and NULL
     payload and metadata; a NULL id (only a foreign writer makes one)
     ties e12, and sorts first. Also ``a/b c``, a topic that needs
-    escapes."""
+    escapes, over a driver-written file and a Spark-written INT64 one."""
     store = ParquetEventStore(spark, str(tmp_path / "bounded"))
     store.initialize()
     tie = T0 + dt.timedelta(seconds=5)
@@ -210,7 +230,8 @@ def _bounded_store(spark, tmp_path):
     ev += [_event(i, timestamp=tie, type="ab"[i % 2]) for i in (8, 5, 7, 6)]
     ev += [_event(i, type="abc"[i % 3], payload=None if i % 4 else "{}",
                   metadata=None if i % 3 else {"m": str(i)}) for i in range(9, 21)]
-    store.save_events(spark.createDataFrame(ev[0:3] + ev[5:6], EVENT_SCHEMA).coalesce(1))
+    with _int96(spark):
+        store.save_events(spark.createDataFrame(ev[0:3] + ev[5:6], EVENT_SCHEMA).coalesce(1))
     store.save_events(ev[6:8])
     store.save_event(ev[3])
     store.save_event(ev[8])
@@ -218,6 +239,10 @@ def _bounded_store(spark, tmp_path):
     _multi_batch_file(store._part_dir("t"), ev[4:5] + ev[9:] + [no_id])
     store.save_events([make_event("a/b c", "a", "{}", None, timestamp=T0, event_id="x1"),
                        make_event("a/b c", "b", None, {"k": "v"}, timestamp=T0, event_id="x0")])
+    store.save_events(spark.createDataFrame(
+        [make_event("a/b c", "c", None, {"m": "1", "n": "2"}, timestamp=T0, event_id="x2"),
+         make_event("a/b c", "a", "{}", None, timestamp=T0 + dt.timedelta(seconds=1),
+                    event_id="x3")], EVENT_SCHEMA).coalesce(1))
     return store
 
 
@@ -248,8 +273,11 @@ def test_bounded_get_events_matches_spark(spark, tmp_path, host_tz):
     """``get_events(limit=k)`` read on the driver gives the Rows, order
     and schema of the same store's unbounded Spark read cut to ``k``,
     and starts no Spark job; also for string bounds under a non-UTC
-    session time zone."""
+    session time zone. ``replay_events(limit=k)`` hands its handler
+    those Rows too, field order included."""
     store = _bounded_store(spark, tmp_path)
+    broker = EventBroker(spark, str(tmp_path / "b"))
+    broker.store = store
     part = store._part_dir("t")
     assert "INT96" in {_timestamp_type(f) for f in visible_files(part)}
     assert "INT64" in {_timestamp_type(f) for f in visible_files(part)}
@@ -260,16 +288,22 @@ def test_bounded_get_events_matches_spark(spark, tmp_path, host_tz):
         for zone in ("UTC", "America/Los_Angeles"):
             spark.conf.set("spark.sql.session.timeZone", zone)
             cases = list(_bounded_cases())
+            replayed = [[] for _ in cases]
             with JobBudget(spark) as budget:
                 bounded = [store.get_events(t, limit=k, **kw) for t, kw, k in cases]
                 got = [df.collect() for df in bounded]
+                for (t, kw, k), handed in zip(cases, replayed):
+                    assert broker.replay_events(t, handed.append, limit=k, **kw) == len(handed)
                 assert budget.jobs() == 0
-            for (t, kw, k), df, rows in zip(cases, bounded, got):
+            for (t, kw, k), df, rows, handed in zip(cases, bounded, got, replayed):
                 spark_df = store.get_events(t, **kw)
                 want = spark_df.collect()[:k]
                 assert df.schema == spark_df.schema
                 assert [r.asDict(recursive=True) for r in rows] \
                     == [r.asDict(recursive=True) for r in want], (zone, t, kw, k)
+                assert [r.asDict(recursive=True) for r in handed] \
+                    == [r.asDict(recursive=True) for r in want], (zone, t, kw, k)
+                assert [r.__fields__ for r in handed] == [r.__fields__ for r in want]
             assert sum(map(len, got)) > 50
             assert [r.id for r in got[7]] == ["e0", "e1", "e2"]  # to_ts, k=3
             ids = [r.id for r in got[2]]  # no filter, k=50: every row
@@ -279,10 +313,50 @@ def test_bounded_get_events_matches_spark(spark, tmp_path, host_tz):
         spark.conf.set("spark.sql.session.timeZone", session_tz)
 
 
+def test_spark_written_files_answer_from_footers(spark, tmp_path, monkeypatch):
+    """A Spark write from the ``get_spark`` session, and a ``compact``
+    of it, leave INT64 timestamps with footer statistics and a
+    delta-encoded ``_seq``; a retention sweep over them reads no
+    column."""
+    store = ParquetEventStore(spark, str(tmp_path / "events"))
+    store.initialize()
+    events = [_event(i) for i in range(9)]
+    for k in (0, 3):
+        store.save_events(spark.createDataFrame(events[k:k + 3], EVENT_SCHEMA).coalesce(1))
+    assert store.compact("t") == 1
+    store.save_events(spark.createDataFrame(events[6:], EVENT_SCHEMA).coalesce(1))
+    files = visible_files(store._part_dir("t"))
+    assert len(files) == 2
+    assert {_timestamp_type(f) for f in files} == {"INT64"}
+    for f in files:
+        md = pq.read_metadata(f)
+        i = [md.schema.column(j).path for j in range(md.num_columns)].index(SEQ)
+        assert "DELTA_BINARY_PACKED" in md.row_group(0).column(i).encodings
+    read = []
+    keys = parquet_read.read_keys
+
+    def spying(f):
+        read.append(f.path)
+        return keys(f)
+
+    monkeypatch.setattr(parquet_read, "read_keys", spying)
+    monkeypatch.setattr(event_store, "read_keys", spying)
+    with JobBudget(spark) as budget:
+        assert store.delete_events("t", T0 + dt.timedelta(seconds=5.5)) == 6
+        assert budget.jobs() == 0
+    assert read == []
+    assert _kept(store) == ["e6", "e7", "e8"]
+
+
+def _no_jvm(*_args, **_kwargs):
+    raise AssertionError("a limited replay went through the JVM")
+
+
 def test_broker_driver_paths_start_no_spark_job(spark, tmp_path):
     """A count sweep and a time sweep whose cuts fall between files, a
     redrive, ``delete_topic``'s count, a limited replay and the
-    aggregate ``exists`` probe run on the driver."""
+    aggregate ``exists`` probe run on the driver; the replay builds no
+    DataFrame and collects none."""
     broker = EventBroker(spark, str(tmp_path / "b"))
     broker.create_topic("orders", max_events=3)
     broker.create_topic("old", retention_period=3600.0)
@@ -305,7 +379,10 @@ def test_broker_driver_paths_start_no_spark_job(spark, tmp_path):
         assert broker.retry_dlq_event("missing") is False
         assert broker.store.delete_topic("old") == counted - 2
         replayed = []
-        assert broker.replay_events("orders", replayed.append, limit=2) == 2
+        with pytest.MonkeyPatch.context() as m:  # no JVM call at all
+            m.setattr(type(spark), "createDataFrame", _no_jvm)
+            m.setattr(type(spark.range(1)), "collect", _no_jvm)
+            assert broker.replay_events("orders", replayed.append, limit=2) == 2
         assert repo.exists("a1") and not repo.exists("a2")
         assert budget.jobs() == 0
         spark.range(1).count()  # the meter does see jobs of this group
