@@ -67,13 +67,11 @@ from pyspark.sql import types as T
 from env_event_stream_spark.operators.event_queries import get_events as _get_events_df
 from env_event_stream_spark.storage.parquet_append import append_rows, partition_dir
 from env_event_stream_spark.storage.parquet_read import (
-    FileKeys,
-    SeqSpan,
-    file_keys,
+    FileStats,
+    file_stats,
     read_keys,
     read_sorted,
     read_top_k,
-    seq_span,
     to_rows,
     visible_files,
 )
@@ -111,8 +109,8 @@ _FILE_SCHEMA = T.StructType(
 # marker and footers. Per process, not per store object: two stores
 # opened on one path must not hand out the same numbers. The lock also
 # orders each write's numbering and its files becoming visible against
-# ``seq_spans``, so a listing never sees a later write without an
-# earlier one.
+# ``files``, so a listing never sees a later write without an earlier
+# one.
 _HEADS: dict[str, int] = {}
 _HEAD_LOCK = threading.RLock()
 
@@ -184,6 +182,7 @@ class ParquetEventStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self._stats: dict[str, dict[str, FileStats]] = {}  # part dir -> its listed files
         recover(path)
 
     def initialize(self) -> None:
@@ -210,8 +209,7 @@ class ParquetEventStore:
         key = os.path.abspath(part_dir)
         head = _HEADS.get(key)
         if head is None:
-            spans = [seq_span(f, SEQ) for f in visible_files(part_dir)]
-            his = [s.hi for s in spans if s.hi is not None]
+            his = [f.seq_hi for f in self._files(part_dir) if f.seq_hi is not None]
             head = _HEADS[key] = max([_read_marker(_marker(part_dir)), *his])
         return head
 
@@ -233,18 +231,23 @@ class ParquetEventStore:
             if head > _read_marker(marker):
                 _write_marker(marker, head)
 
-    def seq_spans(self, topic: str, known: dict[str, SeqSpan]) -> dict[str, SeqSpan]:
-        """``SeqSpan`` of each visible file of ``topic``; ``known``
-        holds spans read before (file names are uuids, never reused).
-        Listed under ``_HEAD_LOCK``."""
+    def files(self, topic: str) -> list[FileStats]:
+        """``FileStats`` of each visible file of ``topic``, listed under
+        ``_HEAD_LOCK``. File names are uuids and files never change, so
+        each footer is read once per store."""
+        return self._files(self._part_dir(topic))
+
+    def _files(self, part_dir: str) -> list[FileStats]:
+        key = os.path.abspath(part_dir)
         with _HEAD_LOCK:
-            return {p: known.get(p) or seq_span(p, SEQ)
-                    for p in visible_files(self._part_dir(topic))}
+            known = self._stats.get(key, {})
+            self._stats[key] = {p: known.get(p) or file_stats(p, SEQ) for p in visible_files(part_dir)}
+            return list(self._stats[key].values())
 
     def read_seq(
         self,
         topic: str,
-        spans: dict[str, SeqSpan],
+        files: list[FileStats],
         start: int,
         end: int,
         *,
@@ -254,22 +257,22 @@ class ParquetEventStore:
         """The rows of ``topic`` with ``start < SEQ <= end`` (and, with
         ``nulls``, those with no SEQ, written before it existed) whose
         type is in ``event_types``, in SEQ order and EVENT_SCHEMA's
-        shape; None when no file of ``spans`` holds such rows.
+        shape; None when no file of ``files`` holds such rows.
 
-        Only the files whose span overlaps the range are read. When
+        Only the files whose SEQ range overlaps it are read. When
         their uncompressed size fits under the session's
         ``spark.sql.execution.arrow.localRelationThreshold`` they are
         read on the driver and come back as a local relation (no Spark
         job to build it) in one partition, so an aggregate over the
         batch needs no shuffle (a ``count()`` takes one stage, not two);
         larger ranges are a Spark scan of those files, so a big backlog
-        stays distributed. A file gone since ``spans`` was listed raises
+        stays distributed. A file gone since ``files`` was listed raises
         FileNotFoundError on the driver path."""
-        files = [p for p, s in spans.items()
-                 if (s.hi is not None and s.hi > start and s.lo <= end) or (nulls and s.nulls)]
+        files = [f for f in files if (f.seq_hi is not None and f.seq_hi > start
+                                      and f.seq_lo <= end) or (nulls and f.seq_nulls)]
         if not files:
             return None
-        size = sum(spans[p].size for p in files)
+        size, paths = sum(f.size for f in files), [f.path for f in files]
         limit = self.spark._jsparkSession.sessionState().conf().arrowLocalRelationThreshold()
         if size <= limit:
             seq = pc.field(SEQ)
@@ -279,7 +282,7 @@ class ParquetEventStore:
             if event_types is not None:
                 wanted = pa.array([t for t in event_types if t is not None], pa.string())
                 where &= pc.field("type").isin(wanted)
-            rows = read_sorted(_SEQ_SCHEMA, files, where, [(SEQ, "ascending")]).drop_columns(SEQ)
+            rows = read_sorted(_SEQ_SCHEMA, paths, where, [(SEQ, "ascending")]).drop_columns(SEQ)
             rows = rows.set_column(rows.schema.get_field_index("topic"), "topic",
                                    pa.array([topic] * rows.num_rows, pa.string()))
             return self.spark.createDataFrame(rows, _SCAN_SCHEMA).coalesce(1)
@@ -290,24 +293,24 @@ class ParquetEventStore:
         if event_types is not None:
             where &= F.col("type").isin(list(event_types))
         df = (self.spark.read.schema(_FILE_SCHEMA)
-              .option("basePath", self._part_dir(topic)).parquet(*files))
+              .option("basePath", self._part_dir(topic)).parquet(*paths))
         return (df.where(where).orderBy(SEQ).withColumn("topic", F.lit(topic))
                 .select(*EVENT_SCHEMA.fieldNames()))
 
-    def count_seq_after(self, spans: dict[str, SeqSpan], after: int, *, nulls: bool) -> int:
-        """Rows of ``spans`` with SEQ above ``after`` (and, with
-        ``nulls``, rows with none), counted from the spans; only a file
-        whose span straddles ``after`` has its SEQ column read."""
+    def count_seq_after(self, files: list[FileStats], after: int, *, nulls: bool) -> int:
+        """Rows of ``files`` with SEQ above ``after`` (and, with
+        ``nulls``, rows with none), counted from their stats; only a
+        file whose SEQ range straddles ``after`` has its SEQ read."""
         n = 0
-        for path, s in spans.items():
-            n += s.nulls if nulls else 0
-            if s.hi is None or s.hi <= after:
+        for f in files:
+            n += f.seq_nulls if nulls else 0
+            if f.seq_hi is None or f.seq_hi <= after:
                 continue
-            if s.lo > after:
-                n += s.rows - s.nulls
+            if f.seq_lo > after:
+                n += f.rows - f.seq_nulls
                 continue
             try:
-                values = pq.read_table(path, columns=[SEQ]).column(0)
+                values = pq.read_table(f.path, columns=[SEQ]).column(0)
             except FileNotFoundError:
                 continue  # removed since it was listed
             n += pc.sum(pc.greater(values, after).cast(pa.int64())).as_py() or 0
@@ -417,14 +420,11 @@ class ParquetEventStore:
         The rows keep their SEQ, so a subscription, which tracks SEQ and
         not file names, delivers none of them again."""
         part_dir = self._part_dir(topic)
-        if not os.path.isdir(part_dir):
-            return 0
-        before = sum(1 for f in os.listdir(part_dir) if f.endswith(".parquet"))
+        before = len(visible_files(part_dir))
         if before <= target_files:
             return 0
         replace_dir(self._partition(topic).coalesce(target_files), part_dir)
-        after = sum(1 for f in os.listdir(part_dir) if f.endswith(".parquet"))
-        return before - after
+        return before - len(visible_files(part_dir))
 
     def delete_topic(self, topic: str) -> int:
         """Drop a topic's whole partition directory — O(1) metadata
@@ -436,7 +436,7 @@ class ParquetEventStore:
         part_dir = self._part_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
-        n = sum(pq.read_metadata(f).num_rows for f in visible_files(part_dir))
+        n = sum(f.rows for f in self.files(topic))
         self._keep_head(topic)
         shutil.rmtree(part_dir)
         return n
@@ -463,19 +463,21 @@ class ParquetEventStore:
         short leaves no orphan sidecar and the next sweep finishes it;
         a file wholly after it keeps its name. Only when a file holds
         rows on both sides is the partition rewritten (``drop_rows``),
-        and its kept rows keep their SEQ. An ISO string is read by
-        ``datetime.fromisoformat``."""
-        if isinstance(before_ts, str):
-            before_ts = _dt.datetime.fromisoformat(before_ts)
-        cut = T.TimestampType().toInternal(before_ts)  # the rule F.lit applies
+        and its kept rows keep their SEQ. The bound compares as in
+        ``get_events`` (``_micros``): a datetime by F.lit's rule, anything
+        else (an ISO string, a date) cast in the session time zone; one
+        that casts to NULL deletes nothing."""
+        cut = _micros(self.spark, before_ts)
+        if cut is None:
+            return 0
         doomed = []
-        for f in file_keys(self._part_dir(topic)):
-            if f.lo > cut:
+        for f in self.files(topic):
+            if f.lo is None or f.lo > cut:
                 continue
             if f.hi < cut:
                 doomed.append(f)
                 continue
-            older = _count_older(read_keys(f), cut, before_id)
+            older = _count_older(read_keys(f.path), cut, before_id)
             if older == f.rows:
                 doomed.append(f)
             elif older:  # the cut falls inside this file
@@ -501,13 +503,13 @@ class ParquetEventStore:
         files that can hold it have their two columns read, and no
         Spark job runs. The timestamp is an aware UTC datetime, so it
         converts back to the same instant in any host zone."""
-        files = file_keys(self._part_dir(topic))
+        files = [f for f in self.files(topic) if f.lo is not None]
         if sum(f.rows for f in files) <= keep:
             return None
         # at least ``keep`` rows have ts >= lo; fewer than ``keep`` have ts > hi
         lo, hi = _kth_bound(files, "lo", keep), _kth_bound(files, "hi", keep)
         newer = sum(f.rows for f in files if f.lo > hi)
-        keys = pa.concat_tables(read_keys(f) for f in files if f.lo <= hi and f.hi >= lo)
+        keys = pa.concat_tables(read_keys(f.path) for f in files if f.lo <= hi and f.hi >= lo)
         order = keys.sort_by([("timestamp", "descending"), ("id", "descending")])
         row = order.slice(keep - newer - 1, 1).to_pylist()[0]
         return _EPOCH + _dt.timedelta(microseconds=row["timestamp"]), row["id"]
@@ -563,7 +565,7 @@ def _micros(spark: SparkSession, bound: Any) -> int | None:
     return one.select(F.unix_micros(F.lit(bound).cast("timestamp"))).collect()[0][0]
 
 
-def _kth_bound(files: list[FileKeys], attr: str, k: int) -> int:
+def _kth_bound(files: list[FileStats], attr: str, k: int) -> int:
     """``attr`` of the file at which the row count, files taken by
     ``attr`` descending, first reaches ``k`` (the files hold more)."""
     n = 0

@@ -5,23 +5,22 @@ job's scheduling, task launch and result round trip for every call.
 The readers here answer the same questions from the files with
 pyarrow, without a Spark job, and read only what they need:
 
-- ``file_keys`` gives each visible file's row count and the min/max of
-  its ``timestamp`` column from the footer alone. Store files carry
-  INT64 UTC-microsecond timestamps with statistics, whether the driver
-  or Spark wrote them (``session.get_spark`` makes Spark write INT64).
-  A legacy or foreign file with INT96 timestamps (no usable statistics:
-  written before that setting, or by a session built elsewhere) has its
-  ``timestamp`` and ``id`` columns read instead (``read_keys``).
+- ``file_stats`` is the one footer reader: a file's rows, size and
+  the min/max of its ``timestamp`` and sequence columns, with the
+  sequence's NULL count, from one parse of its footer. Store files
+  carry INT64 UTC-microsecond timestamps with statistics, whether the
+  driver or Spark wrote them (``session.get_spark`` makes Spark write
+  INT64). A column without usable statistics (INT96 timestamps in a
+  legacy or foreign file, or a file written without statistics) is
+  read instead; ``read_keys`` reads a file's ``timestamp`` and ``id``.
 - ``read_top_k`` gives the first ``k`` rows matching a pushed-down
   filter in an ORDER BY's order, streamed batch by batch, so the
   driver holds ``k`` rows plus the scanner's read-ahead batches,
   never the whole scan (Spark's ``TakeOrderedAndProject`` merges each
   partition's top ``k`` on the driver too). pyarrow's dataset skips
   the row groups whose statistics rule the filter out.
-- ``seq_span`` gives a file's row count, the min/max and NULL count of
-  an int64 sequence column, and its uncompressed size, from the footer
-  alone when its statistics are complete; ``read_sorted`` reads the
-  rows of some files matching a pushed-down filter, sorted.
+- ``read_sorted`` reads the rows of some files matching a pushed-down
+  filter, sorted.
 - ``to_rows`` turns such a table into the Rows ``collect()`` returns
   (local naive datetimes, maps as dicts, nested structs as Rows),
   column by column, with no JVM round trip.
@@ -46,8 +45,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _create_row
 
 __all__ = [
-    "FileKeys", "SeqSpan", "file_keys", "read_keys", "read_sorted", "read_top_k",
-    "seq_span", "to_rows", "visible_files",
+    "FileStats", "file_stats", "read_keys", "read_sorted", "read_top_k", "to_rows",
+    "visible_files",
 ]
 
 _INT96_AS_US = {"coerce_int96_timestamp_unit": "us"}
@@ -64,99 +63,71 @@ def visible_files(directory: str) -> list[str]:
     )
 
 
-class FileKeys(NamedTuple):
-    """One file's row count and ``timestamp`` range (μs since the epoch);
-    ``keys`` holds its ``(timestamp, id)`` columns when they were read."""
+class FileStats(NamedTuple):
+    """One file's rows, uncompressed size in bytes, ``timestamp`` range
+    (μs since the epoch), sequence column range, and rows with no
+    sequence number; a range is None when no row has a value."""
 
     path: str
     rows: int
-    lo: int
-    hi: int
-    keys: pa.Table | None = None
-
-
-def file_keys(directory: str) -> list[FileKeys]:
-    """``FileKeys`` of every visible file under ``directory`` that holds
-    rows; only a file whose footer has no ``timestamp`` range has its
-    columns read."""
-    out = []
-    for path in visible_files(directory):
-        md = pq.read_metadata(path)
-        if md.num_rows == 0:
-            continue
-        f = FileKeys(path, md.num_rows, 0, 0)
-        span = _footer_span(md)
-        if span is None:
-            f = f._replace(keys=read_keys(f))
-            ts = f.keys.column("timestamp")
-            span = pc.min(ts).as_py(), pc.max(ts).as_py()
-        out.append(f._replace(lo=span[0], hi=span[1]))
-    return out
-
-
-def read_keys(f: FileKeys) -> pa.Table:
-    """The ``(timestamp, id)`` columns of one file, timestamp in μs."""
-    if f.keys is not None:
-        return f.keys
-    table = pq.ParquetFile(f.path, **_INT96_AS_US).read(columns=["timestamp", "id"])
-    ts = table.column("timestamp")
-    if ts.type.unit != "us":
-        ts = ts.cast(pa.timestamp("us", ts.type.tz))
-    return pa.table({"timestamp": ts.cast(pa.int64()), "id": table.column("id")})
-
-
-def _footer_span(md: pq.FileMetaData) -> tuple[int, int] | None:
-    """min/max of ``timestamp`` from the footer statistics when it is an
-    INT64 UTC-microsecond column with min/max in every row group."""
-    names = [md.schema.column(i).path for i in range(md.num_columns)]
-    if "timestamp" not in names:
-        return None
-    i = names.index("timestamp")
-    col = md.schema.column(i)
-    logical = json.loads(col.logical_type.to_json())
-    if col.physical_type != "INT64" or logical.get("timeUnit") != "microseconds" \
-            or not logical.get("isAdjustedToUTC"):
-        return None
-    stats = [md.row_group(g).column(i).statistics for g in range(md.num_row_groups)]
-    if any(s is None or not s.has_min_max for s in stats):
-        return None
-    return min(s.min_raw for s in stats), max(s.max_raw for s in stats)
-
-
-class SeqSpan(NamedTuple):
-    """One file's rows, the min/max of its sequence column (None when
-    no row has a value), how many rows have none, and the file's
-    uncompressed size in bytes as its footer states it."""
-
-    rows: int
+    size: int
     lo: int | None
     hi: int | None
-    nulls: int
-    size: int
+    seq_lo: int | None
+    seq_hi: int | None
+    seq_nulls: int
 
 
-def seq_span(path: str, column: str) -> SeqSpan:
-    """``SeqSpan`` of the int64 ``column`` of one file. A file without
-    the column has no value in any row. The footer answers when every
-    row group has a NULL count and, if it holds a value, a min/max;
-    otherwise the column is read."""
-    md = pq.read_metadata(path)
-    groups = [md.row_group(g) for g in range(md.num_row_groups)]
-    size = sum(g.total_byte_size for g in groups)
+def file_stats(path: str, seq: str) -> FileStats:
+    """``FileStats`` of one file, ``seq`` its int64 sequence column,
+    from one parse of its footer; a column whose statistics are
+    incomplete is read instead (``_range``)."""
+    with pq.ParquetFile(path, **_INT96_AS_US) as pf:
+        md = pf.metadata
+        size = sum(md.row_group(g).total_byte_size for g in range(md.num_row_groups))
+        lo, hi, _nulls = _range(pf, "timestamp")
+        return FileStats(path, md.num_rows, size, lo, hi, *_range(pf, seq))
+
+
+def _range(pf: pq.ParquetFile, column: str) -> tuple[int | None, int | None, int]:
+    """min, max and NULL count of ``column`` as int64 (timestamps in
+    UTC μs). The footer answers when the column is INT64 (a timestamp:
+    UTC μs, so not INT96) and every row group has a NULL count and, if
+    it holds a value, a min/max; otherwise the column is read. A file
+    without the column has no value in any row."""
+    md = pf.metadata
     names = [md.schema.column(i).path for i in range(md.num_columns)]
     if column not in names:
-        return SeqSpan(md.num_rows, None, None, md.num_rows, size)
+        return None, None, md.num_rows
     i = names.index(column)
-    stats = [(g.num_rows, g.column(i).statistics) for g in groups]
-    if all(s is not None and s.has_null_count and (s.has_min_max or s.null_count == n)
-           for n, s in stats):
+    col = md.schema.column(i)
+    logical = json.loads(col.logical_type.to_json())
+    stats = [(md.row_group(g).num_rows, md.row_group(g).column(i).statistics)
+             for g in range(md.num_row_groups)]
+    exact = col.physical_type == "INT64" and logical.get("isAdjustedToUTC", True) \
+        and logical.get("timeUnit", "microseconds") == "microseconds"
+    if exact and all(s is not None and s.has_null_count and (s.has_min_max or s.null_count == n)
+                     for n, s in stats):
         ranged = [s for _n, s in stats if s.has_min_max]
-        return SeqSpan(md.num_rows, min((s.min for s in ranged), default=None),
-                       max((s.max for s in ranged), default=None),
-                       sum(s.null_count for _n, s in stats), size)
-    values = pq.read_table(path, columns=[column]).column(0)
-    return SeqSpan(md.num_rows, pc.min(values).as_py(), pc.max(values).as_py(),
-                   values.null_count, size)
+        return (min((s.min_raw for s in ranged), default=None),
+                max((s.max_raw for s in ranged), default=None),
+                sum(s.null_count for _n, s in stats))
+    values = _int64(pf.read(columns=[column]).column(0))
+    return pc.min(values).as_py(), pc.max(values).as_py(), values.null_count
+
+
+def read_keys(path: str) -> pa.Table:
+    """The ``(timestamp, id)`` columns of one file, timestamp in μs."""
+    with pq.ParquetFile(path, **_INT96_AS_US) as pf:
+        table = pf.read(columns=["timestamp", "id"])
+    return pa.table({"timestamp": _int64(table.column("timestamp")), "id": table.column("id")})
+
+
+def _int64(values: pa.ChunkedArray) -> pa.ChunkedArray:
+    """``values`` as int64, a timestamp in μs."""
+    if pa.types.is_timestamp(values.type):
+        values = values.cast(pa.timestamp("us", values.type.tz))
+    return values.cast(pa.int64())
 
 
 def read_sorted(

@@ -601,12 +601,12 @@ class _Cursor:
         self.commits = os.path.join(checkpoint, "commits")
         self.process = process
         self.event_types = event_types
-        self.spans: dict = {}  # path -> SeqSpan, only listed files kept
+        self.files: list = []  # the FileStats of the last listing
 
     def catch_up(self, stopped: threading.Event) -> None:
         """One availableNow run: the logged but uncommitted range, if
         any, then everything up to the topic's head at this point."""
-        self.spans = self.store.seq_spans(self.topic, self.spans)
+        self.files = self.store.files(self.topic)
         epoch, start = _last(self.offsets), 0
         if epoch is not None:
             logged = _read_json(os.path.join(self.offsets, str(epoch)))
@@ -616,8 +616,8 @@ class _Cursor:
                 self._batch(epoch, logged["start"], logged["end"])
             start = logged["end"]
         epoch = 0 if epoch is None else epoch + 1
-        end = max([start, *(s.hi for s in self.spans.values() if s.hi is not None)])
-        fresh = end > start or (epoch == 0 and any(s.nulls for s in self.spans.values()))
+        end = max([start, *(f.seq_hi for f in self.files if f.seq_hi is not None)])
+        fresh = end > start or (epoch == 0 and any(f.seq_nulls for f in self.files))
         if not fresh or stopped.is_set():
             return
         _write_json(self.offsets, epoch, {"start": start, "end": end})
@@ -629,13 +629,13 @@ class _Cursor:
         again from a fresh listing: rows retention removed are not
         delivered, rows a rewrite moved are read from their new file."""
         def read():
-            return self.store.read_seq(self.topic, self.spans, start, end,
+            return self.store.read_seq(self.topic, self.files, start, end,
                                        nulls=epoch == 0, event_types=self.event_types)
 
         try:
             df = read()
         except FileNotFoundError:  # gone since the listing: list again
-            self.spans = self.store.seq_spans(self.topic, self.spans)
+            self.files = self.store.files(self.topic)
             df = read()
         if df is not None:
             self.process(df, epoch)
@@ -648,8 +648,7 @@ class _Cursor:
     def lag(self) -> int:
         epoch = _last(self.commits)
         done = 0 if epoch is None else _read_json(os.path.join(self.offsets, str(epoch)))["end"]
-        self.spans = self.store.seq_spans(self.topic, self.spans)
-        return self.store.count_seq_after(self.spans, done, nulls=epoch is None)
+        return self.store.count_seq_after(self.store.files(self.topic), done, nulls=epoch is None)
 
 
 def _last(log: str) -> int | None:

@@ -127,9 +127,9 @@ def test_max_events_cutoff_bounded_collect(spark, monkeypatch):
     read = []
     orig = event_store.read_keys
 
-    def spying(f):
-        read.append(f.path)
-        return orig(f)
+    def spying(path):
+        read.append(path)
+        return orig(path)
 
     monkeypatch.setattr(event_store, "read_keys", spying)
     with JobBudget(spark) as budget:

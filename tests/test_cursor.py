@@ -173,12 +173,11 @@ def test_unlinked_file_in_logged_range_is_skipped(pbroker, tmp_path, monkeypatch
                                 checkpoint=str(tmp_path / "ckpt"))
     with pytest.raises(RuntimeError):
         b.subscriptions[sid].query.awaitTermination(60)
-    stale = b.store.seq_spans("t", {})
+    stale = b.store.files("t")
     assert b.apply_retention("t") == 2
     listings = iter([stale])
-    fresh = b.store.seq_spans
-    monkeypatch.setattr(b.store, "seq_spans",
-                        lambda topic, known: next(listings, None) or fresh(topic, known))
+    fresh = b.store.files
+    monkeypatch.setattr(b.store, "files", lambda topic: next(listings, None) or fresh(topic))
     _catch_up(b, sid)
     assert seen == [(0, ids[-1])]
 

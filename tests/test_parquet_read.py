@@ -148,9 +148,10 @@ CUTS = [
 
 @pytest.mark.parametrize("host_tz", TZS, indirect=True)
 def test_retention_keeps_same_ids(spark, tmp_path, host_tz):
-    """``apply_retention`` (count and time) and an ISO-string
-    ``delete_events`` keep the ids that the cut leaves in ``(timestamp,
-    id)`` order, over files of both writers, ties included."""
+    """``apply_retention`` (count and time) keeps the ids that the cut
+    leaves in ``(timestamp, id)`` order, over files of both writers,
+    ties included; an ISO-string ``delete_events`` keeps the ids that
+    ``get_events(from_ts=)`` gives for the same string."""
     events, store0 = _events_store(spark, tmp_path)
     ordered = sorted(events, key=lambda e: (e.timestamp, e.id))
     for n, (kind, cut) in enumerate(CUTS):
@@ -164,9 +165,10 @@ def test_retention_keeps_same_ids(spark, tmp_path, host_tz):
             broker.create_topic("t", retention_period=60.0)
             deleted = broker.apply_retention("t", now=cut + dt.timedelta(seconds=60))
             want = [e for e in ordered if e.timestamp >= cut]
-        else:
+        else:  # read in the session zone, as get_events reads it
+            kept = {r.id for r in store0.get_events("t", from_ts=cut).collect()}
             deleted = broker.store.delete_events("t", cut)
-            want = [e for e in ordered if e.timestamp >= dt.datetime.fromisoformat(cut)]
+            want = [e for e in ordered if e.id in kept]
         kept = _kept(broker.store)
         assert kept == sorted(e.id for e in want), (kind, cut)
         assert deleted + len(kept) == 14, (kind, cut)
@@ -201,7 +203,14 @@ def _multi_batch_file(part_dir: str, events: list) -> str:
     """``events`` written as one file of two-row row groups, newest
     first, so the oldest rows come in the last record batch."""
     rows = sorted(events, key=lambda e: (e.timestamp, e.id or ""), reverse=True)
-    table = pa.table({
+    path = os.path.join(part_dir, "part-multi.parquet")
+    pq.write_table(_event_table(rows), path, row_group_size=2)
+    return path
+
+
+def _event_table(rows: list) -> pa.Table:
+    """``rows`` as a topic file's columns, INT64 UTC-μs timestamps."""
+    return pa.table({
         "id": [e.id for e in rows],
         "type": [e.type for e in rows],
         "timestamp": pa.array([T.TimestampType().toInternal(e.timestamp) for e in rows])
@@ -211,9 +220,6 @@ def _multi_batch_file(part_dir: str, events: list) -> str:
         "metadata": pa.array([None if e.metadata is None else list(e.metadata.items())
                               for e in rows], pa.map_(pa.string(), pa.string())),
     })
-    path = os.path.join(part_dir, "part-multi.parquet")
-    pq.write_table(table, path, row_group_size=2)
-    return path
 
 
 def _bounded_store(spark, tmp_path):
@@ -333,19 +339,121 @@ def test_spark_written_files_answer_from_footers(spark, tmp_path, monkeypatch):
         i = [md.schema.column(j).path for j in range(md.num_columns)].index(SEQ)
         assert "DELTA_BINARY_PACKED" in md.row_group(0).column(i).encodings
     read = []
-    keys = parquet_read.read_keys
+    column_read = pq.ParquetFile.read
 
-    def spying(f):
-        read.append(f.path)
-        return keys(f)
+    def spying(self, *args, **kwargs):
+        read.append(kwargs.get("columns"))
+        return column_read(self, *args, **kwargs)
 
-    monkeypatch.setattr(parquet_read, "read_keys", spying)
-    monkeypatch.setattr(event_store, "read_keys", spying)
+    monkeypatch.setattr(pq.ParquetFile, "read", spying)
+    store = ParquetEventStore(spark, store.path)  # no footer read yet
     with JobBudget(spark) as budget:
         assert store.delete_events("t", T0 + dt.timedelta(seconds=5.5)) == 6
         assert budget.jobs() == 0
     assert read == []
     assert _kept(store) == ["e6", "e7", "e8"]
+
+
+@pytest.mark.parametrize("host_tz", TZS, indirect=True)
+def test_string_cut_reads_in_the_session_zone(spark, tmp_path, host_tz):
+    """``delete_events`` reads an ISO string in the session time zone,
+    as ``get_events`` does: a sweep keeps exactly the rows
+    ``get_events(from_ts=s)`` gives, whether the cut falls inside a
+    file or between files, and a NULL bound deletes nothing."""
+    s = "2024-01-15 16:00:00"
+    events = [_event(i, timestamp=dt.datetime(2024, 1, 15, 12) + dt.timedelta(hours=i))
+              for i in range(10)]
+    for layout in ("one-file", "file-per-event"):
+        store = ParquetEventStore(spark, str(tmp_path / layout))
+        store.initialize()
+        for batch in ([events] if layout == "one-file" else [[e] for e in events]):
+            store.save_events(batch)
+        want = sorted(r.id for r in store.get_events("t", from_ts=s).collect())
+        assert store.delete_events("t", s) == 10 - len(want), layout
+        assert _kept(store) == want, layout
+        assert store.delete_events("t", None) == 0
+        assert _kept(store) == want, layout
+
+
+def test_each_footer_is_read_once_per_store(spark, tmp_path, monkeypatch):
+    """A retention sweep, catch-ups and ``lag`` on one topic read each
+    file's footer once between them: the store keeps what it read."""
+    reads = []
+    stats = parquet_read.file_stats
+
+    def spying(path, seq):
+        reads.append(path)
+        return stats(path, seq)
+
+    monkeypatch.setattr(parquet_read, "file_stats", spying)
+    monkeypatch.setattr(event_store, "file_stats", spying)
+    broker = EventBroker(spark, str(tmp_path / "b"))
+    broker.create_topic("t", max_events=3)
+    for i in range(6):
+        broker.publish("t", "x", {"i": i})
+    assert broker.apply_retention("t") == 3
+    seen = []
+    sid = broker.subscribe_streaming(
+        "t", lambda df, epoch: seen.extend(r.id for r in df.collect()),
+        SubscriptionOptions(name="s"), checkpoint=str(tmp_path / "ckpt"))
+    broker.subscriptions[sid].query.awaitTermination(60)
+    broker.pause(sid)
+    assert broker.lag(sid) == 0
+    broker.publish("t", "x", {"i": 6})
+    assert broker.lag(sid) == 1
+    broker.resume(sid)
+    broker.subscriptions[sid].query.awaitTermination(60)
+    assert broker.lag(sid) == 0 and len(seen) == 4
+    assert len(reads) == 7 and len(set(reads)) == 7
+    assert set(visible_files(broker.store._part_dir("t"))) <= set(reads)
+
+
+def _seq_file(part_dir: str, name: str, events: list, first: int, statistics: bool) -> str:
+    """``events`` as a topic file numbered from ``first``, as pyarrow
+    writes it with or without footer statistics."""
+    os.makedirs(part_dir, exist_ok=True)
+    table = _event_table(events).append_column(
+        SEQ, pa.array(range(first, first + len(events)), pa.int64()))
+    path = os.path.join(part_dir, f"part-{name}.parquet")
+    pq.write_table(table, path, write_statistics=statistics)
+    return path
+
+
+def test_files_without_statistics_read_their_columns(spark, tmp_path):
+    """A topic file with no footer statistics has its ``timestamp`` and
+    ``_seq`` read instead: retention, the cursor's delivery and ``lag``
+    answer as they do for the same rows written with statistics."""
+    events = [_event(i) for i in range(12)]
+    answers = []
+    for statistics in (True, False):
+        broker = EventBroker(spark, str(tmp_path / f"stats-{statistics}"))
+        part = broker.store._part_dir("t")
+        a = _seq_file(part, "a", events[0:4], 1, statistics)
+        _seq_file(part, "b", events[4:8], 5, statistics)
+        assert (pq.read_metadata(a).row_group(0).column(0).statistics is not None) == statistics
+        got = [parquet_read.file_stats(a, SEQ)._replace(path=None, size=None)]
+        seen = []
+        sid = broker.subscribe_streaming(
+            "t", lambda df, epoch, seen=seen: seen.extend((epoch, r.id) for r in df.collect()),
+            SubscriptionOptions(name="s"), checkpoint=str(tmp_path / f"ckpt-{statistics}"))
+        broker.subscriptions[sid].query.awaitTermination(60)
+        broker.pause(sid)
+        _seq_file(part, "c", events[8:12], 9, statistics)
+        got.append(broker.lag(sid))
+        got.append(broker.store.retention_cut("t", 7))
+        got.append(broker.store.delete_events("t", T0 + dt.timedelta(seconds=4)))  # file a
+        got.append(broker.store.delete_events("t", T0 + dt.timedelta(seconds=5.5)))  # inside b
+        got.append(broker.lag(sid))
+        broker.resume(sid)
+        broker.subscriptions[sid].query.awaitTermination(60)
+        got += [broker.lag(sid), seen, _kept(broker.store)]
+        answers.append(got)
+    assert answers[0] == answers[1]
+    stats, lag, cut, whole, inside, left, done, seen, kept = answers[0]
+    assert (stats.rows, stats.seq_lo, stats.seq_hi, stats.seq_nulls) == (4, 1, 4, 0)
+    assert (lag, whole, inside, left, done) == (4, 4, 2, 4, 0)
+    assert cut[1] == "e5" and kept == sorted(f"e{i}" for i in range(6, 12))
+    assert seen == [(0, f"e{i}") for i in range(8)] + [(1, f"e{i}") for i in range(8, 12)]
 
 
 def _no_jvm(*_args, **_kwargs):
