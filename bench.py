@@ -1,14 +1,19 @@
-"""Benchmark runner — the driver's per-round feedback loop.
+"""Benchmark runner: the headline catalog queries, timed end to end.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+Runs every ``HEADLINE`` query on the dataset dir $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS], in two
+passes over the suite, and prints ONE JSON line. Each query is timed to full
+materialization (count of the result — cheaper than collect for wide
+results, still executes the whole plan).
 
-Each query is timed to full materialization (count of the result —
-cheaper than collect for wide results, still executes the whole plan).
-A short warm-up query first so JVM/codegen startup isn't billed to the
-first headline query.
+One timing rule: a query's time is the min of its passes that
+succeeded, ``value`` is the sum of those mins, ``noise`` is the band
+of the relative spread between the two passes, and ``failed`` lists
+the queries with no valid pass. Every query's ``{p1, p2, min}`` goes
+to the artifact ``BENCH_FULL.json`` (``BENCH_FULL.sf<sf>.json`` at any
+other scale); the printed line carries the slowest mins that fit.
+
+Run: ``SPARK_GRAFT_SF_DIR=<an sf0.01 dataset dir> python bench.py``
 """
 
 from __future__ import annotations
@@ -207,105 +212,43 @@ HEADLINE = [
     "doc_quality_mixture",
 ]
 
-# Rotating tail (VERDICT r8 task 4): the suite outgrew the driver
-# timeout budget (110 queries ≈ 170 s and append-only means it only
-# grows), so the expensive EVAL/AUDIT queries — fixed-cost measurement
-# queries over code paths that rarely change round-to-round — rotate:
-# each bench run times one alternating half, and BENCH_FULL.json
-# carries the other half's most recent timing forward (flagged in
-# "carried"). Every OPERATOR query stays in the always-run core so
-# per-round judge deltas on real code paths never skip a round.
-# The rotation index is len(BENCH_r*.json) % 2 — it advances exactly
-# once per round (the driver commits one BENCH_r file per round), so
-# repeated local runs within a round time the SAME half.
-ROTATING = [
-    "graph_pagerank_custsupp",
-    "doc_split_leakage_guard",
-    "doc_pretrain_token_yield",
-    "emb_mmr_diversity_eval",
-    "emb_opq_recall_eval",
-    "graph_triangles_copurchase",
-    "emb_multiprobe_recall_eval",
-    "doc_minhash_scurve",
-    "emb_residual_recall_eval",
-    "doc_exactsubstr_spans",
-    "doc_winnow_pairs",
-    "emb_knn_pq_rerank",
-    "emb_lsh_recall_eval",
-    "er_customer_entities",
-    "doc_winnow_spans",
-    "emb_binary_recall_eval",
-    "doc_phrase_heavy_hitters",
-    "doc_ppjoin_stats",
-    # round-9 third-session eval/audit additions (appended — slicing
-    # parity of the existing entries is position-stable)
-    "emb_kmeans_elbow",
-    "emb_kmeans_ivf_eval",
-    "evt_zorder_pruning_eval",
-    "er_threshold_sensitivity",
-]
-
-# Two-pass timing (VERDICT r8 task 2, widened by VERDICT r11 task 1):
-# the run-to-run jitter band (157→168→179 s for identical code; r11's
-# core_sec rose 152→170 with ZERO plan changes) exceeds a round's real
-# delta, so the WHOLE non-rotating core gets a SECOND timed pass and
-# `core_sec` is the SUM OF PER-QUERY MIN-OF-PASSES — a loaded-machine
-# blip in either pass can't masquerade as a regression. BENCH_FULL
-# records both passes ("queries" = first, "core_pass2" = second), the
-# measured per-run noise spread ("noise"), and the old first-pass-only
-# core sum ("core_sec_p1") so r≤11 deltas stay comparable. "steady"
-# stays populated (= pass-2 times of the slowest core queries) for
-# continuity of the judge's per-query delta key. `value` remains the
-# first-pass total.
-TWO_PASS_COUNT = 10
-
-# Wall-clock guard for the second pass: the driver runs bench under a
-# timeout; if the machine is loaded enough that pass 1 + pass 2 would
-# overrun, STOP starting new pass-2 queries past this many seconds of
-# total bench wall time and say so loudly in the JSON
-# ("pass2_skipped") — a partially-doubled core still yields a valid
-# min-of-passes core_sec (missing pass-2 = first-pass time), while an
-# overrun would lose the whole round's bench.
-PASS2_WALL_BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_PASS2_BUDGET", 480))
-
-# The rotating half's THREE slowest entries get a steady re-time too
-# (VERDICT r12 task 3): rotating queries are single-passed by
-# protocol, so the suite's slowest first-pass numbers
-# (doc_ppjoin_stats, er_threshold_sensitivity — both rotating) carried
-# full cache-build cost with no jitter control, round after round.
-# Runs AFTER the core pass-2 (core_sec integrity first) under the same
-# wall guard; results land in "steady" (the judge's per-query delta
-# key) and "rotating_pass2", and are EXCLUDED from core_sec — rotation
-# parity would otherwise make the cross-round core number oscillate.
-ROTATING_PASS2_COUNT = 3
+# the printed line stays under this many chars (a log tail that keeps
+# the last ~2000 chars still holds the whole line)
+LINE_BUDGET = 1700
 
 
-def merge_steady(
-    core_names: list[tuple[str, float]],
-    core_pass2: dict[str, float | None],
-    rotating_names: list[tuple[str, float]],
-    rotating_pass2: dict[str, float | None],
-    two_pass_count: int = TWO_PASS_COUNT,
-) -> dict[str, float]:
-    """The BENCH_FULL "steady" merge, extracted pure so the fallback
-    contract is unit-testable (tests/test_bench_merge.py): every
-    SELECTED query — the two_pass_count slowest core entries plus the
-    chosen rotating re-times — gets a steady number; a re-time that
-    ran and failed (None) OR was skipped by the pass-2 wall budget
-    (absent from the dict) falls back to its valid pass-1 timing, so
-    a flaky or budget-truncated second pass never drops a judge delta
-    datapoint the first pass already measured (ADVICE r14: the
-    rotating side used to iterate the re-time dict and lost
-    budget-skipped entries)."""
-    steady = {
-        name: (core_pass2.get(name) if core_pass2.get(name) is not None
-               else p1)
-        for name, p1 in core_names[:two_pass_count]
+def summarize(p1: dict[str, float | None], p2: dict[str, float | None]) -> dict:
+    """The bench record from two passes' timings, ``None`` where a
+    query failed in that pass: per query ``{p1, p2, min}``, ``min``
+    the least time of the passes that succeeded (None if neither did);
+    ``value`` the sum of the mins; ``failed`` the queries with no
+    valid pass; ``noise`` the band of ``|p1 - p2| / min`` over the
+    queries that succeeded twice."""
+    queries = {}
+    for name, t1 in p1.items():
+        t2 = p2.get(name)
+        ok = [t for t in (t1, t2) if t is not None]
+        queries[name] = {"p1": t1, "p2": t2, "min": min(ok) if ok else None}
+    spreads = sorted(
+        abs(q["p1"] - q["p2"]) / max(q["min"], 1e-9)
+        for q in queries.values()
+        if q["p1"] is not None and q["p2"] is not None
+    )
+    noise = {
+        "n": len(spreads),
+        "median_rel_spread": round(spreads[len(spreads) // 2], 4),
+        "p90_rel_spread": round(spreads[int(len(spreads) * 0.9)], 4),
+        "max_rel_spread": round(spreads[-1], 4),
+    } if spreads else {}
+    mins = [q["min"] for q in queries.values() if q["min"] is not None]
+    return {
+        "metric": "headline_suite_seconds",
+        "value": round(sum(mins), 3),
+        "unit": "sec",
+        "queries": queries,
+        "noise": noise,
+        "failed": sorted(name for name, q in queries.items() if q["min"] is None),
     }
-    for name, p1 in rotating_names:
-        t2 = rotating_pass2.get(name)
-        steady[name] = t2 if t2 is not None else p1
-    return steady
 
 
 def main() -> None:
@@ -320,24 +263,14 @@ def main() -> None:
     # warm-up: JVM + parquet footer reads off the clock
     qs["evt_type_counts"](spark, sf_dir).count()
     # ... and the Python worker pool: without this the suite's FIRST
-    # Arrow stage absorbs ~1.5 s of worker startup, so that cost
-    # wanders between queries across rounds (r5: mm_decode_features;
-    # r6: emb_knn_ivf) and pollutes per-query judge deltas
+    # Arrow stage absorbs ~1.5 s of worker startup
     spark.createDataFrame([(1,)], "x int").mapInPandas(
         lambda it: (b for b in it), "x int"
     ).count()
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    import glob as _glob
-
-    rotation = len(_glob.glob(os.path.join(here, "BENCH_r*.json"))) % 2
-    run_rotating = set(ROTATING[rotation::2])
-    skip_rotating = {n for n in ROTATING if n not in run_rotating}
-
     def time_query(name: str) -> float | None:
-        # One query crashing must not zero the whole suite (rounds 3-4
-        # lost all bench data to a single AnalysisException): record
-        # null for the failure, keep timing the rest.
+        # one query crashing must not zero the suite: None marks the
+        # failure and the rest are still timed
         t0 = time.time()
         try:
             qs[name](spark, sf_dir).count()
@@ -345,179 +278,16 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001
             print(f"bench: {name} failed: {exc}", file=sys.stderr)
             took = None
-        # drop cached tables a query left behind (e.g. the shared
-        # shingle/band tables in the dedup suite) OFF the clock, so
-        # one query's cache pressure doesn't bill the next — this is
-        # what made doc_minhash_pairs ~2x slower in-suite than cold.
+        # drop cached tables a query left behind OFF the clock, so one
+        # query's cache pressure doesn't bill the next
         spark.catalog.clearCache()
         return took
 
-    bench_t0 = time.time()
-    timings: dict[str, float | None] = {}
-    for name in HEADLINE:
-        if name not in qs or name in skip_rotating:
-            continue
-        timings[name] = time_query(name)
+    p1, p2 = ({name: time_query(name) for name in HEADLINE} for _ in range(2))
+    full = {**summarize(p1, p2), "sf": sf}
 
-    # SECOND pass over the whole non-rotating core (VERDICT r11 task 1)
-    # — min-of-passes is the regression-detection metric; see
-    # TWO_PASS_COUNT comment. Slowest-first so the guard, if it fires,
-    # drops the cheap tail (where a double pass matters least).
-    rotating_set = set(ROTATING)
-    core_names = sorted(
-        (
-            (k, v)
-            for k, v in timings.items()
-            if v is not None and k not in rotating_set
-        ),
-        key=lambda kv: -kv[1],
-    )
-    core_pass2: dict[str, float | None] = {}
-    pass2_skipped: list[str] = []
-    for name, _ in core_names:
-        if time.time() - bench_t0 > PASS2_WALL_BUDGET:
-            pass2_skipped = [n for n, _ in core_names if n not in core_pass2]
-            print(
-                f"bench: pass-2 wall budget ({PASS2_WALL_BUDGET}s) hit; "
-                f"{len(pass2_skipped)} core queries single-passed",
-                file=sys.stderr,
-            )
-            break
-        core_pass2[name] = time_query(name)
-
-    # rotating-half steady re-time (see ROTATING_PASS2_COUNT): the
-    # slowest rotating entries of THIS run's half, re-timed after the
-    # core pass-2, same wall guard
-    rotating_names = sorted(
-        (
-            (k, v)
-            for k, v in timings.items()
-            if v is not None and k in rotating_set
-        ),
-        key=lambda kv: -kv[1],
-    )[:ROTATING_PASS2_COUNT]
-    rotating_pass2: dict[str, float | None] = {}
-    for name, _ in rotating_names:
-        if time.time() - bench_t0 > PASS2_WALL_BUDGET:
-            print(
-                f"bench: pass-2 wall budget ({PASS2_WALL_BUDGET}s) hit; "
-                f"rotating steady pass truncated",
-                file=sys.stderr,
-            )
-            break
-        rotating_pass2[name] = time_query(name)
-
-    # "steady" key continuity: pass-2 times of the slowest core
-    # queries, plus the rotating half's re-timed heaviest. A FAILED
-    # re-time (None) falls back to the valid pass-1 timing instead of
-    # overwriting it — mirroring the min-of-passes treatment core_sec
-    # uses — so a flaky second run never drops a judge delta
-    # datapoint that the first pass already measured.
-    # fallback contract documented on merge_steady (unit-tested)
-    steady = merge_steady(
-        core_names, core_pass2, rotating_names, rotating_pass2
-    )
-
-    # measured run-to-run spread (the noise floor the judge asked to
-    # see): relative |p1-p2| / min(p1,p2) per double-passed query
-    spreads = sorted(
-        abs(p1 - p2) / max(min(p1, p2), 1e-9)
-        for name, p1 in core_names
-        if (p2 := core_pass2.get(name)) is not None
-    )
-    noise = (
-        {
-            "n": len(spreads),
-            "median_rel_spread": round(spreads[len(spreads) // 2], 4),
-            "p90_rel_spread": round(spreads[int(len(spreads) * 0.9)], 4),
-            "max_rel_spread": round(spreads[-1], 4),
-        }
-        if spreads
-        else {}
-    )
-
-    # skipped rotating queries keep their most recent recorded result
-    # in BENCH_FULL (flagged, NOT in the total) so every headline
-    # query has an entry somewhere every round. A carried None means
-    # "it FAILED the last time it actually ran" — preserved, never
-    # papered over with an older success (and a legitimate 0.0 timing
-    # carries as 0.0, hence the explicit membership checks, not `or`)
-    # the per-sf artifact: the canonical sf0.1 chain lives in
-    # BENCH_FULL.json; any other sf reads/writes a suffixed file so a
-    # local smoke run can never clobber the driver's carry chain
-    canonical_sf = 0.1
-    artifact = (
-        "BENCH_FULL.json" if sf == canonical_sf else f"BENCH_FULL.sf{sf}.json"
-    )
-    carried: dict[str, float | None] = {}
-    try:
-        with open(os.path.join(here, artifact)) as f:
-            prev = json.load(f)
-        # never carry a timing measured at a different scale (a local
-        # sf0.001 smoke run must not pollute the driver's sf0.1 carry)
-        if prev.get("sf") == sf:
-            for name in skip_rotating:
-                if name in prev.get("queries", {}):
-                    carried[name] = prev["queries"][name]
-                elif name in prev.get("carried", {}):
-                    carried[name] = prev["carried"][name]
-    except (OSError, ValueError):
-        pass
-
-    total = round(sum(t for t in timings.values() if t is not None), 3)
-    # cross-round comparable metric: the rotation halves have
-    # different costs, so `value` (this run's sum) oscillates with
-    # parity; core_sec excludes ALL rotating queries and is the
-    # number to delta round-over-round. Since r12 it is the sum of
-    # per-query MIN-OF-PASSES (load noise in either pass drops out);
-    # core_sec_p1 is the old first-pass-only sum for r≤11 continuity.
-    core_total_p1 = round(
-        sum(
-            t
-            for k, t in timings.items()
-            if t is not None and k not in rotating_set
-        ),
-        3,
-    )
-    core_total = round(
-        sum(
-            min(t, p2) if (p2 := core_pass2.get(k)) is not None else t
-            for k, t in timings.items()
-            if t is not None and k not in rotating_set
-        ),
-        3,
-    )
-    failed = sorted(k for k, v in timings.items() if v is None)
-    carried_failed = sorted(k for k, v in carried.items() if v is None)
-    # failures must be loud in the headline JSON: without this, a
-    # crashed query SHRINKS the total and reads as a speedup in
-    # cross-round deltas
-    full = {
-        "metric": "headline_suite_seconds",
-        "value": total,
-        "core_sec": core_total,
-        "core_sec_p1": core_total_p1,
-        "unit": "sec",
-        "queries": timings,
-        "core_pass2": core_pass2,
-        "rotating_pass2": rotating_pass2,
-        "noise": noise,
-        "pass2_skipped": pass2_skipped,
-        "steady": steady,
-        "rotation": rotation,
-        "carried": carried,
-        "failed": failed,
-        "carried_failed": carried_failed,
-        "sf": sf,
-    }
-    # Full per-query timings -> a repo-root artifact (judge deltas
-    # lean on per-query numbers). The PRINTED line must stay parseable
-    # by the driver, which captures only the last ~2000 chars of
-    # output: with 98 headline queries the full dict is >2500 chars,
-    # and in round 6 the driver recorded parsed=null because the
-    # line's START fell off its tail window. Keep the printed line
-    # under budget by including the slowest queries that fit and
-    # counting the rest.
+    artifact = "BENCH_FULL.json" if sf == 0.1 else f"BENCH_FULL.sf{sf}.json"
+    here = os.path.dirname(os.path.abspath(__file__))
     try:
         with open(os.path.join(here, artifact), "w") as f:
             json.dump(full, f)
@@ -525,23 +295,19 @@ def main() -> None:
     except OSError as exc:  # read-only checkout must not kill bench
         print(f"bench: {artifact} not written: {exc}", file=sys.stderr)
 
-    budget = 1700  # chars; driver tail is ~2000, leave slack
+    # the printed line: the slowest queries' mins that fit the budget
     by_slow = sorted(
-        ((k, v) for k, v in timings.items() if v is not None),
+        ((k, q["min"]) for k, q in full["queries"].items() if q["min"] is not None),
         key=lambda kv: -kv[1],
     )
-    compact = dict(full)
-    compact.pop("carried", None)  # full artifact only — char budget
-    compact.pop("core_pass2", None)  # full artifact only — char budget
-    compact.pop("rotating_pass2", None)  # in "steady"; char budget
-    compact["pass2_skipped"] = len(pass2_skipped)  # count on the line
     for keep in range(len(by_slow), -1, -1):
-        qdict = dict(by_slow[:keep])
-        compact["queries"] = qdict
-        compact["queries_omitted"] = len(timings) - len(qdict)
-        compact["full"] = artifact
-        line = json.dumps(compact)
-        if len(line) <= budget:
+        line = json.dumps({
+            **full,
+            "queries": dict(by_slow[:keep]),
+            "queries_omitted": len(full["queries"]) - keep,
+            "full": artifact,
+        })
+        if len(line) <= LINE_BUDGET:
             break
     print(line)
 

@@ -1137,8 +1137,8 @@ def graph_pagerank_custsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER the loop, before the top-k (so the node-asc tie-break still
     orders on the string exactly as the oracle does). The edge list is
     distinct by construction (distinct pair set symmetrized over
-    disjoint id spaces), so pagerank_int's defensive dedup — a full
-    |E| exchange — is skipped (guide §2.4)."""
+    disjoint id spaces), so it needs no dedup — a full |E| exchange
+    (guide §2.4)."""
     from env_event_stream_spark.operators.graph import pagerank_int
 
     o = _t(spark, sf_dir, "orders")
@@ -1155,15 +1155,13 @@ def graph_pagerank_custsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = ei.select(
         F.col("c").alias("src"), F.col("s").alias("dst")
     ).unionByName(ei.select(F.col("s").alias("src"), F.col("c").alias("dst")))
-    pr = pagerank_int(
-        edges, iterations=_PR_ITERS, unit=_PR_UNIT, distinct_edges=False
-    )
+    pr = pagerank_int(edges, iterations=_PR_ITERS, unit=_PR_UNIT)
     pr = pr.select(
         F.concat(
             F.when(F.col("node") % 2 == 0, F.lit("c:")).otherwise(F.lit("s:")),
             F.expr("node DIV 2").cast("string"),
         ).alias("node"),
-        "odeg",
+        F.col("deg").alias("odeg"),
         "rank_units",
     )
     # top-20 via TakeOrderedAndProject (per-partition heaps), NOT a
@@ -3579,7 +3577,7 @@ def graph_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     with 50 heavy suppliers rank identically; here mass flows in
     proportion to volume.
 
-    INTEGER-EXACT (operators/graph.py:pagerank_int_weighted):
+    INTEGER-EXACT (operators/graph.py:pagerank_int, weight="w"):
     per-edge transfer = (rank·w) DIV wdeg in bigint micro-units —
     order-free, iteration-replayable (the oracle chains all three
     rounds as CTEs), with assert_true bounding weights at 2^20 so
@@ -3592,9 +3590,7 @@ def graph_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     as graph_pagerank_custsupp; the 'c:'/'s:' string label is
     reconstructed after the loop so the node-asc top-20 tie-break
     still orders on the string exactly as the oracle does."""
-    from env_event_stream_spark.operators.graph import (
-        pagerank_int_weighted,
-    )
+    from env_event_stream_spark.operators.graph import pagerank_int
     from env_event_stream_spark.operators.relational import top_k
 
     o = _t(spark, sf_dir, "orders")
@@ -3614,15 +3610,13 @@ def graph_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         ei.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
     )
-    pr = pagerank_int_weighted(
-        edges, iterations=_PRW_ITERS, unit=_PRW_UNIT
-    )
+    pr = pagerank_int(edges, weight="w", iterations=_PRW_ITERS, unit=_PRW_UNIT)
     pr = pr.select(
         F.concat(
             F.when(F.col("node") % 2 == 0, F.lit("c:")).otherwise(F.lit("s:")),
             F.expr("node DIV 2").cast("string"),
         ).alias("node"),
-        "wdeg",
+        F.col("deg").alias("wdeg"),
         "rank_units",
     )
     order = [F.col("rank_units").desc(), F.col("node").asc()]

@@ -159,10 +159,9 @@ class EventSourcedRepository:
         return agg
 
     def exists(self, agg_id: str) -> bool:
-        """LIMIT-1 probe (ts:239-243) — never loads the stream."""
-        return bool(
-            self._store.get_events(self._topic(agg_id), limit=1).take(1)
-        )
+        """LIMIT-1 probe (ts:239-243) — never loads the stream; the
+        one row is read on the driver, no DataFrame is built."""
+        return bool(self._store.get_events(self._topic(agg_id), limit=1, rows=True))
 
     def get_events(self, agg_id: str, **options):
         """Filtered event access (ts:251-264): from_ts/to_ts/

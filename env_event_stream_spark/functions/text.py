@@ -22,10 +22,8 @@ __all__ = [
     "ngram_repetition",
     "normalize_text",
     "fingerprint",
-    "minhash_value",
     "quality_metrics",
     "LANG_MARKERS",
-    "lang_scores",
     "PII_PATTERNS",
     "pii_redact",
     "pii_counts",
@@ -154,13 +152,6 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalize_text(text))
 
 
-def minhash_value(shingle: Column, seed: int) -> Column:
-    """One MinHash family member: lexicographic min over
-    md5(seed || ':' || shingle) is a uniform random permutation per
-    seed — portable (DuckDB md5 produces identical hex)."""
-    return F.md5(F.concat(F.lit(str(seed)), F.lit(":"), shingle))
-
-
 def quality_metrics(text: Column) -> dict[str, Column]:
     """Document quality signals (length, token stats, stopword and
     punctuation ratios) as named expressions."""
@@ -192,16 +183,6 @@ LANG_MARKERS: dict[str, list[str]] = {
     "fr": ["le", "la", "les", "et", "est"],
     "zh": ["的", "了", "是", "在", "我"],
 }
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    """Per-language marker-token counts (the scoring half of lang-ID;
-    argmax + tie-break happens in the query)."""
-    t = tokens(text)
-    return {
-        lang: F.size(F.filter(t, lambda x: x.isin(*markers)))
-        for lang, markers in LANG_MARKERS.items()
-    }
 
 
 # PII patterns restricted to syntax Java regex (Spark) and RE2

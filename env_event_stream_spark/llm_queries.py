@@ -5244,8 +5244,8 @@ def doc_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r16 (guide §2.4): canonicalize (least, greatest) BEFORE the
     # distinct — the old directed-pair distinct kept (a,b) and (b,a)
-    # as separate rows and then pagerank_int had to re-distinct the
-    # symmetrized 2|E| list (a second full-edge exchange). Canonical
+    # as separate rows and the symmetrized 2|E| list had to be
+    # distinct-ed again (a second full-edge exchange). Canonical
     # pairs distinct once at |E| rows; the symmetrized union is then
     # duplicate-free by construction (same edge set, same ranks).
     e0 = (
@@ -5263,16 +5263,14 @@ def doc_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         e0.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    pr = pagerank_int(
-        edges, iterations=_TR_ITERS, unit=_TR_UNIT, distinct_edges=False
-    )
+    pr = pagerank_int(edges, iterations=_TR_ITERS, unit=_TR_UNIT)
     order = [F.col("rank_units").desc(), F.col("node").asc()]
     top = top_k(pr, order, _TR_TOPK)
     w = Window.orderBy(*order)
     return (
         top.withColumn("pos", F.row_number().over(w).cast("bigint"))
         .select(
-            F.col("node").alias("word"), "odeg", "rank_units", "pos"
+            F.col("node").alias("word"), F.col("deg").alias("odeg"), "rank_units", "pos"
         )
     )
 

@@ -37,7 +37,6 @@ from env_event_stream_spark.functions.text import (
 )
 
 __all__ = [
-    "exact_dedup",
     "fingerprint_groups",
     "shingle_table",
     "jaccard_pairs",
@@ -67,14 +66,6 @@ def _spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < slots:
         return df.repartition(slots)
     return df
-
-
-def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
-    """Keep the lowest-id row per exact duplicate group. groupBy-min
-    (map-side combinable) rather than dropDuplicates (whose survivor
-    is partition-order-dependent, i.e. nondeterministic)."""
-    keep = df.groupBy(*cols).agg(F.min(id_col).alias(id_col))
-    return df.join(keep.select(id_col), id_col, "left_semi")
 
 
 def fingerprint_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "connected_components",
     "pagerank_int",
-    "pagerank_int_weighted",
     "k_core",
 ]
 
@@ -100,86 +99,89 @@ def pagerank_int(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
+    weight: str | None = None,
     *,
     iterations: int = 3,
     unit: int = 10**12,
-    distinct_edges: bool = True,
 ) -> DataFrame:
     """INTEGER-EXACT PageRank (damping 0.85), fixed iteration count.
 
     All arithmetic is bigint: ranks live in ``unit`` micro-units,
-    per-edge contributions are ``rank DIV out_degree``, and the
-    damping step is ``(85 * sum) DIV 100`` — so the result is
-    INDEPENDENT OF SUMMATION ORDER (bigint addition is associative/
-    commutative where double addition is not), which is what lets an
-    iterative algorithm survive a cross-engine value-hash oracle and
-    re-run bit-identically on any cluster layout. The rounding the
-    integer divisions introduce is far below any ranking use's noise
-    floor (1 micro-unit in 10^12).
+    per-edge transfers are ``(rank * w) DIV deg``, ``deg`` the sum of
+    the source's out-edge weights, and the damping step is
+    ``(85 * sum) DIV 100`` — so the result is INDEPENDENT OF SUMMATION
+    ORDER (bigint addition is associative/commutative where double
+    addition is not), which is what lets an iterative algorithm
+    survive a cross-engine value-hash oracle and re-run bit-identically
+    on any cluster layout. The rounding the integer divisions
+    introduce is far below any ranking use's noise floor (1 micro-unit
+    in 10^12).
 
-    Scale: per iteration one node-keyed join (contributions onto
-    edges) + one grouped sum on the destination — co-partitioned
-    after round one — and a localCheckpoint to truncate lineage
-    (same discipline as connected_components). The node count is the
-    single driver scalar.
+    Without ``weight`` every edge weighs 1 (``deg`` is the out-degree
+    and a transfer is ``rank DIV deg``). With it, mass flows in
+    proportion to the ``weight`` column — the trade-volume centrality
+    unit edges can't express (a hub with one heavy partner ranks
+    differently from a hub with many light ones); overflow is LOUD:
+    assert_true bounds edge weights at 2^20 so rank·w stays far inside
+    int64 (rank ≤ unit ≈ 2^40). The edge list is used as given:
+    duplicate edges count twice.
+
+    Scale: per iteration one node-keyed join (ranks onto edges) + one
+    grouped sum on the destination — co-partitioned after round one —
+    and a localCheckpoint to truncate lineage (same discipline as
+    connected_components). The node count is the single driver
+    scalar.
 
     The in-loop checkpoints are LAZY (eager=False, r13): a fixed
     iteration count has no mid-loop action — unlike the CC loop,
     whose convergence count needs an eager barrier each round — so
     all iterations pipeline into the caller's single action instead
-    of paying one synchronous job round-trip per iteration. HONEST
-    A/B at sf0.1 (1.17M-edge custsupp graph): the isolated loop
-    measured 11.5 -> 6-8 s over an uncached edge frame, but the
-    FULL catalog query is wall-FLAT (~5 s steady) because the
-    checkpointed edge build dominates and local[32]'s scheduler
-    round-trips are cheap — the win is three fewer synchronous
-    driver barriers per call, which is a cluster-latency saving,
-    not a bench number. Ranks bit-identical (parity- and
-    oracle-pinned). The Catalyst plan is truncated to a LogicalRDD
-    either way, so the driver-plan-growth hazard the checkpoints
-    exist for stays closed; at 3 iterations the deferred RDD chain
-    is shallow.
+    of paying one synchronous job round-trip per iteration. Ranks are
+    bit-identical either way (parity- and oracle-pinned). The Catalyst
+    plan is truncated to a LogicalRDD either way, so the
+    driver-plan-growth hazard the checkpoints exist for stays closed;
+    at 3 iterations the deferred RDD chain is shallow.
 
-    Returns (node, odeg, rank_units). Dangling nodes are the
-    caller's concern — symmetrize the edge list (as the bipartite
-    catalog query does) and there are none.
-
-    ``distinct_edges=False`` skips the defensive dedup when the
-    caller's edge list is distinct BY CONSTRUCTION (e.g. built from a
-    distinct pair set symmetrized over disjoint node id spaces) — the
-    dedup is a full |E| exchange that buys nothing there (guide §2.4:
-    a `distinct` on data that is already unique is an accidental
-    shuffle)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if distinct_edges:
-        e = e.distinct()
+    Returns (node, deg, rank_units). Dangling nodes are the caller's
+    concern — symmetrize the edge list (as the bipartite catalog
+    queries do) and there are none."""
+    ends = [F.col(src).alias("src"), F.col(dst).alias("dst")]
+    e = edges.select(*ends)
+    deg_of, transfer = F.count("*"), "r DIV deg"
+    if weight:
+        e = edges.select(*ends, F.col(weight).cast("bigint").alias("w")).where(
+            F.assert_true(
+                F.col("w") < F.lit(2**20),
+                F.lit(
+                    "pagerank_int: edge weight >= 2^20 — "
+                    "rank*w could overflow int64; rescale weights"
+                ),
+            ).isNull()
+        )
+        deg_of, transfer = F.sum("w"), "(r * w) DIV deg"
     e = e.localCheckpoint(eager=True)
     deg = (
         e.groupBy("src")
-        .agg(F.count("*").cast("bigint").alias("odeg"))
+        .agg(deg_of.cast("bigint").alias("deg"))
         .localCheckpoint(eager=True)
     )
     n = deg.count()
     base = (15 * unit) // (100 * n)  # exact int — replayed by the oracle
     ranks = deg.select(
         F.col("src").alias("node"),
-        "odeg",
+        "deg",
         F.lit(unit // n).cast("bigint").alias("r"),
     ).localCheckpoint(eager=True)
     for _ in range(iterations):
-        contrib = ranks.select(
-            "node", F.expr("r DIV odeg").alias("contrib")
-        )
-        total = (
-            e.join(contrib, e.src == contrib.node)
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("total"))
-        )
+        contrib = e.join(
+            ranks.select(F.col("node").alias("src"), "r", "deg"), "src"
+        ).select("dst", F.expr(transfer).alias("contrib"))
+        total = contrib.groupBy("dst").agg(F.sum("contrib").alias("total"))
         ranks = (
             deg.join(total, deg.src == total.dst, "left")
             .select(
                 F.col("src").alias("node"),
-                "odeg",
+                "deg",
                 (
                     F.lit(base)
                     + F.expr("(85 * coalesce(total, 0L)) DIV 100")
@@ -187,82 +189,7 @@ def pagerank_int(
             )
             .localCheckpoint(eager=False)  # lazy: see docstring
         )
-    return ranks.select("node", "odeg", F.col("r").alias("rank_units"))
-
-
-def pagerank_int_weighted(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    *,
-    iterations: int = 3,
-    unit: int = 10**12,
-) -> DataFrame:
-    """WEIGHTED integer PageRank: per-edge transfer =
-    (rank · w_e) DIV wdeg(src), wdeg = Σ w over the node's out-edges
-    — the trade-volume centrality pagerank_int's unit edges can't
-    express (a hub with one heavy partner ranks differently from a
-    hub with many light ones). Same exactness contract as
-    pagerank_int: bigint mass in micro-units, order-free sums, one
-    damping floor division per node per iteration. Overflow is LOUD:
-    assert_true bounds edge weights at 2^20 so rank·w stays far
-    inside int64 (rank ≤ unit ≈ 2^40). Same plan shape per
-    iteration: one node-keyed join + grouped sum, localCheckpoint
-    lineage truncation — LAZY in-loop like pagerank_int (fixed
-    iteration count, no mid-loop action).
-    Returns (node, wdeg, rank_units)."""
-    e = (
-        edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("bigint").alias("w"),
-        )
-        .where(
-            F.assert_true(
-                F.col("w") < F.lit(2**20),
-                F.lit(
-                    "pagerank_int_weighted: edge weight >= 2^20 — "
-                    "rank*w could overflow int64; rescale weights"
-                ),
-            ).isNull()
-        )
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.groupBy("src")
-        .agg(F.sum("w").cast("bigint").alias("wdeg"))
-        .localCheckpoint(eager=True)
-    )
-    n = deg.count()
-    base = (15 * unit) // (100 * n)
-    ranks = deg.select(
-        F.col("src").alias("node"),
-        "wdeg",
-        F.lit(unit // n).cast("bigint").alias("r"),
-    ).localCheckpoint(eager=True)
-    for _ in range(iterations):
-        contrib = e.join(
-            ranks.select(F.col("node").alias("src"), "r", "wdeg"), "src"
-        ).select(
-            "dst", F.expr("(r * w) DIV wdeg").alias("contrib")
-        )
-        total = contrib.groupBy("dst").agg(
-            F.sum("contrib").alias("total")
-        )
-        ranks = (
-            deg.join(total, deg.src == total.dst, "left")
-            .select(
-                F.col("src").alias("node"),
-                "wdeg",
-                (
-                    F.lit(base)
-                    + F.expr("(85 * coalesce(total, 0L)) DIV 100")
-                ).cast("bigint").alias("r"),
-            )
-            .localCheckpoint(eager=False)  # see pagerank_int
-        )
-    return ranks.select("node", "wdeg", F.col("r").alias("rank_units"))
+    return ranks.select("node", "deg", F.col("r").alias("rank_units"))
 
 
 def k_core(

@@ -26,12 +26,10 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "join",
-    "range_join",
     "asof_join",
     "salted_join",
     "top_k",
     "top_k_per_group",
-    "running_agg",
 ]
 
 
@@ -49,30 +47,6 @@ def join(
     if broadcast_right:
         right = F.broadcast(right)
     return left.join(right, on, how)
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    lo_col: str,
-    hi_col: str,
-    *,
-    extra: Column | None = None,
-    broadcast_right: bool = True,
-) -> DataFrame:
-    """Interval join: left.value BETWEEN right.lo AND right.hi.
-
-    With a small bucket/dimension table the broadcast nested-loop join
-    is the right physical plan (each row tests a handful of intervals
-    in memory). For two LARGE sides, pre-bucketize the range key and
-    equi-join on bucket id instead — see ``bucketized_range_join``."""
-    cond = (F.col(left_col) >= F.col(lo_col)) & (F.col(left_col) <= F.col(hi_col))
-    if extra is not None:
-        cond = cond & extra
-    if broadcast_right:
-        right = F.broadcast(right)
-    return left.join(right, cond)
 
 
 def salted_join(
@@ -217,24 +191,6 @@ def top_k_per_group(
     """Top-k within each group via row_number — one shuffle on keys."""
     w = Window.partitionBy(*keys).orderBy(*order)
     return df.withColumn(rank_col, F.row_number().over(w)).where(F.col(rank_col) <= k)
-
-
-def running_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    order: Sequence[Column],
-    agg_col: Column,
-    out_col: str,
-) -> DataFrame:
-    """Cumulative aggregate per key (the SQL shape of the reference's
-    event-sourcing fold, src/sourcing.ts:41-62, when the transition is
-    associative)."""
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return df.withColumn(out_col, agg_col.over(w))
 
 
 def top_k_per_group_partial(

@@ -101,10 +101,6 @@ class SchemaRegistry:
         latest = sorted(versions)[-1]
         return versions[latest]
 
-    def struct_for(self, event_type: str) -> T.DataType | None:
-        e = self.get(event_type)
-        return e.struct if e else None
-
     def _required_checks(self, parsed: Column, schema: dict) -> Column:
         cond = F.lit(True)
         for name in schema.get("required", []):

@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 from env_event_stream_spark.operators.event_queries import get_dlq_events
 from env_event_stream_spark.storage.event_store import EVENT_SCHEMA
 from env_event_stream_spark.storage.parquet_append import append_rows
-from env_event_stream_spark.storage.parquet_read import read_sorted, to_rows, visible_files
+from env_event_stream_spark.storage.parquet_read import read_rows, to_rows, visible_files
 from env_event_stream_spark.storage.rewrite import drop_rows, has_parquet, recover, replace_dir
 
 DLQ_SCHEMA = T.StructType(
@@ -132,11 +132,11 @@ class ParquetDeadLetterQueue:
         ``(timestamp, attempts)`` version), or None. Read on the driver
         with the id filter pushed down, no Spark job; the Row equals
         what ``collect()`` returns."""
-        versions = read_sorted(
+        latest = read_rows(
             DLQ_SCHEMA, visible_files(self.path), pc.field("event", "id") == event_id,
-            [("timestamp", "descending"), ("attempts", "descending")],
+            [("timestamp", "descending"), ("attempts", "descending")], k=1,
         )
-        return to_rows(DLQ_SCHEMA, versions.slice(0, 1))[0] if versions.num_rows else None
+        return to_rows(DLQ_SCHEMA, latest)[0] if latest.num_rows else None
 
     def retry_event(self, event_id: str, handler: Callable[[Row], Any]) -> bool:
         """Re-deliver; success removes the entry. The reference's

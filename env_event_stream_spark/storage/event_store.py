@@ -59,7 +59,6 @@ from typing import Any
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -69,9 +68,7 @@ from env_event_stream_spark.storage.parquet_append import append_rows, partition
 from env_event_stream_spark.storage.parquet_read import (
     FileStats,
     file_stats,
-    read_keys,
-    read_sorted,
-    read_top_k,
+    read_rows,
     to_rows,
     visible_files,
 )
@@ -280,9 +277,8 @@ class ParquetEventStore:
             if nulls:
                 where |= seq.is_null()
             if event_types is not None:
-                wanted = pa.array([t for t in event_types if t is not None], pa.string())
-                where &= pc.field("type").isin(wanted)
-            rows = read_sorted(_SEQ_SCHEMA, paths, where, [(SEQ, "ascending")]).drop_columns(SEQ)
+                where &= _type_in(event_types)
+            rows = read_rows(_SEQ_SCHEMA, paths, where, [(SEQ, "ascending")]).drop_columns(SEQ)
             rows = rows.set_column(rows.schema.get_field_index("topic"), "topic",
                                    pa.array([topic] * rows.num_rows, pa.string()))
             return self.spark.createDataFrame(rows, _SCAN_SCHEMA).coalesce(1)
@@ -310,10 +306,9 @@ class ParquetEventStore:
                 n += f.rows - f.seq_nulls
                 continue
             try:
-                values = pq.read_table(f.path, columns=[SEQ]).column(0)
+                n += read_rows(_SEQ_ONLY, [f.path], pc.field(SEQ) > after).num_rows
             except FileNotFoundError:
                 continue  # removed since it was listed
-            n += pc.sum(pc.greater(values, after).cast(pa.int64())).as_py() or 0
         return n
 
     def save_events(self, events: Sequence[Row] | DataFrame) -> int:
@@ -377,8 +372,8 @@ class ParquetEventStore:
 
         A bounded read (``limit > 0``) ends on the driver with at most
         ``limit`` rows, so it is read there: the partition's files are
-        scanned by ``read_top_k`` with the filters pushed down (files
-        whose footer range misses the window are skipped), and the top
+        scanned by ``read_rows`` with the filters pushed down (files
+        whose ``FileStats`` range misses the window are not read), and the top
         rows come back as a local DataFrame, which ``collect()`` and
         ``take()`` answer without a Spark job, or with ``rows`` as a
         list of Rows built on the driver (``to_rows``), with no JVM
@@ -395,16 +390,19 @@ class ParquetEventStore:
             )
             return df.toLocalIterator() if rows else df
         ts, utc = pc.field("timestamp"), pa.timestamp("us", "UTC")
-        where = pc.scalar(True)
+        files, where = self.files(topic), pc.scalar(True)
         if from_ts is not None:
-            where &= ts >= pa.scalar(_micros(self.spark, from_ts), utc)
+            lo = _micros(self.spark, from_ts)
+            where &= ts >= pa.scalar(lo, utc)
+            files = [f for f in files if lo is not None and f.hi is not None and f.hi >= lo]
         if to_ts is not None:
-            where &= ts <= pa.scalar(_micros(self.spark, to_ts), utc)
+            hi = _micros(self.spark, to_ts)
+            where &= ts <= pa.scalar(hi, utc)
+            files = [f for f in files if hi is not None and f.lo is not None and f.lo <= hi]
         if event_types is not None:
-            # a NULL in Spark's IN-list matches no row
-            wanted = pa.array([t for t in event_types if t is not None], pa.string())
-            where &= pc.field("type").isin(wanted)
-        top = read_top_k(EVENT_SCHEMA, self._part_dir(topic), where, ["timestamp", "id"], limit)
+            where &= _type_in(event_types)
+        top = read_rows(EVENT_SCHEMA, [f.path for f in files], where,
+                        [("timestamp", "ascending"), ("id", "ascending")], limit)
         top = top.set_column(top.schema.get_field_index("topic"), "topic",
                              pa.array([topic] * top.num_rows, pa.string()))
         return to_rows(_SCAN_SCHEMA, top) if rows else self.spark.createDataFrame(top, _SCAN_SCHEMA)
@@ -477,7 +475,7 @@ class ParquetEventStore:
             if f.hi < cut:
                 doomed.append(f)
                 continue
-            older = _count_older(read_keys(f.path), cut, before_id)
+            older = read_rows(_KEYS, [f.path], _older(cut, before_id)).num_rows
             if older == f.rows:
                 doomed.append(f)
             elif older:  # the cut falls inside this file
@@ -509,17 +507,17 @@ class ParquetEventStore:
         # at least ``keep`` rows have ts >= lo; fewer than ``keep`` have ts > hi
         lo, hi = _kth_bound(files, "lo", keep), _kth_bound(files, "hi", keep)
         newer = sum(f.rows for f in files if f.lo > hi)
-        keys = pa.concat_tables(read_keys(f.path) for f in files if f.lo <= hi and f.hi >= lo)
-        order = keys.sort_by([("timestamp", "descending"), ("id", "descending")])
-        row = order.slice(keep - newer - 1, 1).to_pylist()[0]
-        return _EPOCH + _dt.timedelta(microseconds=row["timestamp"]), row["id"]
+        keys = read_rows(_KEYS, [f.path for f in files if f.lo <= hi and f.hi >= lo],
+                         order=[("timestamp", "descending"), ("id", "descending")])
+        row = keys.slice(keep - newer - 1, 1).to_pylist()[0]
+        return row["timestamp"], row["id"]
 
-
-_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
 
 # EVENT_SCHEMA as a parquet scan reports it: every field nullable
 _SCAN_SCHEMA = T.StructType([T.StructField(f.name, f.dataType) for f in EVENT_SCHEMA])
 _SEQ_SCHEMA = T.StructType([*EVENT_SCHEMA, T.StructField(SEQ, T.LongType())])
+_SEQ_ONLY = T.StructType([T.StructField(SEQ, T.LongType())])
+_KEYS = T.StructType([EVENT_SCHEMA["timestamp"], EVENT_SCHEMA["id"]])
 
 # Head markers live in one hidden dir at the store root, outside the
 # topic dirs that ``replace_dir`` swaps whole; one file per topic dir.
@@ -575,12 +573,17 @@ def _kth_bound(files: list[FileStats], attr: str, k: int) -> int:
             return getattr(f, attr)
 
 
-def _count_older(keys: pa.Table, cut: int, before_id: str | None) -> int:
-    """Rows of ``keys`` before ``(cut, before_id)``, NULL kept, as the
-    Spark predicate in ``delete_events`` counts them."""
-    ts = keys.column("timestamp")
-    older = pc.less(ts, cut)
+def _type_in(event_types: Sequence[str]) -> pc.Expression:
+    """``type IN event_types`` as Spark reads the IN-list: a NULL in
+    it matches no row."""
+    return pc.field("type").isin(pa.array([t for t in event_types if t is not None], pa.string()))
+
+
+def _older(cut: int, before_id: str | None) -> pc.Expression:
+    """Rows before ``(cut, before_id)``, as the Spark predicate in
+    ``delete_events`` takes them (a NULL keeps the row)."""
+    ts, at = pc.field("timestamp"), pa.scalar(cut, pa.timestamp("us", "UTC"))
+    older = ts < at
     if before_id is not None:
-        tie = pc.and_kleene(pc.equal(ts, cut), pc.less(keys.column("id"), before_id))
-        older = pc.or_kleene(older, tie)
-    return pc.sum(older.fill_null(False).cast(pa.int64())).as_py() or 0
+        older |= (ts == at) & (pc.field("id") < before_id)
+    return older

@@ -12,15 +12,14 @@ pyarrow, without a Spark job, and read only what they need:
   driver or Spark wrote them (``session.get_spark`` makes Spark write
   INT64). A column without usable statistics (INT96 timestamps in a
   legacy or foreign file, or a file written without statistics) is
-  read instead; ``read_keys`` reads a file's ``timestamp`` and ``id``.
-- ``read_top_k`` gives the first ``k`` rows matching a pushed-down
-  filter in an ORDER BY's order, streamed batch by batch, so the
-  driver holds ``k`` rows plus the scanner's read-ahead batches,
-  never the whole scan (Spark's ``TakeOrderedAndProject`` merges each
-  partition's top ``k`` on the driver too). pyarrow's dataset skips
-  the row groups whose statistics rule the filter out.
-- ``read_sorted`` reads the rows of some files matching a pushed-down
-  filter, sorted.
+  read instead.
+- ``read_rows`` is the one row reader: the rows of some files
+  matching a pushed-down filter (pyarrow's dataset skips the row
+  groups whose statistics rule it out), sorted, or only the first
+  ``k`` of them, streamed batch by batch, so the driver holds ``k``
+  rows plus the scanner's read-ahead batches, never the whole scan
+  (Spark's ``TakeOrderedAndProject`` merges each partition's top
+  ``k`` on the driver too).
 - ``to_rows`` turns such a table into the Rows ``collect()`` returns
   (local naive datetimes, maps as dicts, nested structs as Rows),
   column by column, with no JVM round trip.
@@ -34,6 +33,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Sequence
 from typing import Any, NamedTuple
 
 import pyarrow as pa
@@ -45,8 +45,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _create_row
 
 __all__ = [
-    "FileStats", "file_stats", "read_keys", "read_sorted", "read_top_k", "to_rows",
-    "visible_files",
+    "FileStats", "file_stats", "read_rows", "to_rows", "visible_files",
 ]
 
 _INT96_AS_US = {"coerce_int96_timestamp_unit": "us"}
@@ -116,13 +115,6 @@ def _range(pf: pq.ParquetFile, column: str) -> tuple[int | None, int | None, int
     return pc.min(values).as_py(), pc.max(values).as_py(), values.null_count
 
 
-def read_keys(path: str) -> pa.Table:
-    """The ``(timestamp, id)`` columns of one file, timestamp in μs."""
-    with pq.ParquetFile(path, **_INT96_AS_US) as pf:
-        table = pf.read(columns=["timestamp", "id"])
-    return pa.table({"timestamp": _int64(table.column("timestamp")), "id": table.column("id")})
-
-
 def _int64(values: pa.ChunkedArray) -> pa.ChunkedArray:
     """``values`` as int64, a timestamp in μs."""
     if pa.types.is_timestamp(values.type):
@@ -130,37 +122,36 @@ def _int64(values: pa.ChunkedArray) -> pa.ChunkedArray:
     return values.cast(pa.int64())
 
 
-def read_sorted(
-    schema: T.StructType, files: list[str], where: pc.Expression, order: list[tuple[str, str]],
+def read_rows(
+    schema: T.StructType,
+    files: list[str],
+    where: pc.Expression | None = None,
+    order: Sequence[tuple[str, str]] = (),
+    k: int | None = None,
 ) -> pa.Table:
-    """Rows of ``files`` matching ``where``, sorted by the ``(column,
-    "ascending" | "descending")`` keys of ``order`` with NULLs first,
-    every field nullable and every timestamp UTC μs (``read_top_k``'s
-    shape). A listed file that is gone raises FileNotFoundError."""
-    table = ds.dataset(files, format=_FORMAT, schema=_relaxed(schema)).to_table(filter=where)
-    return table.sort_by(order, null_placement="at_start")
-
-
-def read_top_k(
-    schema: T.StructType, directory: str, where: pc.Expression, order: list[str], k: int,
-) -> pa.Table:
-    """The first ``k`` rows under ``directory`` matching ``where`` in
-    ``order``, ascending with NULLs first (an ORDER BY's defaults;
-    strings compare as bytes, as Spark compares them), every field
-    nullable and every timestamp UTC μs, as ``where`` must compare
-    them. A running top ``k`` is merged with each record batch as it
-    is read, so memory is ``k`` rows plus the read-ahead batches,
-    however many rows match."""
+    """The rows of ``files`` matching ``where``, sorted by the
+    ``(column, "ascending" | "descending")`` keys of ``order`` with
+    NULLs first (strings compare as bytes, as Spark compares them);
+    with ``k``, only the first ``k``. Only ``schema``'s fields are
+    read, every one nullable and every timestamp UTC μs, as ``where``
+    must compare them. With ``k`` a running top ``k`` is merged with
+    each record batch as it is read, so memory is ``k`` rows plus the
+    read-ahead batches, however many rows match. A listed file that is
+    gone raises FileNotFoundError."""
     relaxed = _relaxed(schema)
-    top = relaxed.empty_table()
-    files = visible_files(directory)
     if not files:
-        return top
-    keys = [(c, "ascending") for c in order]
-    for batch in ds.dataset(files, format=_FORMAT, schema=relaxed).to_batches(filter=where):
+        return relaxed.empty_table()
+    scan = ds.dataset(files, format=_FORMAT, schema=relaxed)
+
+    def sort(table: pa.Table) -> pa.Table:
+        return table.sort_by(list(order), null_placement="at_start") if order else table
+
+    if k is None:
+        return sort(scan.to_table(filter=where))
+    top = relaxed.empty_table()
+    for batch in scan.to_batches(filter=where):
         if batch.num_rows:
-            merged = pa.concat_tables([top, pa.Table.from_batches([batch])])
-            top = merged.sort_by(keys, null_placement="at_start").slice(0, k)
+            top = sort(pa.concat_tables([top, pa.Table.from_batches([batch])])).slice(0, k)
     return top
 
 

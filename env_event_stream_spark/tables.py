@@ -29,7 +29,6 @@ __all__ = [
     "TABLE_NAMES",
     "load_table",
     "load_events",
-    "register_views",
     "prepare_session",
     "spread_small_scan",
     "small_model_frame",
@@ -189,14 +188,3 @@ def load_events(
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every synthetic table as a temp view (idempotent) so
-    operators can be written in either DataFrame or SQL form."""
-    prepare_session(spark)
-    out: dict[str, DataFrame] = {}
-    for name in TABLE_NAMES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -83,12 +83,14 @@ def test_save_rehydrate_roundtrip(repo):
     assert c.get_version() == 3
 
 
-def test_exists_and_missing(repo):
+def test_exists_and_missing(spark, repo, monkeypatch):
     assert repo.get_by_id("ghost") is None
-    assert not repo.exists("ghost")
     a = Account("a2")
     a.deposit(1.0)
     repo.save(a)
+    # the probe reads its one row on the driver and builds no DataFrame
+    monkeypatch.setattr(spark, "createDataFrame", lambda *args, **kwargs: pytest.fail("DataFrame built"))
+    assert not repo.exists("ghost")
     assert repo.exists("a2")
 
 

@@ -125,13 +125,13 @@ def test_max_events_cutoff_bounded_collect(spark, monkeypatch):
                        event_id=f"e-{i:03d}")
         )
     read = []
-    orig = event_store.read_keys
+    orig = event_store.read_rows
 
-    def spying(path):
-        read.append(path)
-        return orig(path)
+    def spying(schema, files, *args, **kwargs):
+        read.extend(files)
+        return orig(schema, files, *args, **kwargs)
 
-    monkeypatch.setattr(event_store, "read_keys", spying)
+    monkeypatch.setattr(event_store, "read_rows", spying)
     with JobBudget(spark) as budget:
         assert broker.apply_retention("big") == 45
         assert budget.jobs() == 0

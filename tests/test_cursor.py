@@ -191,8 +191,8 @@ def test_large_range_takes_spark_path(spark, pbroker, tmp_path, monkeypatch):
     driver = []
     _subscribe(b, "t", tmp_path / "c1", driver)
     reads = []
-    read_sorted = event_store.read_sorted
-    monkeypatch.setattr(event_store, "read_sorted", lambda *a: reads.append(a) or read_sorted(*a))
+    read_rows = event_store.read_rows
+    monkeypatch.setattr(event_store, "read_rows", lambda *a: reads.append(a) or read_rows(*a))
     key = "spark.sql.execution.arrow.localRelationThreshold"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "1")

@@ -1,7 +1,10 @@
 """Parquet footers under ``storage/`` are parsed in one place,
-``parquet_read.file_stats``, whose answers the event store keeps per
-file. A second parser would read footers that index already holds, so
-a footer parse anywhere else under ``storage/`` fails here."""
+``parquet_read``: ``file_stats`` reads each file's footer once, and the
+event store keeps its answers per file; ``read_rows`` reads rows. A
+second parser would read footers that index already holds, and every
+open of a file for reading parses its footer, so ``read_metadata`` or a
+pyarrow parquet reader called anywhere else under ``storage/`` fails
+here."""
 
 from __future__ import annotations
 
@@ -12,34 +15,21 @@ import env_event_stream_spark
 
 STORAGE = pathlib.Path(env_event_stream_spark.__file__).parent / "storage"
 
-
-def _name(node: ast.AST) -> str | None:
-    return getattr(node, "attr", getattr(node, "id", None))
+# pyarrow's footer readers and its ways to open parquet for reading
+_READERS = {"read_metadata", "read_schema", "ParquetFile", "ParquetDataset", "read_table",
+            "read_pandas", "dataset"}
 
 
 def _footer_parses(tree: ast.AST):
-    """Yield every footer parse in ``tree``: a use of ``read_metadata``,
-    and ``.metadata`` of ``ParquetFile(...)`` or of a name bound to one
-    (by ``=`` or ``with ... as``)."""
-    files = set()
+    """Yield every use in ``tree`` of a name in ``_READERS``, called
+    (``pq.read_table(...)``) or passed on (``map(read_metadata, ...)``)."""
     for node in ast.walk(tree):
-        if isinstance(node, ast.Assign) and _is_parquet_file(node.value):
-            files.update(t.id for t in node.targets if isinstance(t, ast.Name))
-        elif isinstance(node, ast.withitem) and _is_parquet_file(node.context_expr):
-            if isinstance(node.optional_vars, ast.Name):
-                files.add(node.optional_vars.id)
-    for node in ast.walk(tree):
-        if isinstance(node, (ast.Name, ast.Attribute)) and _name(node) == "read_metadata":
-            yield node
-        elif isinstance(node, ast.Attribute) and node.attr == "metadata" and (
-            _is_parquet_file(node.value)
-            or (isinstance(node.value, ast.Name) and node.value.id in files)
-        ):
+        if isinstance(node, (ast.Name, ast.Attribute)) and _name(node) in _READERS:
             yield node
 
 
-def _is_parquet_file(node: ast.AST) -> bool:
-    return isinstance(node, ast.Call) and _name(node.func) == "ParquetFile"
+def _name(node: ast.AST) -> str | None:
+    return getattr(node, "attr", getattr(node, "id", None))
 
 
 def test_only_parquet_read_parses_footers():
@@ -50,17 +40,16 @@ def test_only_parquet_read_parses_footers():
             own = len(parses)
         else:
             found += [f"{path.relative_to(STORAGE)}:{n.lineno}" for n in parses]
-    assert found == [], f"footer parsed outside parquet_read.file_stats: {found}"
-    assert own >= 1  # the scanner sees the one parser there is
+    assert found == [], f"parquet read outside parquet_read: {found}"
+    assert own >= 2  # file_stats' ParquetFile and read_rows' dataset
 
 
 def test_scanner_sees_every_parse_form():
     src = (
         "import pyarrow.parquet as pq\nfrom pyarrow.parquet import ParquetFile, read_metadata\n"
         "pq.read_metadata('a'); read_metadata('b'); pq.ParquetFile('c').metadata\n"
-        "f = ParquetFile('d')\nf.metadata\n"
-        "with pq.ParquetFile('e') as g:\n    g.metadata\n"
-        "event.metadata; row['metadata']\n"
+        "f = ParquetFile('d')\npq.read_table('e'); ds.dataset(['f']); map(read_metadata, g)\n"
+        "event.metadata; row['metadata']; pq.write_table(t, 'h'); spark.read.parquet('i')\n"
     )
     got = sorted(n.lineno for n in _footer_parses(ast.parse(src)))
-    assert got == [3, 3, 3, 5, 7]
+    assert got == [3, 3, 3, 4, 5, 5, 5]

@@ -169,9 +169,8 @@ def counts() -> int:
                     f"NEXT.md: says '{m.group(0)}', bench.py HEADLINE has "
                     f"{len(_bench.HEADLINE)}"
                 )
-        # every HEADLINE name must resolve to a registered query:
-        # bench.py skips unknown names SILENTLY (a typo would shrink
-        # the suite and read as a speedup in cross-round deltas)
+        # every HEADLINE name must resolve to a registered query
+        # (bench.py would time a typo as a failure in every run)
         ghosts = [n for n in _bench.HEADLINE if n not in QUERIES]
         if ghosts:
             bad.append(f"bench.py HEADLINE names not in catalog: {ghosts}")
@@ -180,19 +179,6 @@ def counts() -> int:
         )
         if dupes:
             bad.append(f"bench.py HEADLINE duplicate names: {dupes}")
-        # ROTATING must be a duplicate-free subset of HEADLINE: a
-        # typo'd name would silently never be skipped (no rotation
-        # saving) and never carry, defeating the protocol
-        rot_ghosts = [
-            n for n in _bench.ROTATING if n not in _bench.HEADLINE
-        ]
-        if rot_ghosts:
-            bad.append(f"bench.py ROTATING names not in HEADLINE: {rot_ghosts}")
-        rot_dupes = sorted(
-            {n for n in _bench.ROTATING if _bench.ROTATING.count(n) > 1}
-        )
-        if rot_dupes:
-            bad.append(f"bench.py ROTATING duplicate names: {rot_dupes}")
     except Exception as exc:  # a broken bench.py IS drift — never green
         bad.append(f"headline gate could not run: {exc!r}")
 
